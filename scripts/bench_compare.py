@@ -1,18 +1,38 @@
 #!/usr/bin/env python3
 """Compare two graft.Bench JSON outputs (e.g. across rounds).
 
-Usage: python3 scripts/bench_compare.py BENCH_old.json BENCH_new.json
-Accepts raw files containing the one-line JSON anywhere in them.
+Usage: python3 scripts/bench_compare.py BENCH_old BENCH_new
+
+Each argument is a raw capture of Bench's stdout (sbt's "[info] "
+prefixes are fine) or its target/bench_summary.json. Bench prints a
+compact "total_summary" line before and after the full "total" line;
+only the full line carries the per-query map, so that is the one read.
 """
 import json, re, sys
 
+RECORD = re.compile(r'\{"metric".*\}')
+
 
 def load(path):
-    text = open(path).read()
-    m = re.search(r'\{"metric".*\}', text)
-    if not m:
-        raise SystemExit(f"no bench JSON found in {path}")
-    return json.loads(m.group(0))
+    metrics = []
+    with open(path) as f:
+        for line in f:
+            m = RECORD.search(line)
+            if not m:
+                continue
+            try:
+                rec = json.loads(m.group(0))
+            except json.JSONDecodeError:
+                continue
+            if rec.get("metric") == "total":
+                return rec
+            metrics.append(rec.get("metric"))
+    if metrics:
+        raise SystemExit(
+            f"{path}: only {sorted(set(metrics))} lines, no full "
+            '{"metric":"total"} line with the per-query map (was the capture '
+            "truncated? target/bench_summary.json has the full line)")
+    raise SystemExit(f"{path}: no bench JSON found")
 
 
 def main(old_path, new_path):
@@ -36,4 +56,6 @@ def main(old_path, new_path):
 
 
 if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        raise SystemExit("usage: python3 scripts/bench_compare.py BENCH_old BENCH_new")
     main(sys.argv[1], sys.argv[2])

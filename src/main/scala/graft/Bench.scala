@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
   *
@@ -55,30 +53,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // a crashed run must not leave the PREVIOUS run's summary for the
     // stdout-fallback parser to misattribute — absent reads loud,
     // stale reads silent
     new java.io.File("target/bench_summary.json").delete()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // 64 MB broadcast threshold (default 10 MB): the default dates
-      // to 1 GB-executor deployments; any executor sized for modern
-      // batch work holds a 64 MB hash relation without pressure, and
-      // the mid-size dimension/edge frames here (strong-tie edges,
-      // posting sizes, split labels) then broadcast instead of
-      // shuffling both sides. Parameterized via env so the driver's
-      // low-core leg and a production deployment can size it to their
-      // own executors; A/B evidence in OPTIMIZATION_r13.md.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench")
 
     // optional args = run only these queries (local triage; the
     // driver's contract invocation passes no args = full suite)
@@ -118,9 +97,7 @@ object Bench {
     warmed.zipWithIndex.foreach { case ((_, fn), i) =>
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graftbridge.CheckpointBridge
-        .sweepLocalCheckpoints(spark)
+      Harness.release(spark)
       if ((i + 1) % 25 == 0) reclaim()
     }
     reclaim()
@@ -128,19 +105,10 @@ object Bench {
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): (Double, Boolean) = {
         val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
+        val ok = Harness.attempt("bench", name)(fn(spark, sfDir))(
+          _.write.format("noop").mode("overwrite").save())
         val dt = (System.nanoTime() - t0) / 1e9
-        // outside the timed window: DataFrame caches AND the fixpoint
-        // loops' final-round checkpoint blocks (clearCache never
-        // touches raw RDD blocks — r13 advice)
-        spark.catalog.clearCache()
-        org.apache.spark.sql.graftbridge.CheckpointBridge
-          .sweepLocalCheckpoints(spark)
+        Harness.release(spark) // outside the timed window
         (dt, ok)
       }
       val (t1, ok1) = once()

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // harmless for TIMESTAMP(MICROS) testdata vintages; lets
-      // TIMESTAMP(NANOS) vintages (which Spark 4 otherwise rejects)
-      // read as long, converted in ops.EventQueries.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror Bench's broadcast threshold (same env override) so the
-      // oracle verifies the EXACT physical plans the bench times —
-      // the r13 verdict's hygiene gap
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (comma-separated names); the driver never
     // sets it, so its runs always dump the full surface
@@ -31,17 +13,9 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // operators persist() derived frames internally; don't let them
-      // accumulate across the suite — nor the fixpoint loops' final-
-      // round checkpoint blocks, which clearCache never touches
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graftbridge.CheckpointBridge
-        .sweepLocalCheckpoints(spark)
+      Harness.attempt("verify", name)(fn(spark, sfDir))(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      Harness.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

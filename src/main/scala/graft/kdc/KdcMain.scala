@@ -16,6 +16,11 @@ import org.apache.spark.sql.SparkSession
   *                [--aligned | --v2] [--recursive] [--scope=k=v[,k=v…]]
   *                [--report=R]
   *
+  * Runs on `local[N]` with N = `SPARK_GRAFT_CPUS`, default all available
+  * cores (`SPARK_MASTER` overrides the master), in the
+  * [[graft.Harness]] session; inside an existing session it runs there,
+  * leaving that session's conf as it is.
+  *
   * `--recursive` (with `--v2`) descends nested fleet layouts
   * (host=…/day=… trees); without it a nested dir fails loudly, like
   * Hadoop input formats.
@@ -122,22 +127,14 @@ object KdcMain {
         "[--scope=k=v[,k=v…]] [--report=user|service|errors|user-enctypes|service-enctypes]\n" +
         "note: under --v2 with a realm the counters count IN-SCOPE sessions only " +
         "(the realm filter pushes into the parse scan); the RDD paths keep the " +
-        "reference's all-records counter semantics")
+        "reference's all-records counter semantics\n" + graft.Harness.usage)
     val Array(in, out) = positional.take(2)
     val realm = positional.lift(2)
     // only stop the session on exit if this invocation created it —
-    // callers embedding main() in an existing session keep theirs
-    val preExisting = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName(s"kdc-$report")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // callers embedding main() in an existing session keep theirs,
+    // conf included
+    val preExisting = graft.Harness.existing.isDefined
+    val spark = graft.Harness.session(s"kdc-$report")
     val result = buildReport(spark, in, realm, report,
       useV2 = flags.contains("--v2"), aligned = aligned,
       recursive = flags.contains("--recursive"), scope = scope)

@@ -120,7 +120,7 @@ object KdcParseQueries {
     * that a later run would glob as an extra log (which would double
     * every fixture count); stale temps from older versions are also
     * swept on entry. */
-  private[kdc] def fixtureDir(): String = {
+  private[graft] def fixtureDir(): String = {
     val dir = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_kdc_fixture")
     java.nio.file.Files.createDirectories(dir)

@@ -182,11 +182,12 @@ object Dedup {
     * CACHE LIFETIME CONTRACT (applies to every mid-plan persist in
     * graft.ops): the cached block backs the RETURNED lazy plan, so
     * the operator cannot unpersist it before the caller's action.
-    * The serial driver sessions (Verify/Bench/PlanProbe) call
-    * spark.catalog.clearCache() between queries, which reclaims
-    * these; a caller embedding an operator in a long-lived session
-    * owns the same cleanup (clearCache, or unpersist after its
-    * consuming action). Composed queries (multi-signal) accumulate
+    * The serial entry points (Verify/Bench/PlanSnap) run
+    * graft.Harness.release (spark.catalog.clearCache() plus the
+    * checkpoint sweep) between queries, which reclaims these; a
+    * caller embedding an operator in a long-lived session owns the
+    * same cleanup (clearCache, or unpersist after its consuming
+    * action). Composed queries (multi-signal) accumulate
     * at most their generators' caches within one query lifetime. */
   private def boundedSharedCountsPost(posting: DataFrame, maxBucket: Int): DataFrame = {
     val lists = posting.groupBy(col("g"))

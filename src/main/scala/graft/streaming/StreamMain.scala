@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** CLI entry: continuously tail a directory of raw KDC logs and emit
@@ -8,22 +7,19 @@ import org.apache.spark.sql.streaming.Trigger
   * Structured Streaming twin of [[graft.kdc.KdcMain]].
   *
   * Usage: StreamMain <log dir> [realm] [runSeconds (default: drain once and exit)]
+  *
+  * Runs on `local[N]` with N = `SPARK_GRAFT_CPUS`, default all available
+  * cores (`SPARK_MASTER` overrides the master), in the
+  * [[graft.Harness]] session.
   */
 object StreamMain {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: StreamMain <logdir> [realm] [runSeconds]")
+    require(args.nonEmpty,
+      "usage: StreamMain <logdir> [realm] [runSeconds]\n" + graft.Harness.usage)
     val logDir = args(0)
     val realm = args.lift(1).filter(_.nonEmpty)
     val runSeconds = args.lift(2).flatMap(_.toIntOption)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("kdc-user-time-stream")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("kdc-user-time-stream")
     val q = StreamingPipeline.streamingUserAuthCounts(spark, logDir, realm)
       .writeStream.outputMode("complete")
       .format("console").option("truncate", "false")

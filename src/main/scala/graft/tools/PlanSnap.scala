@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query plan snapshots for the optimization rounds: writes
   * `plans/<round>/<query>_<tag>.txt` with `explain("formatted")` for
@@ -17,16 +16,8 @@ object PlanSnap {
     val (round, tag, names) = (args(0), args(1), args.drop(2).toSeq)
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's session so the committed plans are the benched
-      // plans (env-parameterized identically)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "64m"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // Bench's session, so the committed plans are the benched plans
+    val spark = graft.Harness.session("graft-plansnap")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Files.createDirectories(Paths.get(s"plans/$round"))
@@ -36,7 +27,7 @@ object PlanSnap {
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"plans/$round/${name}_$tag.txt"), plan)
       println(s"plans/$round/${name}_$tag.txt written")
-      spark.catalog.clearCache()
+      graft.Harness.release(spark)
     }
     graft.ops.Graph.dropCachedLayouts(spark)
     spark.stop()

@@ -11,13 +11,7 @@ import org.apache.spark.sql.functions._
   * recorded in PLAN_NOTES.md. */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-scaleprobe")
     val src = "/root/testdata/sf0.1"
     val big = "target/scratch/sf1x"
 

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Executable pins for the plan properties PLAN_NOTES.md/PLANS.md
-  * claim — a regression (lost pushdown, global sort sneaking in, a
+/** Executable pins for the plan properties PLAN_NOTES.md and the
+  * `plans/` snapshots (graft.tools.PlanSnap) claim — a regression (lost pushdown, global sort sneaking in, a
   * broadcast turning into a shuffle) fails the suite instead of only
   * rotting the committed evidence. */
 class PlanPinsSpec extends AnyFunSuite {
