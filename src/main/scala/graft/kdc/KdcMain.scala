@@ -13,8 +13,13 @@ import org.apache.spark.sql.SparkSession
   * histogram).
   *
   * Usage: KdcMain <input logs (file/dir/glob)> <output dir> [realm]
-  *                [--aligned | --v2] [--recursive] [--scope=k=v[,k=v…]]
-  *                [--report=R]
+  *                [--v2] [--recursive] [--scope=k=v[,k=v…]] [--report=R]
+  *
+  * Arguments are checked before any session or output exists: an
+  * unknown flag, `--recursive` or `--scope` without `--v2`, or an
+  * unknown report fails with `IllegalArgumentException` and the usage
+  * text. A session that `main` created is stopped however the run
+  * ends.
   *
   * Runs on `local[N]` with N = `SPARK_GRAFT_CPUS`, default all available
   * cores (`SPARK_MASTER` overrides the master), in the
@@ -41,20 +46,17 @@ import org.apache.spark.sql.SparkSession
   *
   * `--report=R` with R ∈ user (default) | service | errors |
   * user-enctypes | service-enctypes.
-  * `--aligned` selects the zero-shuffle split-aligned source
-  * ([[KdcSource.recordsAligned]]) — best for few huge uncompressed
-  * files; default is shuffle-by-file ([[KdcSource.records]]) —
-  * simplest for fleets, and the path that handles splittable bzip2.
-  * `--v2` reads through the DataSourceV2 table
-  * ([[graft.kdc.v2.KdcLogTableProvider]]): same split alignment as
-  * `--aligned` (incl. splittable bzip2), plus the realm argument's
-  * filter PUSHES into the parse scan (foreign-realm sessions are never
-  * materialized) — the 100 TB posture for scoped reports. To make
-  * that pushdown real the realm filter is applied BEFORE the counters
-  * observe node (Catalyst does not push predicates through
-  * CollectMetrics), so under `--v2` with a realm the counters count
-  * IN-SCOPE sessions only; the RDD paths keep the reference's
-  * all-records counter semantics.
+  * Both sources parse with the same split-aligned session reader
+  * ([[KdcSessionInputFormat]], incl. splittable bzip2). The default is
+  * the Dataset reader ([[KdcSource.recordsAligned]]); `--v2` reads
+  * through the DataSourceV2 table ([[graft.kdc.v2.KdcLogTableProvider]]),
+  * where the realm argument's filter PUSHES into the parse scan
+  * (foreign-realm sessions are never materialized) — the 100 TB
+  * posture for scoped reports. To make that pushdown real the realm
+  * filter is applied BEFORE the counters observe node (Catalyst does
+  * not push predicates through CollectMetrics), so under `--v2` with a
+  * realm the counters count IN-SCOPE sessions only; the default source
+  * keeps the reference's all-records counter semantics.
   */
 object KdcMain {
 
@@ -64,7 +66,11 @@ object KdcMain {
     * user reports, service realm for service reports, nothing for the
     * error histogram — matching [[KdcQueries.successfulAuths]]/
     * [[KdcQueries.serviceUses]]; the report functions re-apply the
-    * same predicate (idempotent) for the non-v2 sources. */
+    * same predicate (idempotent) for the default source.
+    *
+    * `aligned` no longer selects anything: without `useV2` the source
+    * is always [[KdcSource.recordsAligned]]. The parameter stays so
+    * that callers which name it keep compiling. */
   def buildReport(spark: SparkSession, in: String, realm: Option[String],
                   report: String, useV2: Boolean, aligned: Boolean,
                   recursive: Boolean = false,
@@ -73,6 +79,7 @@ object KdcMain {
     import org.apache.spark.sql.functions.col
     require(scope.isEmpty || useV2,
       "--scope filters partition-path columns, which only the --v2 fleet layout exposes")
+    require(!recursive || useV2, "--recursive descends nested layouts only under --v2")
     val realmPred = realm.flatMap(r => report match {
       case "user" | "user-enctypes" => Some(col("crealm") === r)
       case "service" | "service-enctypes" => Some(col("srealm") === r)
@@ -90,8 +97,7 @@ object KdcMain {
         }
         realmPred.fold(scoped)(scoped.filter)
           .as(org.apache.spark.sql.Encoders.product[KdcLogRecord])
-      } else if (aligned) KdcSource.recordsAligned(spark, in)
-      else KdcSource.records(spark, in)
+      } else KdcSource.recordsAligned(spark, in)
     val recs = KdcQueries.withCounters(source)
     report match {
       case "user" =>
@@ -113,21 +119,33 @@ object KdcMain {
     }
   }
 
+  private val Reports =
+    Seq("user", "service", "errors", "user-enctypes", "service-enctypes")
+
+  private val Usage =
+    "usage: KdcMain <input> <outdir> [realm] [--v2] [--recursive] " +
+      s"[--scope=k=v[,k=v…]] [--report=${Reports.mkString("|")}]\n" +
+      "note: under --v2 with a realm the counters count IN-SCOPE sessions only " +
+      "(the realm filter pushes into the parse scan); the default source keeps " +
+      "the reference's all-records counter semantics\n" + graft.Harness.usage
+
   def main(args: Array[String]): Unit = {
     val (flags, positional) = args.partition(_.startsWith("--"))
-    val aligned = flags.contains("--aligned")
-    val report = flags.collectFirst {
-      case f if f.startsWith("--report=") => f.stripPrefix("--report=")
-    }.getOrElse("user")
-    val scope: Map[String, String] = flags.collectFirst {
-      case f if f.startsWith("--scope=") => f.stripPrefix("--scope=")
-    }.map(graft.kdc.v2.KdcFileLayout.parseScope).getOrElse(Map.empty)
-    require(positional.length >= 2,
-      "usage: KdcMain <input> <outdir> [realm] [--aligned | --v2] [--recursive] " +
-        "[--scope=k=v[,k=v…]] [--report=user|service|errors|user-enctypes|service-enctypes]\n" +
-        "note: under --v2 with a realm the counters count IN-SCOPE sessions only " +
-        "(the realm filter pushes into the parse scan); the RDD paths keep the " +
-        "reference's all-records counter semantics\n" + graft.Harness.usage)
+    def check(ok: Boolean, why: => String): Unit =
+      if (!ok) throw new IllegalArgumentException(s"$why\n$Usage")
+    def valueOf(prefix: String): Option[String] =
+      flags.collectFirst { case f if f.startsWith(prefix) => f.stripPrefix(prefix) }
+    flags.foreach(f => check(f == "--v2" || f == "--recursive" ||
+      f.startsWith("--report=") || f.startsWith("--scope="), s"unknown flag $f"))
+    check(positional.length >= 2, "missing <input> or <outdir>")
+    val useV2 = flags.contains("--v2")
+    val recursive = flags.contains("--recursive")
+    val report = valueOf("--report=").getOrElse("user")
+    check(Reports.contains(report), s"unknown --report=$report")
+    check(!recursive || useV2, "--recursive requires --v2")
+    val scope: Map[String, String] = valueOf("--scope=")
+      .map(graft.kdc.v2.KdcFileLayout.parseScope).getOrElse(Map.empty)
+    check(scope.isEmpty || useV2, "--scope requires --v2")
     val Array(in, out) = positional.take(2)
     val realm = positional.lift(2)
     // only stop the session on exit if this invocation created it —
@@ -135,13 +153,13 @@ object KdcMain {
     // conf included
     val preExisting = graft.Harness.existing.isDefined
     val spark = graft.Harness.session(s"kdc-$report")
-    val result = buildReport(spark, in, realm, report,
-      useV2 = flags.contains("--v2"), aligned = aligned,
-      recursive = flags.contains("--recursive"), scope = scope)
-    // TSV via the shared formatting expression (oracle-checked through
-    // kdc_parse_user_report_tsv) rather than the CSV writer — the
-    // reference's reducers emit plain join("\t") lines with no quoting
-    KdcQueries.tsvLines(result).write.mode("overwrite").text(out)
-    if (!preExisting) spark.stop()
+    try {
+      val result = buildReport(spark, in, realm, report, useV2 = useV2,
+        aligned = false, recursive = recursive, scope = scope)
+      // TSV via the shared formatting expression (oracle-checked through
+      // kdc_parse_user_report_tsv) rather than the CSV writer — the
+      // reference's reducers emit plain join("\t") lines with no quoting
+      KdcQueries.tsvLines(result).write.mode("overwrite").text(out)
+    } finally if (!preExisting) spark.stop()
   }
 }

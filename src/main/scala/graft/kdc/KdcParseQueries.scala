@@ -23,12 +23,14 @@ import graft.QueryDef
   * trailing partial session that must be dropped
   * (`KDCLogRecordReader.java:317-320`).
   *
-  * Two queries deliberately take different parse paths so BOTH sources
-  * get a driver row: `kdc_parse_user_stats`/`kdc_parse_errors` go
-  * through [[KdcSource.records]] (shuffle-by-file), while
-  * `kdc_parse_service_stats` goes through [[KdcSource.recordsAligned]]
-  * with 256-byte max splits — forcing split boundaries into the middle
-  * of sessions and lines, which the aligned input format must repair.
+  * Every row that parses sessions uses the one split-aligned session
+  * reader ([[KdcSessionInputFormat]] + [[Sessionizer.sessionize]])
+  * through one of its two entry APIs: [[KdcSource.recordsAligned]]
+  * (default splits, except `kdc_parse_service_stats`, whose 256-byte
+  * max splits force boundaries into the middle of sessions and lines,
+  * which the reader must repair) or the `kdclog` table (the `_v2` rows
+  * and `kdc_parse_service_stats_streaming`). `kdc_parse_user_stats_streaming`
+  * alone is a line-level extractor, not a session parse.
   */
 object KdcParseQueries {
 
@@ -174,10 +176,10 @@ object KdcParseQueries {
     root.toString
   }
 
-  /** README #1+#2 over the shuffle-by-file parse path. `sfDir` is
+  /** README #1+#2 over the split-aligned Dataset reader. `sfDir` is
     * unused: the input is the embedded raw-log fixture. */
   def userStats(spark: SparkSession, sfDir: String): DataFrame =
-    KdcQueries.userAuthStats(KdcSource.records(spark, fixtureDir()))
+    KdcQueries.userAuthStats(KdcSource.recordsAligned(spark, fixtureDir()))
 
   /** F6 realm scoping as a driver row: same pipeline as [[userStats]]
     * but restricted to the home realm, so the fixture's foreign-realm
@@ -185,7 +187,7 @@ object KdcParseQueries {
     * — both oracle-checked, making the parameter's effect visible to
     * the gate rather than only to specs. */
   def userStatsScoped(spark: SparkSession, sfDir: String): DataFrame =
-    KdcQueries.userAuthStats(KdcSource.records(spark, fixtureDir()),
+    KdcQueries.userAuthStats(KdcSource.recordsAligned(spark, fixtureDir()),
       realm = Some(Realm))
 
   /** README #3+#4 over the split-aligned parse path, with 256-byte max
@@ -196,7 +198,7 @@ object KdcParseQueries {
 
   /** README #6 error buckets, incl. the implicit MISSING_PREAUTH. */
   def errorStats(spark: SparkSession, sfDir: String): DataFrame =
-    KdcQueries.commonErrors(KdcSource.records(spark, fixtureDir()))
+    KdcQueries.commonErrors(KdcSource.recordsAligned(spark, fixtureDir()))
 
   /** Structured Streaming in the driver's signal: the stateless
     * preauth-success extractor + windowed per-day/user aggregation
@@ -211,15 +213,23 @@ object KdcParseQueries {
       graft.streaming.StreamingPipeline.streamingUserAuthCounts(spark, fixtureDir()),
       "kdc_stream_user_auth", "complete", Seq("day", "client"))
 
-  /** The TGS branch through the real micro-batch engine: per-file
-    * sessionization as a stateless partition fold + complete-mode
-    * service aggregation ([[graft.streaming.StreamingPipeline.streamingServiceUseStats]]),
-    * AvailableNow trigger, memory sink — the stateFUL (cross-line)
-    * counterpart of the stateless AS-success streaming row above. */
-  def serviceStatsStreaming(spark: SparkSession, sfDir: String): DataFrame =
+  /** The TGS branch (the Perl mapper's cross-line `s:` branch,
+    * `kdcmapper.pl:42-52`) through the real micro-batch engine:
+    * `readStream` over the `kdclog` table with `maxFilesPerTrigger = 1`
+    * (two file-arrival micro-batches, each parsed by the split-aligned
+    * session reader) into the complete-mode service aggregation,
+    * AvailableNow trigger, memory sink — built like
+    * [[userStatsV2Streaming]]; the stateFUL (cross-line) counterpart of
+    * the stateless AS-success streaming row above. */
+  def serviceStatsStreaming(spark: SparkSession, sfDir: String): DataFrame = {
+    val ds = spark.readStream.format("kdclog")
+      .option("maxFilesPerTrigger", "1")
+      .load(fixtureDir())
+      .as(org.apache.spark.sql.Encoders.product[KdcLogRecord])
     graft.streaming.StreamingPipeline.runOneShot(
-      graft.streaming.StreamingPipeline.streamingServiceUseStats(spark, fixtureDir()),
+      KdcQueries.serviceUseStats(ds),
       "kdc_stream_service_use", "complete", Seq("service"))
+  }
 
   /** README #1+#2 through the DataSourceV2 table (SURVEY §4/§7.3's
     * 100 TB parse posture): same aggregation, but the scan IS the
@@ -340,7 +350,7 @@ object KdcParseQueries {
     * [[KdcQueries.tsvLines]] expression the sink uses. */
   def userReportTsv(spark: SparkSession, sfDir: String): DataFrame =
     KdcQueries.tsvLines(
-      KdcQueries.userAuthStats(KdcSource.records(spark, fixtureDir())))
+      KdcQueries.userAuthStats(KdcSource.recordsAligned(spark, fixtureDir())))
 
   /** The Hadoop-counters protocol (SURVEY S8/A5/C6) through the gate:
     * run the fixture parse under [[KdcQueries.withCounters]]' observe
@@ -352,7 +362,7 @@ object KdcParseQueries {
     import spark.implicits._
     val obs = new org.apache.spark.sql.Observation()
     val recs = KdcQueries.withCounters(
-      KdcSource.records(spark, fixtureDir()), obs)
+      KdcSource.recordsAligned(spark, fixtureDir()), obs)
     recs.write.format("noop").mode("overwrite").save()
     val m = obs.get
     def c(k: String): Long = m(k).asInstanceOf[Long]
@@ -364,12 +374,12 @@ object KdcParseQueries {
     * per user × preauth enctype, UNK when the preauth line carries no
     * `using` suffix (`perl/kdcmapper-with-enctypes.pl:39-44`). */
   def userEnctypes(spark: SparkSession, sfDir: String): DataFrame =
-    KdcQueries.userEnctypeStats(KdcSource.records(spark, fixtureDir()))
+    KdcQueries.userEnctypeStats(KdcSource.recordsAligned(spark, fixtureDir()))
 
   /** Per service × firstSupported/lastSupported/used negotiation key
     * (`perl/kdcmapper-with-enctypes.pl:46-57,78-81`). */
   def serviceEnctypes(spark: SparkSession, sfDir: String): DataFrame =
-    KdcQueries.serviceEnctypeStats(KdcSource.records(spark, fixtureDir()))
+    KdcQueries.serviceEnctypeStats(KdcSource.recordsAligned(spark, fixtureDir()))
 
   /** README #5's HOSTS dimension through the gate: top client IPs by
     * valid-request count ([[KdcQueries.topN]] over client_ip — plans
@@ -377,11 +387,11 @@ object KdcParseQueries {
     * count-1 tie band, so the (n_req desc, client_ip asc) tie-break
     * is part of what the oracle pins. */
   def topHosts(spark: SparkSession, sfDir: String): DataFrame =
-    KdcQueries.topN(KdcSource.records(spark, fixtureDir()), "client_ip", 5)
+    KdcQueries.topN(KdcSource.recordsAligned(spark, fixtureDir()), "client_ip", 5)
 
   /** Hand-derived per-user stats for the fixture — shared VERBATIM by
-    * the RDD-path, V2-path, and V2-streaming rows (one truth, three
-    * parse postures). */
+    * the Dataset-reader, V2-batch, and V2-streaming rows (one truth,
+    * three parse postures). */
   private val userStatsOracle: String =
     """SELECT * FROM (VALUES
       |  ('alice', '2015-11-22T17:00:00', '2015-11-23T07:00:00', CAST(2 AS BIGINT)),

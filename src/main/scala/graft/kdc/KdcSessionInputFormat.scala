@@ -11,9 +11,11 @@ import org.apache.hadoop.util.LineReader
 /** Split-aligned KDC *session* input: each record is the full text of
   * one multi-line session (all lines up to and including its
   * `sending N bytes` terminator), with byte-level split alignment —
-  * the 100 TB path for single log files larger than one task
-  * (SURVEY.md §7.4 #1; the shuffle-by-file [[KdcSource.records]] path
-  * stays the default for many-file fleets).
+  * the one reader behind every KDC parse: [[KdcSource.recordsAligned]]
+  * and the `kdclog` table (batch and stream) both take their sessions
+  * from it, so a single log file larger than one task fans out across
+  * tasks (SURVEY.md §7.4 #1) and a many-file fleet reads one split per
+  * small file.
   *
   * Ownership contract (exact partition, no loss/duplication — pinned
   * by KdcAlignedSpec at adversarial split sizes):
@@ -43,9 +45,7 @@ import org.apache.hadoop.util.LineReader
   * and otherwise skips forward to its first terminator, the exact
   * complement of the previous reader's read-past-end. This is the
   * zero-shuffle path for a single multi-GB .bz2 log, the reference's
-  * splittable case (`KDCLogRecordReader.java:179-198`);
-  * [[KdcSource.records]]' shuffle-by-file sort remains the simpler
-  * alternative for many-file fleets.
+  * splittable case (`KDCLogRecordReader.java:179-198`).
   *
   * Requires lines shorter than the lookback window
   * (`graft.kdc.lookback.bytes`, default 1 MiB; compressed probe:

@@ -7,7 +7,11 @@ import scala.collection.AbstractIterator
   * Pure iterator→iterator function (no Spark types) so the exact session
   * semantics of the reference's `nextKeyValue` state machine
   * (`/root/reference/.../KDCLogRecordReader.java:209-324`) are
-  * unit-testable without a SparkSession. Behaviors preserved:
+  * unit-testable without a SparkSession. Every log-file parse in the
+  * engine feeds it the session blobs of [[KdcSessionInputFormat]],
+  * through [[KdcSource.recordsAligned]] or the `kdclog` table (batch
+  * and stream). Each blob ends at its `sending` line, so state never
+  * crosses a blob, a split or a file. Behaviors preserved:
   *
   *  - a `sending N bytes` line completes and emits the current record —
   *    even when no header was ever seen (completed-but-invalid record
@@ -101,27 +105,4 @@ object Sessionizer {
         val r = nextRec; advance(); r
       }
     }
-
-  /** Sessionize a stream of `(fileId, line)` pairs that is ordered by
-    * file and, within each file, by line position — resetting session
-    * state at every file boundary. This is the kernel behind the
-    * shuffle-by-file source ([[KdcSource.records]]): one partition holds
-    * whole files, each folded independently.
-    */
-  def sessionizeByFile(lines: Iterator[(String, String)]): Iterator[KdcLogRecord] = {
-    if (!lines.hasNext) return Iterator.empty
-    val buf = lines.buffered
-    new AbstractIterator[Iterator[KdcLogRecord]] {
-      override def hasNext: Boolean = buf.hasNext
-      override def next(): Iterator[KdcLogRecord] = {
-        val file = buf.head._1
-        val fileLines = new AbstractIterator[String] {
-          override def hasNext: Boolean =
-            buf.hasNext && buf.head._1 == file
-          override def next(): String = buf.next()._2
-        }
-        sessionize(fileLines)
-      }
-    }.flatten
-  }
 }

@@ -20,6 +20,10 @@ import org.apache.spark.sql.types._
   *     — AS successes are recognizable from a single line, so the
   *     extract is stateless and the count is a windowed agg).
   *
+  * The cross-line TGS branch (`s:`) needs whole sessions, so it streams
+  * through the `kdclog` table's split-aligned session reader like every
+  * other KDC parse (see `KdcParseQueries.serviceStatsStreaming`).
+  *
   * Scale posture: state is per-key O(1) (three longs), watermark bounds
   * the window state store, and every one-shot driver row runs on the
   * RocksDB state store (wired in [[runOneShot]], pinned by
@@ -293,29 +297,6 @@ object StreamingPipeline {
       .agg(count(lit(1)).as("n_auth"))
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("client"), col("n_auth"))
-
-  /** 3b. Streaming TGS service-use stats — the Perl mapper's `s:`
-    * branch (`kdcmapper.pl:42-52`), which unlike the `u:` branch is
-    * CROSS-LINE stateful (a TGS-REQ header is only emitted when the
-    * later "sending packet" line confirms it, and errors/referrals in
-    * between cancel it). The state is per-file and line-local, so it
-    * streams as a stateless per-FILE fold: `wholetext` makes each file
-    * ONE source row, so a file can never straddle partitions (a plain
-    * `.text` read splits large files, and a fragment fold would
-    * silently drop the straddling sessions — enforcing the contract
-    * structurally beats documenting it) and the sessionizer folds its
-    * lines exactly like the batch path. No state store; the only
-    * streaming state is the final complete-mode aggregate. Contract:
-    * a file must fit in one row (fleet-of-small-rotated-logs layout;
-    * huge single files belong to the batch aligned reader). */
-  def streamingServiceUseStats(s: SparkSession, logDir: String,
-                               realm: Option[String] = None): DataFrame = {
-    import s.implicits._
-    val recs = s.readStream.option("wholetext", "true").text(logDir)
-      .as[String]
-      .flatMap(txt => graft.kdc.Sessionizer.sessionize(txt.linesIterator))
-    graft.kdc.KdcQueries.serviceUseStats(recs, realm)
-  }
 
   /** 4. Streaming exact dedup: drop re-deliveries of the same content
     * hash arriving within the watermark horizon — the streaming twin

@@ -602,14 +602,13 @@ object ScaleProbe {
     }
 
     // --kdc-scale: parse-path throughput on ONE large synthetic log
-    // file — the few-huge-files layout the split-aligned paths exist
-    // for. Compares (a) shuffle-by-file records() [whole file = one
-    // fold task — the documented limit], (b) recordsAligned()
-    // [byte-aligned splits, zero shuffle], (c) the V2 table full-scan,
-    // (d) the V2 table with realm+reqtype pushdown and (client, ts)
-    // pruning [predicates evaluate on the typed session record BEFORE
-    // row materialization], and (e) the same query with post-parse
-    // Spark filters over (b) — the baseline (d)'s pushdown must beat.
+    // file — the few-huge-files layout the split-aligned reader exists
+    // for. Compares (a) recordsAligned() [byte-aligned splits, zero
+    // shuffle], (b) the V2 table full-scan, (c) the V2 table with
+    // realm+reqtype pushdown and (client, ts) pruning [predicates
+    // evaluate on the typed session record BEFORE row
+    // materialization], and (d) the same query with post-parse Spark
+    // filters over (a) — the baseline (c)'s pushdown must beat.
     if (args.contains("--kdc-scale")) {
       val nSessions = args.collectFirst {
         case a if a.startsWith("--sessions=") => a.stripPrefix("--sessions=").toInt
@@ -628,7 +627,6 @@ object ScaleProbe {
       }
       import graft.kdc.KdcSource
       val realm = "SQUILL.DEMENTIA.ORG"
-      time("records_shuffle_by_file")(KdcSource.records(spark, dir).toDF())
       time("records_aligned")(KdcSource.recordsAligned(spark, dir).toDF())
       time("v2_full_scan")(spark.read.format("kdclog").load(dir))
       time("v2_pushdown_scoped")(

@@ -60,15 +60,27 @@ class HarnessSpec extends AnyFunSuite {
     assert(new java.io.File(out).listFiles().exists(_.getName.startsWith("part-")))
   }
 
-  test("src/main builds sessions only in Harness and EntrySmoke") {
+  /** File name of every match of `re` in `src/main`, once per match. */
+  private def sitesOf(re: String): Seq[String] = {
     def files(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala"))
       }
-    val sites = files(new java.io.File("src/main")).flatMap { f =>
+    files(new java.io.File("src/main")).flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      Seq.fill("SparkSession\\.builder\\b".r.findAllIn(src).size)(f.getName)
-    }
-    assert(sites.sorted == Seq("EntrySmoke.scala", "Harness.scala"))
+      Seq.fill(re.r.findAllIn(src).size)(f.getName)
+    }.sorted
+  }
+
+  test("src/main builds sessions only in Harness and EntrySmoke") {
+    assert(sitesOf("SparkSession\\.builder\\b") == Seq("EntrySmoke.scala", "Harness.scala"))
+  }
+
+  test("src/main parses KDC logs only through the split-aligned session reader") {
+    // no line-level Hadoop text input, no whole-file text rows, no
+    // by-file fold; the one Hadoop file read is KdcSource.recordsAligned
+    for (gone <- Seq("TextInputFormat", "wholetext", "sessionizeByFile"))
+      assert(sitesOf(gone).isEmpty, s"$gone is back in ${sitesOf(gone).mkString(", ")}")
+    assert(sitesOf("newAPIHadoopFile") == Seq("KdcSource.scala"))
   }
 }

@@ -3,13 +3,12 @@ package graft.kdc
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Splittable-bzip2 coverage for the shuffle-by-file parse path — the
-  * equivalent of the reference's `KDCLogRecordReader.java:179-198`
+/** Splittable-bzip2 coverage for the split-aligned session reader —
+  * the equivalent of the reference's `KDCLogRecordReader.java:179-198`
   * splittable-codec handling. A single multi-block .bz2 log is read
   * with small max splits, so multiple tasks decode disjoint compressed
-  * blocks of ONE file; all lines of a block share the reader's
-  * block-offset `pos`, and the within-split `seq` tie-break must
-  * restore exact line order for the sessionizer. */
+  * blocks of ONE file, and the probe-aligned reader must hand every
+  * session to exactly one of them. */
 class KdcBzip2Spec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -43,30 +42,6 @@ class KdcBzip2Spec extends AnyFunSuite {
     out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     out.close()
     s"$dir/big.log.bz2"
-  }
-
-  test("one multi-block bz2 file parses identically to in-memory lines") {
-    val dir = "target/scratch/bz2"
-    val file = bz2File
-    val conf = spark.sparkContext.hadoopConfiguration
-
-    val prev = conf.get("mapreduce.input.fileinputformat.split.maxsize")
-    conf.setLong("mapreduce.input.fileinputformat.split.maxsize", 256 * 1024)
-    try {
-      val viaBz2 = KdcSource.records(spark, s"$dir/big.log.bz2")
-        .collect().toSeq
-      // multiple splits must actually have been used for the claim to
-      // mean anything: compressed size ≈ 60-80 KB/block × several
-      assert(new java.io.File(s"$dir/big.log.bz2").length() > 256 * 1024)
-      val expected = Sessionizer.sessionize(lines.iterator).toSeq
-      assert(viaBz2.size == expected.size)
-      assert(viaBz2.groupBy(identity).view.mapValues(_.size).toMap ==
-        expected.groupBy(identity).view.mapValues(_.size).toMap)
-    } finally {
-      if (prev == null)
-        conf.unset("mapreduce.input.fileinputformat.split.maxsize")
-      else conf.set("mapreduce.input.fileinputformat.split.maxsize", prev)
-    }
   }
 
   test("aligned (zero-shuffle) path splits bz2 and matches the single-stream fold") {

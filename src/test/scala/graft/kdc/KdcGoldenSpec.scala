@@ -98,13 +98,16 @@ class KdcGoldenSpec extends AnyFunSuite {
   }
 
   test("KdcSource.records shuffle-by-file path agrees with fromLines") {
+    // the two-file read now goes through KdcSource.recordsAligned, the
+    // reader that replaced the shuffle-by-file records; each file must
+    // still fold alone, as fromLines does per file
     val dir = "target/scratch/goldenlogs"
     new java.io.File(dir).mkdirs()
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.log"),
       log.take(12).mkString("\n").getBytes)
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/b.log"),
       log.drop(12).mkString("\n").getBytes)
-    val viaFiles = KdcSource.records(spark, dir).collect().toSet
+    val viaFiles = KdcSource.recordsAligned(spark, dir).collect().toSet
     val viaLines = KdcSource.fromLines(spark, log.take(12)).collect().toSet ++
       KdcSource.fromLines(spark, log.drop(12)).collect().toSet
     assert(viaFiles == viaLines)

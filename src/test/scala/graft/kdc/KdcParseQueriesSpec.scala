@@ -105,11 +105,96 @@ class KdcParseQueriesSpec extends AnyFunSuite {
   }
 
   test("aligned and shuffle-by-file paths agree on the fixture") {
+    // the by-file reference: each fixture file's lines folded alone
     val dir = KdcParseQueries.fixtureDir()
-    val a = KdcSource.records(spark, dir).collect().toSet
+    val a = Seq(KdcParseQueries.host1Log, KdcParseQueries.host2Log)
+      .flatMap(f => Sessionizer.sessionize(f.linesIterator)).toSet
     val b = KdcSource.recordsAligned(spark, dir, Some(256L)).collect().toSet
     // 10 AS sessions (host1, incl. the foreign-realm visitor) + 8 TGS
     // sessions (host2; trailing partial dropped), all field-distinct → 18.
     assert(a == b && a.size == 18)
+  }
+
+  /** Every split-aligned entry API — the Dataset reader at 256 B, 2 KiB
+    * and default splits, the `kdclog` batch read and the `kdclog`
+    * stream — returns exactly the records of [[Sessionizer.sessionize]]
+    * run on each file alone. Both files of the dangling dir end in a
+    * header and an error line with no `sending`: a parse that carried
+    * state across the file boundary, in either file order, would hand
+    * that error to the other file's clean first session. */
+  test("every parse entry agrees with per-file Sessionizer.sessionize") {
+    import spark.implicits._
+    val realm = "EXAMPLE.ORG"
+    val ts = "2015-11-22T10:00:00"
+    val dangling = Seq(
+      s"$ts AS-REQ dangling@$realm from IPv4:10.0.0.9 for krbtgt/$realm@$realm",
+      s"$ts Failed to decrypt PA-DATA -- dangling@$realm")
+    val danglingA = (Seq(
+      s"$ts AS-REQ cg2v@$realm from IPv4:127.0.0.1 for krbtgt/$realm@$realm",
+      s"$ts ENC-TS Pre-authentication succeeded -- cg2v@$realm",
+      s"$ts sending 752 bytes to IPv4:127.0.0.1") ++ dangling).mkString("", "\n", "\n")
+    val danglingB = (Seq(
+      s"$ts TGS-REQ eve@$realm from IPv4:10.0.0.5 for host/www.example.org@$realm",
+      s"$ts sending 600 bytes to IPv4:10.0.0.5") ++ dangling).mkString("", "\n", "\n")
+    val danglingDir = new java.io.File("target/scratch/kdc_dangling")
+    danglingDir.mkdirs()
+    java.nio.file.Files.write(new java.io.File(danglingDir, "a.log").toPath,
+      danglingA.getBytes("UTF-8"))
+    java.nio.file.Files.write(new java.io.File(danglingDir, "b.log").toPath,
+      danglingB.getBytes("UTF-8"))
+
+    def bag(rs: Seq[KdcLogRecord]): Map[KdcLogRecord, Int] =
+      rs.groupBy(identity).view.mapValues(_.size).toMap
+    def entries(dir: String): Seq[(String, Seq[KdcLogRecord])] = {
+      val stream = graft.streaming.StreamingPipeline.runOneShot(
+        spark.readStream.format("kdclog").option("maxFilesPerTrigger", "1")
+          .load(dir), "kdc_entry_agreement", "append", Seq("ts"))
+      Seq(
+        "recordsAligned 256 B" -> KdcSource.recordsAligned(spark, dir, Some(256L)).collect().toSeq,
+        "recordsAligned 2 KiB" -> KdcSource.recordsAligned(spark, dir, Some(2048L)).collect().toSeq,
+        "recordsAligned default" -> KdcSource.recordsAligned(spark, dir).collect().toSeq,
+        "kdclog batch" -> spark.read.format("kdclog").load(dir).as[KdcLogRecord].collect().toSeq,
+        "kdclog stream" -> stream.as[KdcLogRecord].collect().toSeq)
+    }
+    for ((dir, files, n) <- Seq(
+        (KdcParseQueries.fixtureDir(),
+          Seq(KdcParseQueries.host1Log, KdcParseQueries.host2Log), 18),
+        (danglingDir.getPath, Seq(danglingA, danglingB), 2))) {
+      val want = files.flatMap(f => Sessionizer.sessionize(f.linesIterator))
+      assert(want.size == n)
+      for ((entry, got) <- entries(dir))
+        assert(bag(got) == bag(want), s"$entry diverged on $dir")
+    }
+    // the per-file reference itself: both first sessions are clean
+    val clean = Seq(danglingA, danglingB).flatMap(f => Sessionizer.sessionize(f.linesIterator))
+    assert(clean.map(r => (r.client, r.success, r.error)) ==
+      Seq(("cg2v", true, null), ("eve", true, null)))
+  }
+
+  private def assertRejected(flags: String*)(why: String): Unit = {
+    val out = new java.io.File(s"target/scratch/kdcmain_rejected_${System.nanoTime()}")
+    val e = intercept[IllegalArgumentException] {
+      KdcMain.main(Array(KdcParseQueries.fixtureDir(), out.getPath) ++ flags)
+    }
+    val (reason, usage) = e.getMessage.splitAt(e.getMessage.indexOf('\n'))
+    assert(reason == why)
+    assert(usage.contains("usage: KdcMain") && !usage.contains("--aligned"), usage)
+    assert(!out.exists(), s"a rejected run created $out")
+  }
+
+  test("KdcMain rejects an unknown flag, such as the removed --aligned") {
+    assertRejected("--aligned")("unknown flag --aligned")
+  }
+
+  test("KdcMain rejects --recursive without --v2") {
+    assertRejected("--recursive")("--recursive requires --v2")
+  }
+
+  test("KdcMain rejects --scope without --v2") {
+    assertRejected("--scope=day=2015-11-22")("--scope requires --v2")
+  }
+
+  test("KdcMain rejects an unknown --report") {
+    assertRejected("--v2", "--report=bogus")("unknown --report=bogus")
   }
 }

@@ -20,9 +20,6 @@ class KdcPropertySpec extends AnyFunSuite {
         })
     }
 
-  private def forAll[A, B](ga: Gen[A], gb: Gen[B])(f: (A, B) => Unit): Unit =
-    forAll(Gen.zip(ga, gb))(p => f(p._1, p._2))
-
   private val ts = "2015-11-22T15:25:20"
   private val genClient = Gen.oneOf("alice", "bob", "cg2v", "svc_x")
 
@@ -93,12 +90,12 @@ class KdcPropertySpec extends AnyFunSuite {
   }
 
   test("file-boundary reset: records of a++b == records(a) ++ records(b) per file") {
-    forAll(genLines, genLines) { (a, b) =>
-      val byFile = Sessionizer.sessionizeByFile(
-        (a.map(("fa", _)) ++ b.map(("fb", _))).iterator).toList
+    forAll(Gen.zip(genLines, genLines, Gen.choose(16L, 512L))) { case (a, b, split) =>
       val separate = Sessionizer.sessionize(a.iterator).toList ++
         Sessionizer.sessionize(b.iterator).toList
-      assert(byFile == separate)
+      val aligned = SplitAlignedFiles.sessionizeByFile("target/scratch/kdc_property",
+        Seq("fa.log" -> a, "fb.log" -> b), split)
+      assert(aligned == separate, s"maxSplit=$split")
     }
   }
 }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.kdc.v2.{KdcScan, KdcScanBuilder, KdcTopN}
 
 /** The DataSourceV2 log table ([[graft.kdc.v2.KdcLogTableProvider]]):
-  * result parity with the RDD-based parse paths, predicate pushdown
+  * result parity with the Dataset reader, predicate pushdown
   * and column pruning reaching the scan, split alignment under
   * adversarial split sizes, and multi-batch streaming admission. */
 class KdcV2Spec extends AnyFunSuite {
@@ -48,10 +48,12 @@ class KdcV2Spec extends AnyFunSuite {
   }
 
   test("v2 batch read equals the shuffle-by-file parse path") {
+    // the by-file reference: each fixture file's lines folded alone
     val viaV2 = v2().collect().map(_.toString).sorted.toSeq
-    val viaRdd = KdcSource.records(spark, fixture).toDF()
-      .collect().map(_.toString).sorted.toSeq
-    assert(viaV2 == viaRdd)
+    val byFile = Seq(KdcParseQueries.host1Log, KdcParseQueries.host2Log)
+      .map(f => KdcSource.fromLines(spark, f.linesIterator.toSeq)).reduce(_ union _)
+    val viaRef = byFile.toDF().collect().map(_.toString).sorted.toSeq
+    assert(viaV2.size == 18 && viaV2 == viaRef)
   }
 
   test("realm/reqtype predicates and column pruning reach the scan") {
@@ -180,11 +182,11 @@ class KdcV2Spec extends AnyFunSuite {
     val scan = kdcScan(q)
     assert(scan.pushedFilters.mkString.contains("EqualTo(crealm,SQUILL.DEMENTIA.ORG)"),
       s"realm not pushed on the CLI --v2 plan: ${scan.pushedFilters.mkString(", ")}")
-    // and the report equals the RDD path's scoped report
+    // and the report equals the default source's scoped report
     val viaV2 = q.collect().map(_.toString).toSeq
-    val viaRdd = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"),
+    val viaDefault = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"),
       "user", useV2 = false, aligned = false).collect().map(_.toString).toSeq
-    assert(viaV2 == viaRdd)
+    assert(viaV2 == viaDefault)
     // service reports scope the SERVICE realm
     val svc = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"),
       "service", useV2 = true, aligned = false)
@@ -215,7 +217,7 @@ class KdcV2Spec extends AnyFunSuite {
       .collect().map(_.getString(0)).sorted
     assert(scopedTsv.nonEmpty && scopedTsv.toSeq == wantTsv.toSeq,
       s"scoped TSV diverged:\n${scopedTsv.mkString("\n")}\nvs\n${wantTsv.mkString("\n")}")
-    // scope without --v2 fails loudly — the RDD paths have no
+    // scope without --v2 fails loudly — the default source has no
     // partition columns to filter
     intercept[IllegalArgumentException] {
       KdcMain.buildReport(spark, root, None, "user",
@@ -1159,7 +1161,7 @@ class KdcV2Spec extends AnyFunSuite {
     val got = graft.streaming.StreamingPipeline.runOneShot(
       agg, "kdc_v2_stream", "complete", Seq("client"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
-    val want = KdcQueries.userAuthStats(KdcSource.records(spark, fixture))
+    val want = KdcQueries.userAuthStats(v2().as(Encoders.product[KdcLogRecord]))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(got.toSeq == want.toSeq)
     // the admission bound must have produced MULTIPLE batches (2 files

@@ -179,10 +179,14 @@ class SessionizerSpec extends AnyFunSuite {
 
   test("sessionizeByFile resets state at file boundaries") {
     // file A ends with a dangling header; file B is a clean TGS session.
-    val a = happyAsReq.map(("a", _)) ++ Seq(("a", header(client = "dangling")))
-    val b = Seq(("b", header(rt = "TGS-REQ", client = "eve")), ("b", sending)).map(p => (p._1, p._2))
-    val rs = Sessionizer.sessionizeByFile((a ++ b).iterator).toList
+    // Read as two files through the split-aligned reader, the dangling
+    // header must not leak into B's first session.
+    val a = happyAsReq :+ header(client = "dangling")
+    val b = Seq(header(rt = "TGS-REQ", client = "eve"), sending)
+    val rs = SplitAlignedFiles.sessionizeByFile("target/scratch/sessionizer_byfile",
+      Seq("a.log" -> a, "b.log" -> b))
     assert(rs.map(_.client) == List("cg2v", "eve"))
+    assert(rs(1).success && rs(1).error == null)
   }
 
   test("noise-only input yields nothing") {

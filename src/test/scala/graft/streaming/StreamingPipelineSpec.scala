@@ -326,4 +326,14 @@ class StreamingPipelineSpec extends AnyFunSuite {
       ("2015-11-22", "alice") -> 1L,
       ("2015-11-23", "alice") -> 1L))
   }
+
+  test("StreamMain rejects a runSeconds that is not an integer") {
+    val e = intercept[IllegalArgumentException] {
+      StreamMain.main(Array(graft.kdc.KdcParseQueries.fixtureDir(), "", "30s"))
+    }
+    assert(e.getMessage.startsWith("runSeconds must be an integer, got '30s'\nusage: StreamMain"),
+      e.getMessage)
+    // rejected before a stream started, and the caller's session survives
+    assert(spark.streams.active.isEmpty && !spark.sparkContext.isStopped)
+  }
 }
