@@ -97,9 +97,6 @@ class KdcSessionInputFormat extends FileInputFormat[LongWritable, Text] {
 class KdcSessionSplitCompressedRecordReader extends RecordReader[LongWritable, Text] {
   import org.apache.hadoop.mapreduce.lib.input.LineRecordReader
 
-  private def isTerminator(line: String): Boolean =
-    LogLine.classify(line) == LineEvent.Sending
-
   private var context: TaskAttemptContext = _
   private var path: Path = _
   private var end = 0L
@@ -143,11 +140,11 @@ class KdcSessionSplitCompressedRecordReader extends RecordReader[LongWritable, T
       if (prev != null || p == 0L) done = true
       else window *= 4 // window held no whole line (giant block/line): widen
     }
-    if (prev == null || !isTerminator(prev)) {
+    if (prev == null || !LogLine.isSending(prev)) {
       var aligned = false
       while (!aligned) {
         if (!main.nextKeyValue()) { finished = true; aligned = true }
-        else if (isTerminator(main.getCurrentValue.toString)) aligned = true
+        else if (LogLine.isSending(main.getCurrentValue.toString)) aligned = true
       }
     }
   }
@@ -162,7 +159,7 @@ class KdcSessionSplitCompressedRecordReader extends RecordReader[LongWritable, T
     while (true) {
       if (sb.length() > 0) sb.append('\n')
       sb.append(line)
-      if (isTerminator(line)) {
+      if (LogLine.isSending(line)) {
         value.set(sb.toString)
         if (tailMode) finished = true // the one tail session is delivered
         return true
@@ -199,9 +196,6 @@ class KdcSessionSplitCompressedRecordReader extends RecordReader[LongWritable, T
 }
 
 class KdcSessionRecordReader extends RecordReader[LongWritable, Text] {
-
-  private def isTerminator(line: String): Boolean =
-    LogLine.classify(line) == LineEvent.Sending
 
   private var start = 0L
   private var end = 0L
@@ -260,7 +254,7 @@ class KdcSessionRecordReader extends RecordReader[LongWritable, Text] {
       if (n == 0) { finished = true; aligned = true }
       else {
         pos += n
-        if (pos > start && isTerminator(line.toString)) aligned = true
+        if (pos > start && LogLine.isSending(line.toString)) aligned = true
       }
     }
   }
@@ -277,9 +271,10 @@ class KdcSessionRecordReader extends RecordReader[LongWritable, Text] {
       val n = in.readLine(line)
       if (n == 0) { finished = true; return false } // EOF mid-session: drop
       pos += n
+      val l = line.toString
       if (sb.length() > 0) sb.append('\n')
-      sb.append(line.toString)
-      if (isTerminator(line.toString)) complete = true
+      sb.append(l)
+      complete = LogLine.isSending(l)
     }
     value.set(sb.toString)
     true

@@ -79,4 +79,47 @@ class KdcAlignedSpec extends AnyFunSuite {
     val b = KdcQueries.userAuthStats(KdcSource.fromLines(spark, lines)).collect()
     assert(a.nonEmpty && a.toSeq == b.toSeq)
   }
+
+  /** `n` sessions with terminator decoys: a header that also carries a
+    * whole `<ts> sending N bytes to <ip>` (a header, not a terminator),
+    * an error line that mentions `sending`, and a real terminator behind
+    * a syslog prefix. */
+  private def decoyLines(n: Int): Seq[String] = (0 until n).flatMap { i =>
+    val ts = f"2015-11-22T${i / 3600 % 24}%02d:${(i / 60) % 60}%02d:${i % 60}%02d"
+    val u = s"user${i % 41}"
+    val ip = s"IPv4:10.0.${i % 250}.${1 + i % 7}"
+    val header = s"$ts AS-REQ $u@X.ORG from $ip for krbtgt/X.ORG@X.ORG"
+    val end = s"$ts sending ${100 + i % 900} bytes to $ip"
+    i % 3 match {
+      case 0 => Seq(s"$header $ts sending 5 bytes to $ip",
+        s"$ts ENC-TS Pre-authentication succeeded -- $u@X.ORG", end)
+      case 1 => Seq(header,
+        s"$ts Failed to decrypt PA-DATA -- $u@X.ORG (error sending reply to $ip)", end)
+      case _ => Seq(header, s"Nov 22 15:25:20 kdc1 kdc[4711]: $end")
+    }
+  }
+
+  test("terminator decoys: 16-512 B plain splits and bz2 splits match the per-file fold") {
+    val small = decoyLines(120)
+    val want = Sessionizer.sessionize(small.iterator).toList
+    assert(want.size == 120, "only the last line of each decoy session terminates it")
+    val plain = "target/scratch/aligned_decoy"
+    SplitAlignedFiles.write(plain, Seq("decoy.log" -> small))
+    for (sz <- Seq(16L, 23L, 40L, 64L, 99L, 128L, 200L, 256L, 384L, 512L))
+      assert(SplitAlignedFiles.read(plain, sz) == want, s"plain split=$sz")
+    for (sz <- Seq(16L, 512L)) {
+      val got = KdcSource.recordsAligned(spark, s"$plain/decoy.log", Some(sz)).collect()
+      assert(got.groupBy(identity).view.mapValues(_.length).toMap ==
+        want.groupBy(identity).view.mapValues(_.length).toMap, s"recordsAligned split=$sz")
+    }
+
+    val big = decoyLines(40000)
+    val wantBig = Sessionizer.sessionize(big.iterator).toList
+    val bz2 = "target/scratch/aligned_decoy_bz2"
+    SplitAlignedFiles.write(bz2, Seq("decoy.log.bz2" -> big))
+    assert(new java.io.File(s"$bz2/decoy.log.bz2").length() > 256 * 1024,
+      "the .bz2 must span several of the largest splits")
+    for (sz <- Seq(37_777L, 64L * 1024, 100_000L, 131_071L, 256L * 1024))
+      assert(SplitAlignedFiles.read(bz2, sz) == wantBig, s"bz2 split=$sz")
+  }
 }

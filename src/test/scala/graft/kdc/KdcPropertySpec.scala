@@ -1,24 +1,12 @@
 package graft.kdc
 
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based sessionizer invariants (SURVEY.md §5 test plan #2):
   * random interleavings of session fragments must preserve the
-  * reference's structural guarantees regardless of ordering.
-  * (Drives ScalaCheck `Gen` directly — the scalatestplus bridge is not
-  * in the offline dependency cache.) */
-class KdcPropertySpec extends AnyFunSuite {
-
-  private def forAll[A](gen: Gen[A], n: Int = 300)(f: A => Unit): Unit =
-    (0 until n).foreach { i =>
-      gen.apply(Gen.Parameters.default, Seed(i.toLong))
-        .foreach(a => try f(a) catch {
-          case e: Throwable =>
-            fail(s"failed for seed=$i input=$a: ${e.getMessage}", e)
-        })
-    }
+  * reference's structural guarantees regardless of ordering. */
+class KdcPropertySpec extends AnyFunSuite with SeededForAll {
 
   private val ts = "2015-11-22T15:25:20"
   private val genClient = Gen.oneOf("alice", "bob", "cg2v", "svc_x")
@@ -43,7 +31,7 @@ class KdcPropertySpec extends AnyFunSuite {
   test("record count equals the number of sending terminators consumed") {
     forAll(genLines) { lines =>
       val n = Sessionizer.sessionize(lines.iterator).size
-      val sendings = lines.count(LogLine.classify(_) == LineEvent.Sending)
+      val sendings = lines.count(LogLineOracle.classify(_) == LineEvent.Sending)
       assert(n == sendings)
     }
   }
