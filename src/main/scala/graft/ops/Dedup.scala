@@ -161,23 +161,18 @@ object Dedup {
     * frame — the capped-universe size invariant documented above
     * lives here and nowhere else.
     *
-    * POSTING-LIST shape (r14, guide §2.4 — the Graph.linkPredictionOn
-    * pattern, also applied to the CDC twin [[cdcCoverPairsOn]]): ONE
-    * groupBy(g) folds each posting bucket into a sorted doc-id array;
-    * the df-cap becomes a post-aggregation `size(ds) <= maxBucket`
-    * filter (the retired pipeline paid a SEPARATE full posting pass
-    * for the hot set plus a broadcast anti-join to apply it), and the
-    * Σ bucket² candidate pairs slice-explode inside the stage straight
-    * into the partial (doc_a, doc_b) count instead of materializing as
-    * posting self-join output. Per-doc sizes explode off the same
-    * cached lists — count of surviving buckets containing the doc ≡
-    * the retired per-doc bounded-posting count; per-bucket work stays
-    * ≤ maxBucket² by the cap, the same bound the self-join's per-key
-    * output had. Same-window isolated A/B vs the join shape: list
-    * 2.51/2.57 s, join 2.68/2.68/2.91 s (dedup_jaccard_pairs, sf0.1;
-    * the ObjectHashAggregate's per-singleton-bucket overhead is more
-    * than paid for by dropping the hot-set pass, the anti-join and
-    * the SMJ sorts — details in OPTIMIZATION_r14.md).
+    * ONE groupBy(g) folds each posting bucket into a sorted doc-id
+    * array whose pairs come from [[PairGen.pairs]]; the df-cap is a
+    * post-aggregation `size(ds) <= maxBucket` filter (the retired
+    * pipeline paid a SEPARATE full posting pass for the hot set plus a
+    * broadcast anti-join to apply it). Per-doc sizes explode off the
+    * same cached lists — count of surviving buckets containing the doc
+    * ≡ the retired per-doc bounded-posting count. Same-window isolated
+    * A/B vs the join shape: list 2.51/2.57 s, join 2.68/2.68/2.91 s
+    * (dedup_jaccard_pairs, sf0.1; the ObjectHashAggregate's
+    * per-singleton-bucket overhead is more than paid for by dropping
+    * the hot-set pass, the anti-join and the SMJ sorts — details in
+    * OPTIMIZATION_r14.md).
     *
     * CACHE LIFETIME CONTRACT (applies to every mid-plan persist in
     * graft.ops): the cached block backs the RETURNED lazy plan, so
@@ -199,11 +194,8 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = lists.select(explode(col("ds")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    lists
-      .select(posexplode(col("ds")).as(Seq("i", "doc_a")), col("ds"))
-      .select(col("doc_a"),
-        explode(slice(col("ds"), col("i") + lit(2), size(col("ds")))).as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
+    PairGen.pairs(lists, col("ds"), splitHubs = maxBucket > PairGen.Chunk)
+      .groupBy(col("x").as("doc_a"), col("y").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
@@ -669,20 +661,18 @@ object Dedup {
           graft.functions.textFunctions.m61_token_hashes(
             graft.functions.textFunctions.word_ngrams(col("t"), 3))).as("hs"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // exact-truth pairs via the grouped-list kernel (the
-    // boundedSharedCountsPost shape): ONE shuffle of (h, doc_id)
-    // groups each md5 class, pairs explode in-stage — the former
-    // self-join on h evaluated the scan+md5 on BOTH sides and
-    // shuffled both through the join. Null md5 (null text) is
-    // excluded, matching the join's null-never-equals semantics; a
-    // class of k identical docs yields the same C(k,2) a<b pairs the
-    // join did (doc ids are unique, lists sort ascending).
-    val truth = hx.filter(col("h").isNotNull)
-      .groupBy(col("h")).agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(posexplode(col("ds")).as(Seq("i", "doc_a")), col("ds"))
-      .select(col("doc_a"),
-        explode(slice(col("ds"), col("i") + lit(2), size(col("ds")))).as("doc_b"))
+    // exact-truth pairs: ONE shuffle of (h, doc_id) groups each md5
+    // class into a list for [[PairGen.pairs]]. Null md5 (null text) is
+    // excluded, matching a self-join's null-never-equals semantics; a
+    // class of k identical docs yields C(k,2) a<b pairs (doc ids are
+    // unique, lists sort ascending). No hub split: md5 classes hold at
+    // most 2 docs at sf0.1, and the hub branch would run the class
+    // aggregate twice.
+    val truth = PairGen.pairs(
+      hx.filter(col("h").isNotNull)
+        .groupBy(col("h")).agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+        .filter(size(col("ds")) >= 2),
+      col("ds"), splitHubs = false).select(col("x").as("doc_a"), col("y").as("doc_b"))
     val hashed = hx.filter(col("hs").isNotNull).select(col("doc_id"), col("hs"))
     // alphabetical so the (i < j) enumeration yields fam_a < fam_b
     familyAgreementOn(Seq(
@@ -2327,15 +2317,10 @@ object Dedup {
   def cdcCoverPairsOn(df: DataFrame, maskBits: Int = 6, minLen: Int = 16,
                       maxLen: Int = 256, threshold: Double = 0.5,
                       maxBucket: Int = 1000): DataFrame = {
-    // POSTING-LIST shape (r14 — boundedSharedCountsPost's rewrite,
-    // same pattern): one groupBy(h) folds each chunk bucket into a
-    // doc-id-sorted (doc_id, chars) array; the df-cap is a post-
-    // aggregation size filter (the retired pipeline persisted the
-    // posting frame and paid a separate hot-set pass + anti-join +
-    // self-join), and the Σ bucket² coverage pairs slice-explode in-
-    // stage straight into the partial (doc_a, doc_b) char sums. The
-    // chunk kernel now runs exactly once with no posting persist at
-    // all — the only cached frame is the bucket-list frame.
+    // one groupBy(h) folds each chunk bucket into a doc-id-sorted
+    // (doc_id, chars) array for [[PairGen.pairs]], df-capped by a
+    // post-aggregation size filter; the chunk kernel runs exactly
+    // once and the only cached frame is the bucket-list frame
     val lists = df
       .filter(col("text").isNotNull && length(col("text")) >= 1)
       .select(col("doc_id"),
@@ -2355,12 +2340,9 @@ object Dedup {
     val sz = lists.select(explode(col("ds")).as("d"))
       .groupBy(col("d.doc_id").as("doc_id"))
       .agg(sum(col("d.chars")).as("sz"))
-    lists
-      .select(posexplode(col("ds")).as(Seq("i", "a")), col("ds"))
-      .select(col("a"),
-        explode(slice(col("ds"), col("i") + lit(2), size(col("ds")))).as("b"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(sum(col("a.chars")).as("sa"), sum(col("b.chars")).as("sb"))
+    PairGen.pairs(lists, col("ds"), splitHubs = maxBucket > PairGen.Chunk)
+      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .agg(sum(col("x.chars")).as("sa"), sum(col("y.chars")).as("sb"))
       .join(sz.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
       .join(sz.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
       .withColumn("cov_a", round(col("sa").cast("double") / col("sz_a"), 6))

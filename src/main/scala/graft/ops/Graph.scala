@@ -1045,22 +1045,17 @@ object Graph {
     * degenerate here). Shared by the triangle census and link
     * prediction rows — and by their oracles via [[strongTieCtes]]. */
   private[graft] def strongTieEdges(s: SparkSession, dir: String): DataFrame = {
-    // NEIGHBOR-LIST shape (r14, guide §2.4 — the linkPredictionOn
-    // rewrite applied upstream): one groupBy(ok) builds each order's
-    // sorted distinct supplier set (collect_set dedupes, so the
-    // separate DISTINCT pass is gone) and the co-occurrence pairs
-    // explode in-stage straight into the partial (u, v) count — where
-    // the retired formulation exchanged the distinct (ok, sk) relation
-    // a second time and sort-merge-joined it with itself. Per-order
-    // work is |suppliers(ok)|², exactly the per-key output the join
-    // already produced — no new skew, one exchange and a sort fewer.
-    val pairCounts = Tables(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-      .groupBy(col("ok")).agg(sort_array(collect_set(col("sk"))).as("sks"))
-      .select(posexplode(col("sks")).as(Seq("i", "u")), col("sks"))
-      .select(col("u"),
-        explode(slice(col("sks"), col("i") + lit(2), size(col("sks")))).as("v"))
-      .groupBy(col("u"), col("v"))
+    // one groupBy(ok) builds each order's sorted distinct supplier
+    // set (collect_set dedupes, so no separate DISTINCT pass) and the
+    // co-occurrence pairs come from [[PairGen.pairs]]. No hub split:
+    // orders hold at most 16 suppliers at sf0.1, and the hub branch
+    // would run the set aggregate twice.
+    val pairCounts = PairGen.pairs(
+      Tables(s, dir, "lineitem")
+        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
+        .groupBy(col("ok")).agg(sort_array(collect_set(col("sk"))).as("sks")),
+      col("sks"), splitHubs = false)
+      .groupBy(col("x").as("u"), col("y").as("v"))
       .agg(count(lit(1)).as("c"))
     // pairCounts is referenced twice (percentile + filter) but NOT
     // persisted: AQE's exchange reuse dedupes the identical (u, v)
@@ -1099,72 +1094,25 @@ object Graph {
                              topN: Int = 20): DataFrame =
     linkPredictionOn(strongTieEdges(s, dir), topN)
 
-  /** Chunk bound for [[linkPredictionOn]]'s hub split: a neighbor
-    * list at or under this length explodes its C(deg, 2) candidate
-    * pairs directly in the aggregation stage (≤ ~8M pair-emits per
-    * list); a longer one — a hub — is cut into `chunk`-sized blocks
-    * whose C(k+1, 2) block pairs REDISTRIBUTE across the cluster
-    * before pair explosion, so no single task owns a hub's deg²
-    * work (guide §2.5: split the hot key). The redistribution
-    * exchange carries ~deg²/chunk block-row bytes per hub — 1/chunk
-    * of the pair volume — and nothing at all when no list exceeds
-    * the bound (every bench-scale list is far under it). */
-  private[ops] val linkPredChunk = 4096
-
   /** Generic variant over any unique undirected (u < v) edge frame.
     *
-    * NEIGHBOR-LIST formulation (r14, guide §2.4/§2.5): common-
-    * neighbor counting groups the adjacency ONCE by the shared-
-    * neighbor key into sorted neighbor arrays and generates the
-    * Σdeg² candidate pairs inside the aggregation stage (sorted-
-    * array slice-explode feeding the partial (x, y) count), so the
-    * wedge set never crosses an exchange. The retired formulation
-    * shuffled the 2|E| adjacency, sorted BOTH sides, sort-merge-
-    * joined it with itself (materializing the Σdeg² wedge rows as
-    * join output), and paid a separate groupBy(a) pass for degrees —
-    * here |Γa| = size(ns) falls out of the same neighbor-list frame
-    * because adjacency is symmetric. Hub skew is bounded by
-    * [[linkPredChunk]] (see its scaladoc); GraphSpec pins the
-    * chunked path ≡ the direct path with a forced tiny chunk. */
-  def linkPredictionOn(edges: DataFrame, topN: Int,
-                       chunk: Int = linkPredChunk): DataFrame = {
+    * Common-neighbor counting groups the adjacency ONCE by the shared
+    * neighbor into sorted neighbor lists whose candidate pairs come
+    * from [[PairGen.pairs]], so the wedge set never crosses an
+    * exchange; |Γa| = size(ns) falls out of the same neighbor-list
+    * frame because adjacency is symmetric. */
+  def linkPredictionOn(edges: DataFrame, topN: Int): DataFrame = {
     val e = edges
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val adj = e.select(col("u").as("a"), col("v").as("n"))
       .unionAll(e.select(col("v").as("a"), col("u").as("n")))
     val nbr = adj.groupBy(col("n"))
       .agg(sort_array(collect_list(col("a"))).as("ns"))
-      // read three ways (direct pairs, chunked pairs, degrees);
-      // cache lifetime: the boundedSharedCounts contract
+      // read by pair generation and degrees; cache lifetime: the
+      // boundedSharedCounts contract
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = nbr.select(col("n").as("a"), size(col("ns")).cast("long").as("d"))
-    // each unordered pair {x, y} ⊆ ns surfaces exactly once: ns is
-    // sorted and duplicate-free, element i pairs with elements i+1…
-    val direct = nbr.filter(size(col("ns")) <= chunk)
-      .select(posexplode(col("ns")).as(Seq("i", "x")), col("ns"))
-      .select(col("x"),
-        explode(slice(col("ns"), col("i") + lit(2), size(col("ns")))).as("y"))
-    // hub path: block (ci ≤ cj) pairs of chunk-sized slices, spread
-    // by (n, ci, cj) before explosion; same-block emits i < j pairs,
-    // cross-block emits the full cross (ca's values all < cb's — the
-    // blocks are consecutive slices of a sorted array)
-    val chunked = nbr.filter(size(col("ns")) > chunk)
-      .select(col("n"), col("ns"),
-        ceil(size(col("ns")).cast("double") / chunk).cast("int").as("k"))
-      .select(col("n"), col("ns"),
-        explode(expr("flatten(transform(sequence(0, k - 1), ci -> " +
-          "transform(sequence(ci, k - 1), cj -> " +
-          "struct(ci AS ci, cj AS cj))))")).as("cc"))
-      .select(col("n"), col("cc.ci").as("ci"), col("cc.cj").as("cj"),
-        slice(col("ns"), col("cc.ci") * chunk + 1, lit(chunk)).as("ca"),
-        slice(col("ns"), col("cc.cj") * chunk + 1, lit(chunk)).as("cb"))
-      .repartition(col("n"), col("ci"), col("cj"))
-      .select(posexplode(col("ca")).as(Seq("i", "x")),
-        when(col("ci") === col("cj"),
-          slice(col("ca"), col("i") + lit(2), size(col("ca"))))
-          .otherwise(col("cb")).as("ys"))
-      .select(col("x"), explode(col("ys")).as("y"))
-    val wedges = direct.unionAll(chunked)
+    val wedges = PairGen.pairs(nbr, col("ns"))
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("cn"))
     val cand = wedges.join(e.select(col("u").as("x"), col("v").as("y")),
       Seq("x", "y"), "left_anti")

@@ -83,4 +83,15 @@ class HarnessSpec extends AnyFunSuite {
       assert(sitesOf(gone).isEmpty, s"$gone is back in ${sitesOf(gone).mkString(", ")}")
     assert(sitesOf("newAPIHadoopFile") == Seq("KdcSource.scala"))
   }
+
+  test("src/main enumerates sorted-list pairs only in PairGen") {
+    // the tail slice of the pair pattern, slice(arr, <index> + 2, …),
+    // in the DataFrame form (any index name, `+ 2` or `+ lit(2)`) and
+    // the SQL-lambda form. TextAnalysis is the one allowed exception:
+    // its word-pair PMI lambda enumerates in-doc token pairs over a
+    // projection of the scan, and stays until it is routed through
+    // PairGen (ROADMAP item 3).
+    assert(sitesOf("""slice\([^,\n]+,\s*[^,\n]*\+\s*(lit\()?2\b""") ==
+      Seq("PairGen.scala", "TextAnalysis.scala"))
+  }
 }

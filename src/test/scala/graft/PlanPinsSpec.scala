@@ -28,11 +28,11 @@ class PlanPinsSpec extends AnyFunSuite {
       s"no shipdate pushdown:\n$p")
   }
 
-  test("posting self-join runs shuffled under AQE with skew-join armed") {
-    // Zipfian gram frequencies make the posting self-join the skew
-    // candidate; AQE's skew split is the documented first line of
-    // defense (Dedup scaladoc), so pin that it is actually armed and
-    // that the join is the shuffled (= skew-splittable) shape, not a
+  test("jaccard pairs: size joins run shuffled under AQE with skew-join armed") {
+    // postings fold into per-gram lists (no posting self-join); the
+    // joins left are the pair counts against the per-doc sizes, keyed
+    // by doc id. Pin that AQE's skew split is armed and that those
+    // joins are the shuffled (= skew-splittable) shape, not a
     // broadcast that skew handling cannot touch at corpus scale.
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")

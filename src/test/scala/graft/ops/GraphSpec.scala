@@ -144,16 +144,24 @@ class GraphSpec extends AnyFunSuite {
   test("link prediction: hub-chunked pair generation ≡ direct") {
     import spark.implicits._
     // hub 0 with 9 spokes (forces chunking at chunk=2: 5 blocks,
-    // 15 block pairs) plus a square and a path so candidates span
-    // hub wedges, two-common-neighbor pairs, and chains; chunk sizes
-    // 2 and 3 exercise both the even and ragged-tail block splits
+    // 15 block pairs) plus a square and a path so the wedges span
+    // hub lists, two-common-neighbor pairs, and chains; chunk sizes
+    // 2 and 3 exercise both the even and ragged-tail block splits.
+    // The neighbor lists are linkPredictionOn's: symmetric adjacency
+    // grouped by the shared neighbor.
     val edges = ((1L to 9L).map(i => (0L, i)) ++ Seq(
       (10L, 11L), (11L, 12L), (12L, 13L), (10L, 13L),
       (20L, 21L), (21L, 22L))).toDF("u", "v")
-    val want = Graph.linkPredictionOn(edges, topN = 100).collect().toSeq
+    val nbr = edges.select(col("u").as("a"), col("v").as("n"))
+      .unionAll(edges.select(col("v").as("a"), col("u").as("n")))
+      .groupBy(col("n")).agg(sort_array(collect_list(col("a"))).as("ns"))
+    def wedges(splitHubs: Boolean, chunk: Int) =
+      PairGen.pairs(nbr, col("ns"), splitHubs, chunk).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val want = wedges(splitHubs = false, PairGen.Chunk)
+    assert(want.size == 36 + 4 + 1, "hub C(9, 2), square 4 × 1, path 1")
     for (c <- Seq(2, 3)) {
-      val got = Graph.linkPredictionOn(edges, topN = 100, chunk = c)
-        .collect().toSeq
+      val got = wedges(splitHubs = true, c)
       assert(got == want, s"chunk=$c diverged:\ngot  $got\nwant $want")
     }
   }
