@@ -23,13 +23,13 @@ import graft.QueryDef
   * trailing partial session that must be dropped
   * (`KDCLogRecordReader.java:317-320`).
   *
-  * Every row that parses sessions uses the one split-aligned session
-  * reader ([[KdcSessionInputFormat]] + [[Sessionizer.sessionize]])
-  * through one of its two entry APIs: [[KdcSource.recordsAligned]]
+  * Every row that parses sessions reads the `kdclog` table, which runs
+  * the one split-aligned session reader ([[KdcSessionInputFormat]] +
+  * [[Sessionizer.sessionize]]): typed through [[KdcSource.recordsAligned]]
   * (default splits, except `kdc_parse_service_stats`, whose 256-byte
   * max splits force boundaries into the middle of sessions and lines,
-  * which the reader must repair) or the `kdclog` table (the `_v2` rows
-  * and `kdc_parse_service_stats_streaming`). `kdc_parse_user_stats_streaming`
+  * which the reader must repair), or directly (the `_v2` rows and
+  * `kdc_parse_service_stats_streaming`). `kdc_parse_user_stats_streaming`
   * alone is a line-level extractor, not a session parse.
   */
 object KdcParseQueries {
@@ -176,7 +176,7 @@ object KdcParseQueries {
     root.toString
   }
 
-  /** README #1+#2 over the split-aligned Dataset reader. `sfDir` is
+  /** README #1+#2 over the typed `kdclog` read. `sfDir` is
     * unused: the input is the embedded raw-log fixture. */
   def userStats(spark: SparkSession, sfDir: String): DataFrame =
     KdcQueries.userAuthStats(KdcSource.recordsAligned(spark, fixtureDir()))

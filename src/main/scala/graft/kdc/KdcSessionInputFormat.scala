@@ -11,9 +11,9 @@ import org.apache.hadoop.util.LineReader
 /** Split-aligned KDC *session* input: each record is the full text of
   * one multi-line session (all lines up to and including its
   * `sending N bytes` terminator), with byte-level split alignment —
-  * the one reader behind every KDC parse: [[KdcSource.recordsAligned]]
-  * and the `kdclog` table (batch and stream) both take their sessions
-  * from it, so a single log file larger than one task fans out across
+  * the one reader behind every KDC parse: the `kdclog` table (batch
+  * and stream, and the typed [[KdcSource.recordsAligned]] over it)
+  * takes its sessions from it, so a single log file larger than one task fans out across
   * tasks (SURVEY.md §7.4 #1) and a many-file fleet reads one split per
   * small file.
   *

@@ -1,6 +1,7 @@
 package graft.kdc
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Raw Heimdal KDC logs → `Dataset[KdcLogRecord]`.
   *
@@ -9,9 +10,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * (`KDCLogRecordReader.java:162-232`). This repo has the same reader,
   * [[KdcSessionInputFormat]]: every record it delivers is one complete
   * session, and [[Sessionizer.sessionize]] folds it. That pair is the
-  * only way the engine turns log bytes into records; it has two entry
-  * APIs, [[recordsAligned]] here and the `kdclog` DataSourceV2 table
-  * ([[graft.kdc.v2.KdcLogTableProvider]], batch and stream).
+  * only way the engine turns log bytes into records, and the `kdclog`
+  * DataSourceV2 table ([[graft.kdc.v2.KdcLogTableProvider]], batch and
+  * stream) is the one place that plans its splits and builds its rows;
+  * [[recordsAligned]] is a typed batch read of that table.
   *
   * Scale posture: no shuffle. Parallelism = number of splits, so a
   * single multi-GB log fans out across tasks, and so does a
@@ -20,23 +22,20 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object KdcSource {
 
-  /** Split-aligned session reading via [[KdcSessionInputFormat]]:
-    * each record arriving from the input format is one complete
-    * session blob, folded independently. `maxSplitBytes` exists for
-    * tests that force split boundaries into awkward byte positions. */
+  /** The `kdclog` batch read of `path` (a file, directory or glob) as
+    * typed records. Layout-discovered `k=v` partition columns are
+    * projected away, so the schema is [[KdcLogRecord]]'s on every
+    * layout. An empty directory reads as empty; a path or glob that
+    * matches nothing fails with `FileNotFoundException` when it runs.
+    * `maxSplitBytes` is the table's reader option of that name; tests
+    * use it to force split boundaries into awkward byte positions. */
   def recordsAligned(spark: SparkSession, path: String,
                      maxSplitBytes: Option[Long] = None): Dataset[KdcLogRecord] = {
     import spark.implicits._
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    maxSplitBytes.foreach(b =>
-      conf.setLong("mapreduce.input.fileinputformat.split.maxsize", b))
-    val rdd = spark.sparkContext.newAPIHadoopFile(
-      path, classOf[KdcSessionInputFormat],
-      classOf[org.apache.hadoop.io.LongWritable],
-      classOf[org.apache.hadoop.io.Text], conf)
-    spark.createDataset(rdd.map(_._2.toString))
-      .flatMap(blob => Sessionizer.sessionize(blob.linesIterator))
+    val reader = spark.read.format("kdclog")
+    maxSplitBytes.foreach(b => reader.option("maxSplitBytes", b))
+    reader.load(path).select(graft.kdc.v2.KdcLogTable.schema.fieldNames.map(col): _*)
+      .as[KdcLogRecord]
   }
 
   /** Convenience for tests / small inputs: sessionize pre-collected lines

@@ -8,9 +8,9 @@ import scala.collection.AbstractIterator
   * semantics of the reference's `nextKeyValue` state machine
   * (`/root/reference/.../KDCLogRecordReader.java:209-324`) are
   * unit-testable without a SparkSession. Every log-file parse in the
-  * engine feeds it the session blobs of [[KdcSessionInputFormat]],
-  * through [[KdcSource.recordsAligned]] or the `kdclog` table (batch
-  * and stream). Each blob ends at its `sending` line, so state never
+  * engine feeds it the session blobs of [[KdcSessionInputFormat]]
+  * inside the `kdclog` table's reader (batch and stream; the typed
+  * [[KdcSource.recordsAligned]] reads that table). Each blob ends at its `sending` line, so state never
   * crosses a blob, a split or a file. Behaviors preserved:
   *
   *  - a `sending N bytes` line completes and emits the current record —

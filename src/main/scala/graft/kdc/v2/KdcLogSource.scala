@@ -12,8 +12,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
-import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering}
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning => V2Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
@@ -177,8 +176,12 @@ object KdcLogTable {
     "graft.kdc.lookback.bytes", "graft.kdc.bz2.lookback.bytes",
     "mapreduce.input.fileinputformat.split.maxsize")
 
-  private[v2] def confPairs(options: Map[String, String]): Seq[(String, String)] =
-    ForwardedKeys.flatMap(k => options.get(k).map(k -> _)) ++
+  /** The session's Hadoop configuration with the reader options'
+    * forwarded keys overlaid (options win): what split planning, scan
+    * statistics and the executor-side readers all read. */
+  private[v2] def hadoopConf(options: Map[String, String]): Configuration = {
+    val conf = new Configuration(SparkSession.active.sparkContext.hadoopConfiguration)
+    val pairs = ForwardedKeys.flatMap(k => options.get(k).map(k -> _)) ++
       // reader option alias: maxSplitBytes -> the Hadoop split bound
       options.get("maxSplitBytes")
         .map("mapreduce.input.fileinputformat.split.maxsize" -> _) ++
@@ -186,6 +189,9 @@ object KdcLogTable {
       // in the batch path; the streaming lister honors it natively
       options.get("recursive")
         .map("mapreduce.input.fileinputformat.input.dir.recursive" -> _)
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
 
   /** The executor-side reader Configuration: the FULL session Hadoop
     * configuration (fs credentials / custom schemes / session-level
@@ -199,10 +205,8 @@ object KdcLogTable {
     * window tears sessions at split boundaries). */
   private[v2] def readerConf(options: Map[String, String])
       : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] = {
-    val sc = SparkSession.active.sparkContext
-    val conf = new Configuration(sc.hadoopConfiguration)
-    confPairs(options).foreach { case (k, v) => conf.set(k, v) }
-    sc.broadcast(new org.apache.spark.util.SerializableConfiguration(conf))
+    SparkSession.active.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf(options)))
   }
 }
 
@@ -549,8 +553,7 @@ class KdcScan(val path: String, options: Map[String, String],
               listingSnapshot: Option[Seq[KdcFileLayout.KdcFileMeta]] = None,
               val pushedLimit: Option[Int] = None,
               val pushedTopN: Option[KdcTopN] = None)
-    extends Scan with SupportsReportStatistics with SupportsRuntimeFiltering
-    with SupportsReportPartitioning {
+    extends Scan with SupportsReportStatistics with SupportsRuntimeFiltering {
 
   /** Layout-discovered partition columns = table schema minus the base
     * record fields (order preserved). */
@@ -617,39 +620,6 @@ class KdcScan(val path: String, options: Map[String, String],
         KdcFilterEval.supports(partKeys.toSet, f))
   }
 
-  /** Storage-partitioned-join surface (`SupportsReportPartitioning`),
-    * OPT-IN via the `reportPartitioning` reader option: the scan
-    * reports `KeyGroupedPartitioning` over the layout's partition
-    * columns and every split carries its key ([[HasPartitionKey]]),
-    * so with `spark.sql.sources.v2.bucketing.enabled=true` a join or
-    * aggregation clustered on those columns plans with NO shuffle on
-    * the parse side — two day-partitioned fleets join day-to-day with
-    * zero exchange. The trade (why it is opt-in): Spark coalesces all
-    * splits of one key tuple into ONE task, so intra-day split
-    * parallelism is given up for the exchange-free plan; right when
-    * the day count dwarfs the cluster, wrong for a single hot day.
-    * Requires a consistent `k=v` layout (partition columns are only
-    * inferred when consistent, so every planned file carries values). */
-  override def outputPartitioning(): V2Partitioning =
-    if (reportPartitioning && partKeys.nonEmpty) plannerListing match {
-      case Some(files) =>
-        val conf = new Configuration(SparkSession.active.sparkContext.hadoopConfiguration)
-        KdcLogTable.confPairs(options).foreach { case (k, v) => conf.set(k, v) }
-        val values = KdcFileLayout.partValuesAll(path, files.map(_.path), partKeys, conf)
-        val partOnly = effectiveFilters.filter(f =>
-          f.references.nonEmpty && f.references.forall(partKeys.contains))
-        val kept = files.filter(st =>
-          KdcFilterEval.matchesPartition(partOnly.toSeq, values(st.path)))
-        val groups = kept.map(st => partKeys.map(values(st.path).getOrElse(_, null))).distinct.size
-        new KeyGroupedPartitioning(
-          partKeys.map(k => Expressions.identity(k)).toArray, math.max(groups, 1))
-      case None => new UnknownPartitioning(0)
-    }
-    else new UnknownPartitioning(0)
-
-  private def reportPartitioning: Boolean =
-    options.get("reportPartitioning").exists(_.toBoolean)
-
   /** Listing backing [[estimateStatistics]]: schema inference's
     * snapshot when the provider handed one over, else ONE lenient walk
     * — shared with [[toBatch]], so consulting statistics never adds a
@@ -689,15 +659,10 @@ class KdcScan(val path: String, options: Map[String, String],
         override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
       }
     case Some(files) =>
-      val conf = new Configuration(SparkSession.active.sparkContext.hadoopConfiguration)
-      KdcLogTable.confPairs(options).foreach { case (k, v) => conf.set(k, v) }
-      val partOnly = effectiveFilters.filter(f =>
-        f.references.nonEmpty && f.references.forall(partKeys.contains))
-      val values = KdcFileLayout.partValuesAll(path, files.map(_.path), partKeys, conf)
-      val kept = files.filter(st =>
-        KdcFilterEval.matchesPartition(partOnly.toSeq, values(st.path)))
+      val conf = KdcLogTable.hadoopConf(options)
+      val kept = KdcBatch.prunedFiles(files, path, partKeys, effectiveFilters, conf)
       val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-      val rawBytes = kept.iterator.map { st =>
+      val rawBytes = kept.iterator.map { case (st, _) =>
         if (codecs.getCodec(st.path) != null)
           st.len * KdcBatch.CompressedExpansionFactor
         else st.len
@@ -768,12 +733,27 @@ object KdcBatch {
   private[v2] def planSplits(inputPaths: Seq[Path], options: Map[String, String],
                              tablePath: String, partKeys: Seq[String],
                              filters: Array[Filter]): Array[InputPartition] = {
-    val conf = new Configuration(SparkSession.active.sparkContext.hadoopConfiguration)
-    KdcLogTable.confPairs(options).foreach { case (k, v) => conf.set(k, v) }
+    val conf = KdcLogTable.hadoopConf(options)
     val recursive = options.get("recursive").exists(_.toBoolean)
     val files = inputPaths.flatMap(p =>
       KdcFileLayout.listFiles(p.toString, recursive, conf, strict = true))
     splitsForListed(files, options, tablePath, partKeys, filters)
+  }
+
+  /** The files of `files` whose partition-path values pass the
+    * partition-only predicates among `filters`, each with its values.
+    * A predicate over partition columns only holds the same verdict
+    * for every row of a file, so UNKNOWN/FALSE files are skipped
+    * without being opened. `tablePath` anchors segment extraction. */
+  private[v2] def prunedFiles(files: Seq[KdcFileLayout.KdcFileMeta], tablePath: String,
+                              partKeys: Seq[String], filters: Array[Filter],
+                              conf: Configuration)
+      : Seq[(KdcFileLayout.KdcFileMeta, Map[String, String])] = {
+    val partOnly = filters.toSeq.filter(f =>
+      f.references.nonEmpty && f.references.forall(partKeys.contains))
+    val values = KdcFileLayout.partValuesAll(tablePath, files.map(_.path), partKeys, conf)
+    files.map(st => st -> values(st.path))
+      .filter { case (_, v) => KdcFilterEval.matchesPartition(partOnly, v) }
   }
 
   /** [[planSplits]] minus the walk — for callers that already hold the
@@ -784,18 +764,8 @@ object KdcBatch {
                                   tablePath: String, partKeys: Seq[String],
                                   filters: Array[Filter]): Array[InputPartition] = {
     val spark = SparkSession.active
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    KdcLogTable.confPairs(options).foreach { case (k, v) => conf.set(k, v) }
-
-    // whole-file pruning: a predicate over partition columns only holds
-    // the same verdict for every row of a file, so UNKNOWN/FALSE files
-    // are skipped without being opened
-    val partOnly = filters.filter(f =>
-      f.references.nonEmpty && f.references.forall(partKeys.contains))
-    val values: Map[Path, Map[String, String]] =
-      KdcFileLayout.partValuesAll(tablePath, files.map(_.path), partKeys, conf)
-    val kept = files.filter(st =>
-      KdcFilterEval.matchesPartition(partOnly, values(st.path)))
+    val conf = KdcLogTable.hadoopConf(options)
+    val kept = prunedFiles(files, tablePath, partKeys, filters, conf)
 
     val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
     def codecOf(p: Path) = Option(codecs.getCodec(p))
@@ -805,14 +775,13 @@ object KdcBatch {
     val minSize = conf.getLong("mapreduce.input.fileinputformat.split.minsize", 1L)
     val explicitMax = Option(conf.get("mapreduce.input.fileinputformat.split.maxsize"))
       .map(_.toLong)
-    val compressedSplittable = kept.filter(st => isSplittableCompressed(st.path))
+    val compressedSplittable = kept.map(_._1).filter(st => isSplittableCompressed(st.path))
     val derivedCompressedMax =
       if (compressedSplittable.isEmpty) None
       else Some(defaultCompressedSplitBytes(compressedSplittable.map(_.len).max,
         spark.sparkContext.defaultParallelism))
 
-    val keyOrder = partKeys.toArray
-    kept.flatMap { st =>
+    kept.flatMap { case (st, values) =>
       val path = st.path
       val len = st.len
       def hosts(offset: Long): Array[String] = {
@@ -830,7 +799,7 @@ object KdcBatch {
       val splittable = codecOf(path).forall(
         _.isInstanceOf[org.apache.hadoop.io.compress.SplittableCompressionCodec])
       if (len == 0 || !splittable)
-        Seq(KdcInputPartition(path.toString, 0, len, hosts(0), values(path), keyOrder))
+        Seq(KdcInputPartition(path.toString, 0, len, hosts(0), values))
       else {
         val maxSize = explicitMax.orElse(
           if (isSplittableCompressed(path)) derivedCompressedMax else None)
@@ -840,12 +809,12 @@ object KdcBatch {
         var remaining = len
         while (remaining.toDouble / splitSize > SplitSlop) {
           val start = len - remaining
-          out += KdcInputPartition(path.toString, start, splitSize, hosts(start), values(path), keyOrder)
+          out += KdcInputPartition(path.toString, start, splitSize, hosts(start), values)
           remaining -= splitSize
         }
         if (remaining != 0) {
           val start = len - remaining
-          out += KdcInputPartition(path.toString, start, remaining, hosts(start), values(path), keyOrder)
+          out += KdcInputPartition(path.toString, start, remaining, hosts(start), values)
         }
         out.toSeq
       }
@@ -878,21 +847,12 @@ class KdcBatch(path: String, options: Map[String, String], partKeys: Seq[String]
 }
 
 /** One byte range of one log file (serializable — shipped to
-  * executors), carrying the file's partition-column values.
-  * `keyOrder` is the layout's partition-column order; it backs
-  * [[HasPartitionKey]] so splits can be key-grouped when the scan
-  * reports [[KeyGroupedPartitioning]] (opt-in — see
-  * [[KdcScan.outputPartitioning]]); Spark never consults
-  * `partitionKey()` otherwise. */
+  * executors), carrying the file's partition-column values. */
 case class KdcInputPartition(path: String, start: Long, length: Long,
                              locations: Array[String],
-                             partValues: Map[String, String],
-                             keyOrder: Array[String] = Array.empty)
-    extends InputPartition with HasPartitionKey {
+                             partValues: Map[String, String])
+    extends InputPartition {
   override def preferredLocations(): Array[String] = locations
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(keyOrder.map(k =>
-      partValues.get(k).map(UTF8String.fromString).orNull: Any))
 }
 
 case class KdcReaderFactory(
@@ -1728,9 +1688,7 @@ class KdcMicroBatchStream(path: String, options: Map[String, String],
       // since). Restart replay plans from a fresh stream instance
       // whose listing is empty — those fall back to per-file listing.
       val known = prepared.orElse(lastListing).getOrElse(Map.empty)
-      val conf = new Configuration(
-        SparkSession.active.sparkContext.hadoopConfiguration)
-      KdcLogTable.confPairs(options).foreach { case (k, v) => conf.set(k, v) }
+      val conf = KdcLogTable.hadoopConf(options)
       val metas = fresh.map { p =>
         known.getOrElse(p,
           KdcFileLayout.listFiles(p, recursive = false, conf, strict = true) match {

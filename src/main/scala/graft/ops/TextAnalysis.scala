@@ -376,13 +376,15 @@ object TextAnalysis {
     * candidates). `minCoDf` drops pairs with too little evidence —
     * sparse pairs otherwise dominate the PMI ranking on noise.
     *
-    * Scale posture: per-doc pairs are generated IN THE SCAN STAGE by a
-    * nested-HOF combination over the sorted distinct token array — no
+    * Scale posture: per-doc pairs are generated IN THE SCAN STAGE by
+    * [[PairGen.pairs]] over the sorted distinct token array — no
     * self-join of the exploded token table, so nothing doc-sized ever
     * shuffles twice; what shuffles is the (tok_a, tok_b) pair stream
-    * into one map-side-combining groupBy. Pair volume is Σ C(v_d, 2)
-    * over per-doc distinct counts v_d — bounded by windowed
-    * co-occurrence in real corpora (and by the tiny vocab here). The
+    * into one map-side-combining groupBy. The lists are a projection
+    * of the scan, so the hub split stays off: its second read would
+    * scan the corpus twice. Pair volume is Σ C(v_d, 2) over per-doc
+    * distinct counts v_d — bounded by windowed co-occurrence in real
+    * corpora (and by the tiny vocab here). The
     * final ranking is a TakeOrderedAndProject over the vocab² pair
     * table, never a global sort. */
   def pmiPairs(s: SparkSession, dir: String,
@@ -399,15 +401,12 @@ object TextAnalysis {
       explode(array_distinct(col("t"))).as("tok"))
     val dfreq = dt.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = base.agg(count(lit(1)).as("n"))
-    val pairs = base
+    val lists = base
       .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), array_sort(array_distinct(col("t"))).as("sd"))
+      .select(array_sort(array_distinct(col("t"))).as("sd"))
       .filter(size(col("sd")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        """flatten(transform(sequence(0, size(sd) - 2),
-          |  i -> transform(slice(sd, i + 2, size(sd) - i - 1),
-          |    x -> named_struct('tok_a', element_at(sd, i + 1), 'tok_b', x))))""".stripMargin)).as("p"))
-      .select(col("p.tok_a").as("tok_a"), col("p.tok_b").as("tok_b"))
+    val pairs = PairGen.pairs(lists, col("sd"), splitHubs = false)
+      .select(col("x").as("tok_a"), col("y").as("tok_b"))
     val co = pairs.groupBy(col("tok_a"), col("tok_b"))
       .agg(count(lit(1)).as("co_df"))
       .filter(col("co_df") >= minCoDf)

@@ -603,12 +603,10 @@ object ScaleProbe {
 
     // --kdc-scale: parse-path throughput on ONE large synthetic log
     // file — the few-huge-files layout the split-aligned reader exists
-    // for. Compares (a) recordsAligned() [byte-aligned splits, zero
-    // shuffle], (b) the V2 table full-scan, (c) the V2 table with
-    // realm+reqtype pushdown and (client, ts) pruning [predicates
-    // evaluate on the typed session record BEFORE row
-    // materialization], and (d) the same query with post-parse Spark
-    // filters over (a) — the baseline (c)'s pushdown must beat.
+    // for. Compares (a) the V2 table full-scan [byte-aligned splits,
+    // zero shuffle] and (b) the V2 table with realm+reqtype pushdown
+    // and (client, ts) pruning [predicates evaluate on the typed
+    // session record BEFORE row materialization].
     if (args.contains("--kdc-scale")) {
       val nSessions = args.collectFirst {
         case a if a.startsWith("--sessions=") => a.stripPrefix("--sessions=").toInt
@@ -625,16 +623,10 @@ object ScaleProbe {
         }.min
         println(f"KDCSCALE $label,$tMin%.2f")
       }
-      import graft.kdc.KdcSource
       val realm = "SQUILL.DEMENTIA.ORG"
-      time("records_aligned")(KdcSource.recordsAligned(spark, dir).toDF())
       time("v2_full_scan")(spark.read.format("kdclog").load(dir))
       time("v2_pushdown_scoped")(
         spark.read.format("kdclog").load(dir)
-          .filter(col("crealm") === realm && col("req_type") === "AUTH")
-          .select(col("client"), col("ts")))
-      time("aligned_postparse_scoped")(
-        KdcSource.recordsAligned(spark, dir).toDF()
           .filter(col("crealm") === realm && col("req_type") === "AUTH")
           .select(col("client"), col("ts")))
       // the splittable-compressed posture: ONE multi-block .bz2 of the

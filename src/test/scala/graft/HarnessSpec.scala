@@ -78,20 +78,17 @@ class HarnessSpec extends AnyFunSuite {
 
   test("src/main parses KDC logs only through the split-aligned session reader") {
     // no line-level Hadoop text input, no whole-file text rows, no
-    // by-file fold; the one Hadoop file read is KdcSource.recordsAligned
-    for (gone <- Seq("TextInputFormat", "wholetext", "sessionizeByFile"))
+    // by-file fold, and no Hadoop file read beside the kdclog table's
+    // split planner (KdcSource.recordsAligned reads that table)
+    for (gone <- Seq("TextInputFormat", "wholetext", "sessionizeByFile", "newAPIHadoopFile"))
       assert(sitesOf(gone).isEmpty, s"$gone is back in ${sitesOf(gone).mkString(", ")}")
-    assert(sitesOf("newAPIHadoopFile") == Seq("KdcSource.scala"))
   }
 
   test("src/main enumerates sorted-list pairs only in PairGen") {
     // the tail slice of the pair pattern, slice(arr, <index> + 2, …),
     // in the DataFrame form (any index name, `+ 2` or `+ lit(2)`) and
-    // the SQL-lambda form. TextAnalysis is the one allowed exception:
-    // its word-pair PMI lambda enumerates in-doc token pairs over a
-    // projection of the scan, and stays until it is routed through
-    // PairGen (ROADMAP item 3).
+    // the SQL-lambda form
     assert(sitesOf("""slice\([^,\n]+,\s*[^,\n]*\+\s*(lit\()?2\b""") ==
-      Seq("PairGen.scala", "TextAnalysis.scala"))
+      Seq("PairGen.scala"))
   }
 }

@@ -74,9 +74,9 @@ class KdcParseQueriesSpec extends AnyFunSuite {
 
   test("KdcMain --report modes emit the expected TSVs") {
     val dir = KdcParseQueries.fixtureDir()
-    def run(report: String): Seq[String] = {
+    def run(report: String, realm: String*): Seq[String] = {
       val out = s"target/scratch/kdcmain_$report"
-      KdcMain.main(Array(dir, out, s"--report=$report"))
+      KdcMain.main(Array(dir, out, s"--report=$report") ++ realm)
       val files = new java.io.File(out).listFiles()
         .filter(_.getName.startsWith("part-"))
       files.flatMap(f =>
@@ -90,15 +90,10 @@ class KdcParseQueriesSpec extends AnyFunSuite {
       "BAD_AUTHENTICATION", "BAD_NAME", "BAD_PARAMETERS", "BAD_PASSWORD",
       "MISSING_PREAUTH", "UNKNOWN", "UNUSABLE_NAME"))
     assert(run("user-enctypes").exists(_.startsWith("plain\tUNK\t1")))
-    // --v2 routes the same report through the DataSourceV2 table with a
-    // scoped realm pushed into the parse: the foreign-realm visitor
-    // must drop, everything else bit-identical to the scoped oracle
-    val outV2 = "target/scratch/kdcmain_user_v2"
-    KdcMain.main(Array(dir, outV2, "SQUILL.DEMENTIA.ORG", "--v2"))
-    val v2Lines = new java.io.File(outV2).listFiles()
-      .filter(_.getName.startsWith("part-"))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines()).toSeq.sorted
-    assert(v2Lines == Seq(
+    // a realm scopes the user report, pushed into the parse: the
+    // foreign-realm visitor must drop, everything else bit-identical
+    // to the scoped oracle
+    assert(run("user", "SQUILL.DEMENTIA.ORG") == Seq(
       "alice\t2015-11-22T17:00:00\t2015-11-23T07:00:00\t2",
       "cg2v\t2015-11-22T15:25:20\t2015-11-22T16:10:00\t2",
       "plain\t2015-11-23T08:00:00\t2015-11-23T08:00:00\t1"))
@@ -113,12 +108,23 @@ class KdcParseQueriesSpec extends AnyFunSuite {
     // 10 AS sessions (host1, incl. the foreign-realm visitor) + 8 TGS
     // sessions (host2; trailing partial dropped), all field-distinct → 18.
     assert(a == b && a.size == 18)
+    // the same files as a host=…/day=… fleet, read through a glob: the
+    // table's partition columns are projected away
+    val fleet = KdcSource.recordsAligned(spark, s"${KdcParseQueries.fleetFixtureDir()}/*/*/kdc.log")
+    assert(fleet.schema == org.apache.spark.sql.Encoders.product[KdcLogRecord].schema)
+    assert(fleet.collect().toSet == a)
+    // an empty directory reads as empty; a path that matches nothing fails
+    val empty = new java.io.File("target/scratch/kdc_empty_dir")
+    empty.mkdirs()
+    assert(KdcSource.recordsAligned(spark, empty.getPath).collect().isEmpty)
+    intercept[java.io.FileNotFoundException](
+      KdcSource.recordsAligned(spark, s"${empty.getPath}/missing.log").collect())
   }
 
-  /** Every split-aligned entry API — the Dataset reader at 256 B, 2 KiB
-    * and default splits, the `kdclog` batch read and the `kdclog`
-    * stream — returns exactly the records of [[Sessionizer.sessionize]]
-    * run on each file alone. Both files of the dangling dir end in a
+  /** Every split-aligned entry — the typed `kdclog` batch read
+    * ([[KdcSource.recordsAligned]]) at 256 B, 2 KiB and default
+    * splits, and the `kdclog` stream — returns exactly the records of
+    * [[Sessionizer.sessionize]] run on each file alone. Both files of the dangling dir end in a
     * header and an error line with no `sending`: a parse that carried
     * state across the file boundary, in either file order, would hand
     * that error to the other file's clean first session. */
@@ -153,7 +159,6 @@ class KdcParseQueriesSpec extends AnyFunSuite {
         "recordsAligned 256 B" -> KdcSource.recordsAligned(spark, dir, Some(256L)).collect().toSeq,
         "recordsAligned 2 KiB" -> KdcSource.recordsAligned(spark, dir, Some(2048L)).collect().toSeq,
         "recordsAligned default" -> KdcSource.recordsAligned(spark, dir).collect().toSeq,
-        "kdclog batch" -> spark.read.format("kdclog").load(dir).as[KdcLogRecord].collect().toSeq,
         "kdclog stream" -> stream.as[KdcLogRecord].collect().toSeq)
     }
     for ((dir, files, n) <- Seq(
@@ -178,7 +183,8 @@ class KdcParseQueriesSpec extends AnyFunSuite {
     }
     val (reason, usage) = e.getMessage.splitAt(e.getMessage.indexOf('\n'))
     assert(reason == why)
-    assert(usage.contains("usage: KdcMain") && !usage.contains("--aligned"), usage)
+    assert(usage.contains("usage: KdcMain") && !usage.contains("--aligned") &&
+      !usage.contains("--v2"), usage)
     assert(!out.exists(), s"a rejected run created $out")
   }
 
@@ -186,15 +192,33 @@ class KdcParseQueriesSpec extends AnyFunSuite {
     assertRejected("--aligned")("unknown flag --aligned")
   }
 
-  test("KdcMain rejects --recursive without --v2") {
-    assertRejected("--recursive")("--recursive requires --v2")
+  test("KdcMain rejects the removed --v2 as an unknown flag") {
+    assertRejected("--v2")("unknown flag --v2")
   }
 
-  test("KdcMain rejects --scope without --v2") {
-    assertRejected("--scope=day=2015-11-22")("--scope requires --v2")
+  test("KdcMain rejects a positional argument after the realm") {
+    assertRejected("SQUILL.DEMENTIA.ORG", "extra")(
+      "unexpected argument extra (at most <input> <outdir> [realm])")
   }
 
   test("KdcMain rejects an unknown --report") {
-    assertRejected("--v2", "--report=bogus")("unknown --report=bogus")
+    assertRejected("--report=bogus")("unknown --report=bogus")
+  }
+
+  test("KdcMain --recursive --scope writes the day-scoped TSV of a fleet") {
+    // the fleet keeps host1's AS traffic under day=2015-11-22 and
+    // host2's TGS traffic under day=2015-11-23, so the day-scoped user
+    // report is host1's, the foreign-realm visitor included
+    val out = "target/scratch/kdcmain_scoped_fleet"
+    KdcMain.main(Array(KdcParseQueries.fleetFixtureDir(), out,
+      "--recursive", "--scope=day=2015-11-22"))
+    val lines = new java.io.File(out).listFiles()
+      .filter(_.getName.startsWith("part-"))
+      .flatMap(f => scala.io.Source.fromFile(f).getLines()).toSeq.sorted
+    assert(lines == Seq(
+      "alice\t2015-11-22T17:00:00\t2015-11-23T07:00:00\t2",
+      "cg2v\t2015-11-22T15:25:20\t2015-11-22T16:10:00\t2",
+      "plain\t2015-11-23T08:00:00\t2015-11-23T08:00:00\t1",
+      "visitor\t2015-11-23T09:00:00\t2015-11-23T09:00:00\t1"))
   }
 }

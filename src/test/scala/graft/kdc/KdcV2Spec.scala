@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.kdc.v2.{KdcScan, KdcScanBuilder, KdcTopN}
 
 /** The DataSourceV2 log table ([[graft.kdc.v2.KdcLogTableProvider]]):
-  * result parity with the Dataset reader, predicate pushdown
+  * result parity with the per-file fold, predicate pushdown
   * and column pruning reaching the scan, split alignment under
   * adversarial split sizes, and multi-batch streaming admission. */
 class KdcV2Spec extends AnyFunSuite {
@@ -172,7 +172,7 @@ class KdcV2Spec extends AnyFunSuite {
     assert(got == want, "split-compressed V2 parse diverged from the in-memory fold")
   }
 
-  test("KdcMain --v2 plan: the realm filter pushes into the scan despite the counters observe") {
+  test("KdcMain plan: realm filter pushes into the scan despite the counters observe") {
     // the realm must be applied BEFORE withCounters — Catalyst does
     // not push predicates through CollectMetrics, so filtering after
     // the observe would evaluate realm post-scan and the advertised
@@ -181,12 +181,13 @@ class KdcV2Spec extends AnyFunSuite {
       "user", useV2 = true, aligned = false)
     val scan = kdcScan(q)
     assert(scan.pushedFilters.mkString.contains("EqualTo(crealm,SQUILL.DEMENTIA.ORG)"),
-      s"realm not pushed on the CLI --v2 plan: ${scan.pushedFilters.mkString(", ")}")
-    // and the report equals the default source's scoped report
-    val viaV2 = q.collect().map(_.toString).toSeq
-    val viaDefault = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"),
-      "user", useV2 = false, aligned = false).collect().map(_.toString).toSeq
-    assert(viaV2 == viaDefault)
+      s"realm not pushed on the CLI plan: ${scan.pushedFilters.mkString(", ")}")
+    // and the report equals the scoped report over the per-file fold
+    val byFile = Seq(KdcParseQueries.host1Log, KdcParseQueries.host2Log)
+      .map(f => KdcSource.fromLines(spark, f.linesIterator.toSeq)).reduce(_ union _)
+    val viaRef = KdcQueries.userAuthStats(byFile, Some("SQUILL.DEMENTIA.ORG"))
+      .select("client", "first_ts", "last_ts", "n_auth")
+    assert(q.collect().map(_.toString).toSeq == viaRef.collect().map(_.toString).toSeq)
     // service reports scope the SERVICE realm
     val svc = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"),
       "service", useV2 = true, aligned = false)
@@ -217,12 +218,6 @@ class KdcV2Spec extends AnyFunSuite {
       .collect().map(_.getString(0)).sorted
     assert(scopedTsv.nonEmpty && scopedTsv.toSeq == wantTsv.toSeq,
       s"scoped TSV diverged:\n${scopedTsv.mkString("\n")}\nvs\n${wantTsv.mkString("\n")}")
-    // scope without --v2 fails loudly — the default source has no
-    // partition columns to filter
-    intercept[IllegalArgumentException] {
-      KdcMain.buildReport(spark, root, None, "user",
-        useV2 = false, aligned = false, scope = Map("day" -> "x"))
-    }
   }
 
   test("partition-path pruning: day-scoped query never opens the other day's file") {
@@ -1310,41 +1305,5 @@ class KdcV2Spec extends AnyFunSuite {
       assert(kdcScan(huge).pushedTopN.isEmpty,
         "pushTopN must refuse an unbounded heap")
     } finally graft.kdc.v2.KdcPartitionReader.emitTap.set(null)
-  }
-
-  test("reportPartitioning: key-grouped scans aggregate and join day-to-day with ZERO shuffle") {
-    val root = KdcParseQueries.fleetFixtureDir()
-    val vKey = "spark.sql.sources.v2.bucketing.enabled"
-    val bKey = "spark.sql.autoBroadcastJoinThreshold"
-    val savedV = spark.conf.get(vKey)
-    val savedB = spark.conf.get(bKey)
-    spark.conf.set(vKey, "true")
-    spark.conf.set(bKey, "-1") // force the join to prove co-partitioning, not broadcast
-    try {
-      def read() = spark.read.format("kdclog")
-        .option("recursive", "true").option("reportPartitioning", "true").load(root)
-      // aggregation clustered on the partition keys: satisfied by the
-      // scan's KeyGroupedPartitioning — no exchange anywhere
-      val agg = read().groupBy(col("host"), col("day")).agg(count(lit(1)).as("n"))
-      val aggRows = agg.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      assert(aggRows.map(t => (t._1, t._2)).sorted.toSeq ==
-        Seq(("hostA", "2015-11-22"), ("hostB", "2015-11-23")))
-      val aggPlan = agg.queryExecution.executedPlan.toString
-      assert(!aggPlan.contains("Exchange"),
-        s"key-grouped aggregation still shuffled:\n$aggPlan")
-      // storage-partitioned JOIN: two independent parses of the fleet,
-      // aggregated per (host, day), join co-partitioned with no shuffle
-      val a = read().groupBy(col("host"), col("day")).agg(count(lit(1)).as("n"))
-      val b = read().groupBy(col("host"), col("day")).agg(max(col("ts")).as("last_ts"))
-      val j = a.join(b, Seq("host", "day"))
-      val got = j.collect()
-      assert(got.length == 2, s"SPJ join row count: ${got.length}")
-      val jPlan = j.queryExecution.executedPlan.toString
-      assert(!jPlan.contains("ShuffleExchange"),
-        s"storage-partitioned join still shuffled:\n$jPlan")
-    } finally {
-      spark.conf.set(vKey, savedV)
-      spark.conf.set(bKey, savedB)
-    }
   }
 }
