@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The logs are read through the `kdclog` DataSourceV2 table
   * ([[graft.kdc.v2.KdcLogTableProvider]]), which parses with the
-  * split-aligned session reader ([[KdcSessionInputFormat]], incl.
+  * split-aligned session reader ([[KdcSessionReader]], incl.
   * splittable bzip2). The realm argument's filter PUSHES into the
   * parse scan (foreign-realm sessions are never materialized). To
   * make that pushdown real the realm filter is applied BEFORE the

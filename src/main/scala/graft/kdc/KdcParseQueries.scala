@@ -24,7 +24,7 @@ import graft.QueryDef
   * (`KDCLogRecordReader.java:317-320`).
   *
   * Every row that parses sessions reads the `kdclog` table, which runs
-  * the one split-aligned session reader ([[KdcSessionInputFormat]] +
+  * the one split-aligned session reader ([[KdcSessionReader]] +
   * [[Sessionizer.sessionize]]): typed through [[KdcSource.recordsAligned]]
   * (default splits, except `kdc_parse_service_stats`, whose 256-byte
   * max splits force boundaries into the middle of sessions and lines,

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions.col
   * The reference reads logs through a custom Hadoop `RecordReader` that
   * seeks to split starts and reads one record past the split end
   * (`KDCLogRecordReader.java:162-232`). This repo has the same reader,
-  * [[KdcSessionInputFormat]]: every record it delivers is one complete
-  * session, and [[Sessionizer.sessionize]] folds it. That pair is the
-  * only way the engine turns log bytes into records, and the `kdclog`
+  * [[KdcSessionReader]]: it delivers the lines a split owns, whole
+  * sessions only, and [[Sessionizer.sessionize]] folds them. That pair
+  * is the only way the engine turns log bytes into records, and the `kdclog`
   * DataSourceV2 table ([[graft.kdc.v2.KdcLogTableProvider]], batch and
   * stream) is the one place that plans its splits and builds its rows;
   * [[recordsAligned]] is a typed batch read of that table.

@@ -8,10 +8,12 @@ import scala.collection.AbstractIterator
   * semantics of the reference's `nextKeyValue` state machine
   * (`/root/reference/.../KDCLogRecordReader.java:209-324`) are
   * unit-testable without a SparkSession. Every log-file parse in the
-  * engine feeds it the session blobs of [[KdcSessionInputFormat]]
+  * engine feeds it one split's owned lines ([[KdcSessionReader.lines]])
   * inside the `kdclog` table's reader (batch and stream; the typed
-  * [[KdcSource.recordsAligned]] reads that table). Each blob ends at its `sending` line, so state never
-  * crosses a blob, a split or a file. Behaviors preserved:
+  * [[KdcSource.recordsAligned]] reads that table). Those lines begin
+  * with a session's first line, and the fold starts a fresh accumulator
+  * after every `sending` line, so state never crosses a session, a split
+  * or a file. Behaviors preserved:
   *
   *  - a `sending N bytes` line completes and emits the current record —
   *    even when no header was ever seen (completed-but-invalid record

@@ -26,9 +26,9 @@ import graft.kdc.{KdcLogRecord, Sessionizer}
   * posture SURVEY.md §4/§7.3 names: `spark.read.format("kdclog")` (and
   * `readStream`) plans the multi-line session parse AS the scan, with
   *
-  *  - **byte-level split alignment**: input partitions come from
-  *    [[graft.kdc.KdcSessionInputFormat]]'s splits, so one multi-GB
-  *    log file fans out across tasks with zero shuffle (the reference's
+  *  - **split alignment**: each input partition is one byte range
+  *    read by [[graft.kdc.KdcSessionReader]], so one multi-GB log file
+  *    fans out across tasks with zero shuffle (the reference's
   *    read-past-split-end contract, `KDCLogRecordReader.java:162-232`,
   *    incl. the splittable-bzip2 path);
   *  - **predicate pushdown INTO the parse stage**: realm/reqtype/
@@ -170,11 +170,9 @@ object KdcLogTable {
   }
 
   /** Hadoop conf keys forwarded from reader options into the
-    * executor-side Configuration (the lookback windows the aligned
-    * readers need, plus the split-size bound tests use). */
-  private[v2] val ForwardedKeys = Seq(
-    "graft.kdc.lookback.bytes", "graft.kdc.bz2.lookback.bytes",
-    "mapreduce.input.fileinputformat.split.maxsize")
+    * Configuration of split planning and the executor-side readers
+    * (the split-size bound tests use). */
+  private[v2] val ForwardedKeys = Seq("mapreduce.input.fileinputformat.split.maxsize")
 
   /** The session's Hadoop configuration with the reader options'
     * forwarded keys overlaid (options win): what split planning, scan
@@ -194,15 +192,14 @@ object KdcLogTable {
   }
 
   /** The executor-side reader Configuration: the FULL session Hadoop
-    * configuration (fs credentials / custom schemes / session-level
-    * `graft.kdc.*` lookback dials all apply on executors exactly as
-    * they did during driver-side split planning), with the per-read
+    * configuration (fs credentials / custom schemes / codecs all
+    * apply on executors exactly as they did during driver-side split
+    * planning), with the per-read
     * reader options overlaid on top (options win). Broadcast once per
     * scan, the same pattern Spark's own file sources use — building a
     * bare `new Configuration()` from only forwarded option keys would
     * silently drop session settings on the executor side (reads fail
-    * on non-default filesystems; a session-conf-enlarged lookback
-    * window tears sessions at split boundaries). */
+    * on non-default filesystems). */
   private[v2] def readerConf(options: Map[String, String])
       : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] = {
     SparkSession.active.sparkContext.broadcast(
@@ -768,9 +765,8 @@ object KdcBatch {
     val kept = prunedFiles(files, tablePath, partKeys, filters, conf)
 
     val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    def codecOf(p: Path) = Option(codecs.getCodec(p))
-    def isSplittableCompressed(p: Path): Boolean = codecOf(p)
-      .exists(_.isInstanceOf[org.apache.hadoop.io.compress.SplittableCompressionCodec])
+    def splittable(p: Path) = graft.kdc.KdcSessionInputFormat.splittable(codecs, p)
+    def isSplittableCompressed(p: Path) = codecs.getCodec(p) != null && splittable(p)
 
     val minSize = conf.getLong("mapreduce.input.fileinputformat.split.minsize", 1L)
     val explicitMax = Option(conf.get("mapreduce.input.fileinputformat.split.maxsize"))
@@ -796,9 +792,7 @@ object KdcBatch {
           else Option(blocks(i).getHosts).getOrElse(Array.empty[String])
         }
       }
-      val splittable = codecOf(path).forall(
-        _.isInstanceOf[org.apache.hadoop.io.compress.SplittableCompressionCodec])
-      if (len == 0 || !splittable)
+      if (len == 0 || !splittable(path))
         Seq(KdcInputPartition(path.toString, 0, len, hosts(0), values))
       else {
         val maxSize = explicitMax.orElse(
@@ -866,12 +860,12 @@ case class KdcReaderFactory(
       confBc.value.value, fieldNames, filters, limit, topN)
 }
 
-/** Executor-side reader: drives the split-aligned session record
-  * reader over its byte range, folds each session blob with the shared
-  * [[Sessionizer]], applies the pushed predicates on the TYPED record,
-  * and materializes only the pruned columns. The Configuration is the
-  * broadcast session conf + reader options ([[KdcLogTable.readerConf]])
-  * — shared read-only across this executor's tasks. */
+/** Executor-side reader: folds the owned lines of the split-aligned
+  * session reader over its byte range with the shared [[Sessionizer]],
+  * applies the pushed predicates on the TYPED record, and materializes
+  * only the pruned columns. The Configuration is the broadcast session
+  * conf + reader options ([[KdcLogTable.readerConf]]) — shared
+  * read-only across this executor's tasks. */
 class KdcPartitionReader(part: KdcInputPartition,
                          conf: Configuration,
                          fieldNames: Array[String],
@@ -881,15 +875,13 @@ class KdcPartitionReader(part: KdcInputPartition,
     extends PartitionReader[InternalRow] {
 
   Option(KdcPartitionReader.openTap.get).foreach(_.add(part.path))
-  private val limitN: Int = limit.getOrElse(Int.MaxValue)
   private var emitted: Long = 0L
 
-  private val split = new FileSplit(new Path(part.path), part.start, part.length, null)
-  private val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-    conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
   private val reader = {
-    val r = new graft.kdc.KdcSessionInputFormat().createRecordReader(split, ctx)
-    r.initialize(split, ctx)
+    val split = new FileSplit(new Path(part.path), part.start, part.length, null)
+    val r = new graft.kdc.KdcSessionReader
+    r.initialize(split, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
     r
   }
   private val extractors: Array[KdcLogRecord => Any] =
@@ -897,7 +889,6 @@ class KdcPartitionReader(part: KdcInputPartition,
       if (KdcLogTable.baseFieldNames(f)) KdcFilterEval.extractor(f)
       else { val v = part.partValues.getOrElse(f, null); (_: KdcLogRecord) => v }
     }
-  private var sessions: Iterator[KdcLogRecord] = Iterator.empty
   private var current: InternalRow = _
 
   private def buildRow(rec: KdcLogRecord): InternalRow = {
@@ -913,71 +904,24 @@ class KdcPartitionReader(part: KdcInputPartition,
     new GenericInternalRow(vals)
   }
 
-  /** Partial top-N pushdown: the whole split is parsed ONCE into a
-    * bounded n-record heap ordered by ts (see
-    * [[KdcScanBuilder.pushTopN]] for why parse-all-keep-n rather than
-    * early-stop), and [[next]] drains the heap. `null` when no top-N
-    * is pushed — the streaming path below runs instead. */
-  private val topRecords: Iterator[KdcLogRecord] = topN match {
-    case None => null
-    case Some(t) =>
-      // "better-first" total order on ts per the pushed SortOrder
-      val better = new java.util.Comparator[KdcLogRecord] {
-        override def compare(a: KdcLogRecord, b: KdcLogRecord): Int = {
-          val (ta, tb) = (a.ts, b.ts)
-          if (ta == null && tb == null) 0
-          else if (ta == null) { if (t.nullsFirst) -1 else 1 }
-          else if (tb == null) { if (t.nullsFirst) 1 else -1 }
-          else { val c = ta.compareTo(tb); if (t.asc) c else -c }
-        }
-      }
-      // root = WORST retained row: evict it when a better one arrives
-      val heap = new java.util.PriorityQueue[KdcLogRecord](
-        math.max(t.n, 1), better.reversed())
-      while (reader.nextKeyValue()) {
-        val it = Sessionizer.sessionize(
-          reader.getCurrentValue.toString.linesIterator)
-        while (it.hasNext) {
-          val rec = it.next()
-          if (KdcFilterEval.matches(filters, rec, part.partValues)) {
-            if (heap.size < t.n) heap.offer(rec)
-            else if (better.compare(rec, heap.peek) < 0) {
-              heap.poll(); heap.offer(rec)
-            }
-          }
-        }
-      }
-      // emission order is irrelevant: partial pushdown keeps Spark's
-      // global sort-and-limit on top
-      scala.jdk.CollectionConverters.IteratorHasAsScala(
-        heap.iterator()).asScala
+  private val matching: Iterator[KdcLogRecord] = Sessionizer.sessionize(reader.lines)
+    .filter(KdcFilterEval.matches(filters, _, part.partValues))
+
+  /** Partial top-N pushdown parses the whole split once into a bounded
+    * n-record heap ordered by ts (see [[KdcScanBuilder.pushTopN]] for
+    * why parse-all-keep-n rather than early-stop). Partial LIMIT
+    * pushdown stops after its quota WITHOUT reading further bytes
+    * (Spark re-applies the global limit, so over-per-split is the only
+    * contract needed). */
+  private val records: Iterator[KdcLogRecord] = topN match {
+    case None => matching.take(limit.getOrElse(Int.MaxValue))
+    case Some(t) => KdcPartitionReader.top(matching, t)
   }
 
-  override def next(): Boolean = {
-    if (topRecords != null) {
-      if (!topRecords.hasNext) return false
-      current = buildRow(topRecords.next())
-      emitted += 1
-      return true
-    }
-    // partial LIMIT pushdown: this split has produced its quota —
-    // stop WITHOUT reading further bytes (Spark re-applies the
-    // global limit, so over-per-split is the only contract needed)
-    if (emitted >= limitN) return false
-    while (true) {
-      if (sessions.hasNext) {
-        val rec = sessions.next()
-        if (KdcFilterEval.matches(filters, rec, part.partValues)) {
-          current = buildRow(rec)
-          emitted += 1
-          return true
-        }
-      } else if (reader.nextKeyValue()) {
-        sessions = Sessionizer.sessionize(
-          reader.getCurrentValue.toString.linesIterator)
-      } else return false
-    }
-    false
+  override def next(): Boolean = records.hasNext && {
+    current = buildRow(records.next())
+    emitted += 1
+    true
   }
 
   override def get(): InternalRow = current
@@ -987,10 +931,11 @@ class KdcPartitionReader(part: KdcInputPartition,
   }
 }
 
-/** Test-only observability taps: `null` (the default) costs one
-  * volatile read per reader OPEN/CLOSE — never per row. Specs install
-  * a sink, run, read it back, and uninstall; nothing accumulates when
-  * no tap is set, so a long-lived session carries no growth. */
+/** The reader's top-N selection, and test-only observability taps:
+  * `null` (the default) costs one volatile read per reader OPEN/CLOSE
+  * — never per row. Specs install a sink, run, read it back, and
+  * uninstall; nothing accumulates when no tap is set, so a long-lived
+  * session carries no growth. */
 object KdcPartitionReader {
   /** When set, every reader open records its file path. */
   val openTap = new java.util.concurrent.atomic.AtomicReference[
@@ -998,6 +943,29 @@ object KdcPartitionReader {
   /** When set, every reader close adds its emitted-session count. */
   val emitTap = new java.util.concurrent.atomic.AtomicReference[
     java.util.concurrent.atomic.AtomicLong](null)
+
+  /** The `t.n` best records of `recs` by ts per the pushed SortOrder, in
+    * no particular order: partial pushdown keeps Spark's global
+    * sort-and-limit on top. */
+  private def top(recs: Iterator[KdcLogRecord], t: KdcTopN): Iterator[KdcLogRecord] = {
+    // "better-first" total order on ts
+    val better = new java.util.Comparator[KdcLogRecord] {
+      override def compare(a: KdcLogRecord, b: KdcLogRecord): Int = {
+        val (ta, tb) = (a.ts, b.ts)
+        if (ta == null && tb == null) 0
+        else if (ta == null) { if (t.nullsFirst) -1 else 1 }
+        else if (tb == null) { if (t.nullsFirst) 1 else -1 }
+        else { val c = ta.compareTo(tb); if (t.asc) c else -c }
+      }
+    }
+    // root = WORST retained row: evict it when a better one arrives
+    val heap = new java.util.PriorityQueue[KdcLogRecord](math.max(t.n, 1), better.reversed())
+    recs.foreach { rec =>
+      if (heap.size < t.n) heap.offer(rec)
+      else if (better.compare(rec, heap.peek) < 0) { heap.poll(); heap.offer(rec) }
+    }
+    heap.iterator().asScala
+  }
 }
 
 /** Exact evaluation of pushed `sources.Filter`s against a typed

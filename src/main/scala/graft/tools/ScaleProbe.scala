@@ -566,23 +566,13 @@ object ScaleProbe {
         }.minBy(_._1)
         println(f"KDCPARSE $label,$wall%.2f,sessions=$n,rate=${n / wall / 1e6}%.2f M/s")
       }
-      def mkReader() = {
+      timeIt("sessionize_only") {
         val split = new org.apache.hadoop.mapreduce.lib.input.FileSplit(
           new org.apache.hadoop.fs.Path(f.getPath), 0, f.length(), null)
-        val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-          conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-        val r = new graft.kdc.KdcSessionInputFormat().createRecordReader(split, ctx)
-        r.initialize(split, ctx)
-        r
-      }
-      timeIt("sessionize_only") {
-        val r = mkReader()
-        var n = 0L
-        while (r.nextKeyValue()) {
-          val it = graft.kdc.Sessionizer.sessionize(
-            r.getCurrentValue.toString.linesIterator)
-          while (it.hasNext) { it.next(); n += 1 }
-        }
+        val r = new graft.kdc.KdcSessionReader
+        r.initialize(split, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+        val n = graft.kdc.Sessionizer.sessionize(r.lines).size.toLong
         r.close(); n
       }
       def readerLoop(fields: Array[String]): Long = {
@@ -650,11 +640,9 @@ object ScaleProbe {
       // compressed-size split bound by default, so the bare-load leg
       // measures the block-parallel DEFAULT; the single-task posture
       // is kept as an explicit-oversize baseline. The hand-tuned 1 MiB
-      // leg (with the probe window shrunk to ~1 compressed block)
-      // remains for comparison against the derived default.
+      // leg remains for comparison against the derived default.
       def bz2Read = spark.read.format("kdclog")
         .option("maxSplitBytes", (1L << 20).toString)
-        .option("graft.kdc.bz2.lookback.bytes", (256L << 10).toString)
         .load(bz2Dir)
       time("v2_bz2_default_derived_splits")(spark.read.format("kdclog").load(bz2Dir))
       time("v2_bz2_single_split_forced")(

@@ -60,13 +60,13 @@ class HarnessSpec extends AnyFunSuite {
     assert(new java.io.File(out).listFiles().exists(_.getName.startsWith("part-")))
   }
 
-  /** File name of every match of `re` in `src/main`, once per match. */
-  private def sitesOf(re: String): Seq[String] = {
+  /** File name of every match of `re` under `root`, once per match. */
+  private def sitesOf(re: String, root: String = "src/main"): Seq[String] = {
     def files(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala"))
       }
-    files(new java.io.File("src/main")).flatMap { f =>
+    files(new java.io.File(root)).flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       Seq.fill(re.r.findAllIn(src).size)(f.getName)
     }.sorted
@@ -82,6 +82,16 @@ class HarnessSpec extends AnyFunSuite {
     // split planner (KdcSource.recordsAligned reads that table)
     for (gone <- Seq("TextInputFormat", "wholetext", "sessionizeByFile", "newAPIHadoopFile"))
       assert(sitesOf(gone).isEmpty, s"$gone is back in ${sitesOf(gone).mkString(", ")}")
+  }
+
+  test("src/main reads KDC sessions through one LineRecordReader-composed reader") {
+    assert(sitesOf("""extends\s+RecordReader\b""") == Seq("KdcSessionInputFormat.scala"))
+    for (gone <- Seq("org.apache.hadoop.util.LineReader", "lookback.bytes")) {
+      val sites = sitesOf(java.util.regex.Pattern.quote(gone))
+      assert(sites.isEmpty, s"$gone is back in ${sites.mkString(", ")}")
+    }
+    // the kdclog reader folds owned lines, never a re-split session blob
+    assert(sitesOf("linesIterator", "src/main/scala/graft/kdc/v2").isEmpty)
   }
 
   test("src/main enumerates sorted-list pairs only in PairGen") {

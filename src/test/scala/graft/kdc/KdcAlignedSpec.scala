@@ -122,4 +122,41 @@ class KdcAlignedSpec extends AnyFunSuite {
     for (sz <- Seq(37_777L, 64L * 1024, 100_000L, 131_071L, 256L * 1024))
       assert(SplitAlignedFiles.read(bz2, sz) == wantBig, s"bz2 split=$sz")
   }
+
+  test("a line longer than 1 MiB under a split start, as terminator or mid-session, matches the fold") {
+    // LogLine.isSending matches anywhere in a line, so a syslog-prefixed
+    // terminator may carry any amount of text before `sending`
+    val long = "Nov 22 10:00:00 kdc1 kdc[4711]: " +
+      new scala.util.Random(11).alphanumeric.take(1536 * 1024).mkString
+    val header = "2015-11-22T10:00:00 AS-REQ giant@X.ORG from IPv4:10.9.9.9 for krbtgt/X.ORG@X.ORG"
+    val end = "2015-11-22T10:00:00 sending 9 bytes to IPv4:10.9.9.9"
+    val (head, tail) = decoyLines(60).splitAt(70) // 30 whole sessions each side
+    /** The reads that disagree with the fold when the long line sits in
+      * the session `giant`, each as the clients it lost and gained. */
+    def mismatches(shape: String, giant: Seq[String]): Seq[String] = {
+      val lines = head ++ giant ++ tail
+      val want = Sessionizer.sessionize(lines.iterator).toList
+      assert(want.size == 61)
+      // the second split starts 1 MiB + 64 KiB into the long line
+      val lineStart = (head :+ header).map(_.length + 1).sum.toLong
+      val split = lineStart + (1L << 20) + (64L << 10)
+      assert(split < lineStart + long.length)
+      val plain = s"target/scratch/aligned_long_$shape"
+      val bz2 = s"target/scratch/aligned_long_${shape}_bz2"
+      SplitAlignedFiles.write(plain, Seq("long.log" -> lines))
+      SplitAlignedFiles.write(bz2, Seq("long.log.bz2" -> lines))
+      val reads = Seq(
+        "recordsAligned" -> KdcSource.recordsAligned(spark, s"$plain/long.log", Some(split))
+          .collect().toSeq.sortBy(want.indexOf(_)),
+        "plain file" -> SplitAlignedFiles.read(plain, split)) ++
+        Seq(128L << 10, split).map(sz => s"bz2 split=$sz" -> SplitAlignedFiles.read(bz2, sz))
+      reads.collect { case (label, got) if got != want =>
+        s"$shape, $label: missing ${want.diff(got).map(_.client)}, " +
+          s"extra ${got.diff(want).map(_.client)}"
+      }
+    }
+    val bad = mismatches("terminator", Seq(header, s"$long $end")) ++
+      mismatches("mid-session", Seq(header, s"$long Client sent patypes: ENC-TS", end))
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
 }

@@ -90,24 +90,25 @@ class KdcV2Spec extends AnyFunSuite {
   }
 
   test("reader factory ships the SESSION hadoop conf, with reader options overlaid") {
-    // session-level settings (fs credentials, graft.kdc.* lookback
-    // dials) must reach the EXECUTOR-side reader, not only driver-side
-    // split planning; per-read options win over session values
+    // session-level settings (fs credentials, the split bound) must
+    // reach the EXECUTOR-side reader, not only driver-side split
+    // planning; per-read options win over session values
+    val maxSize = "mapreduce.input.fileinputformat.split.maxsize"
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("graft.test.session.key", "from-session")
-    hc.set("graft.kdc.lookback.bytes", "2097152")
+    hc.set(maxSize, "2097152")
     try {
-      val q = v2("graft.kdc.lookback.bytes" -> "4194304")
+      val q = v2(maxSize -> "4194304")
       val factory = kdcScan(q).toBatch.createReaderFactory()
         .asInstanceOf[graft.kdc.v2.KdcReaderFactory]
       val conf = factory.confBc.value.value
       assert(conf.get("graft.test.session.key") == "from-session",
         "session hadoopConfiguration did not reach the reader conf")
-      assert(conf.get("graft.kdc.lookback.bytes") == "4194304",
+      assert(conf.get(maxSize) == "4194304",
         "reader option did not overlay the session value")
     } finally {
       hc.unset("graft.test.session.key")
-      hc.unset("graft.kdc.lookback.bytes")
+      hc.unset(maxSize)
     }
   }
 
