@@ -13,7 +13,9 @@ import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit, LineRe
   * [[KdcSource.recordsAligned]] over it) folds the owned lines of
   * [[KdcSessionReader]] straight through [[Sessionizer]], so a single
   * log file larger than one task fans out across tasks (SURVEY.md §7.4
-  * #1) and a many-file fleet reads one split per small file.
+  * #1). A many-file fleet still plans one split per small file, but the
+  * table packs those splits into about one task per core
+  * ([[graft.kdc.v2.KdcBatch.pack]]).
   *
   * Ownership (exact partition, no loss or duplication; pinned by
   * KdcAlignedSpec and KdcBzip2Spec at adversarial split sizes): Hadoop's

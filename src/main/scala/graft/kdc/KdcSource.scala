@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions.col
   * stream) is the one place that plans its splits and builds its rows;
   * [[recordsAligned]] is a typed batch read of that table.
   *
-  * Scale posture: no shuffle. Parallelism = number of splits, so a
+  * Scale posture: no shuffle. Parallelism follows the splits, so a
   * single multi-GB log fans out across tasks, and so does a
   * splittable-compressed (.bz2) one; a gzip file is one split. A
-  * fleet of many small rotated logs is one split per file.
+  * fleet of many small rotated logs is one split per file, packed
+  * into about one task per core.
   */
 object KdcSource {
 

@@ -26,11 +26,15 @@ import graft.kdc.{KdcLogRecord, Sessionizer}
   * posture SURVEY.md §4/§7.3 names: `spark.read.format("kdclog")` (and
   * `readStream`) plans the multi-line session parse AS the scan, with
   *
-  *  - **split alignment**: each input partition is one byte range
-  *    read by [[graft.kdc.KdcSessionReader]], so one multi-GB log file
-  *    fans out across tasks with zero shuffle (the reference's
+  *  - **split alignment**: each byte range is read by
+  *    [[graft.kdc.KdcSessionReader]], so one multi-GB log file fans out
+  *    across tasks with zero shuffle (the reference's
   *    read-past-split-end contract, `KDCLogRecordReader.java:162-232`,
-  *    incl. the splittable-bzip2 path);
+  *    incl. the splittable-bzip2 path); an input partition is one range
+  *    of a file the planner cut into several, or a pack of whole small
+  *    files sized by Spark's file-source rule (see [[KdcBatch.pack]]),
+  *    so a fleet of small rotated logs runs about one task per core,
+  *    not one per file;
   *  - **predicate pushdown INTO the parse stage**: realm/reqtype/
   *    validity predicates evaluate on the typed session record before
   *    any row is materialized — a realm-scoped query over a multi-realm
@@ -480,24 +484,24 @@ class KdcScanBuilder(path: String, options: Map[String, String],
     required = requiredSchema
 
   /** LIMIT pushdown (`SupportsPushDownLimit`), always PARTIAL: each
-    * split's reader stops after emitting `limit` post-filter sessions
-    * instead of parsing its whole byte range, and Spark keeps the
+    * partition's reader stops after emitting `limit` post-filter
+    * sessions instead of parsing all its ranges, and Spark keeps the
     * global limit on top. Combined with `CollectLimitExec`'s
     * incremental partition evaluation, a `LIMIT 10` exploration query
-    * over a 100 TB fleet opens one split and parses ~10 sessions —
-    * without this the first split parsed its full (up to 128 MB
-    * decoded) range before the limit applied. */
+    * over a 100 TB fleet opens one partition's first range(s) and
+    * parses ~10 sessions — without this the first split parsed its
+    * full (up to 128 MB decoded) range before the limit applied. */
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
   override def isPartiallyPushed(): Boolean = true
 
   /** Top-N pushdown (`SupportsPushDownTopN`), always PARTIAL: each
-    * split's reader returns only its n best sessions by `ts`, so an
+    * partition's reader returns only its n best sessions by `ts`, so an
     * `ORDER BY ts [DESC] LIMIT n` exploration query ("the latest n
-    * authentications in the fleet") ships n rows per split to the
+    * authentications in the fleet") ships n rows per partition to the
     * driver's TakeOrdered merge instead of every parsed session.
     * ONLY `ts` qualifies: it is the one record field with a total
     * order the reader can maintain (lexical ISO = chronological).
-    * The reader still parses its whole byte range into a BOUNDED
+    * The reader still parses all its ranges into a BOUNDED
     * n-row heap rather than stopping early — a session's ts is
     * OVERWRITTEN by timestamped error detail lines (the reference's
     * AP-REQ subtlety), so file order is not ts order and an
@@ -724,7 +728,8 @@ object KdcBatch {
     * `max(minSize, min(maxSize, blockSize))` with the 1.1 slop,
     * non-splittable codecs whole-file; splittable-COMPRESSED files get
     * a derived maxSize (see [[defaultCompressedSplitBytes]]) unless
-    * the caller set an explicit bound. `tablePath` anchors
+    * the caller set an explicit bound — and pack the ranges into
+    * partitions ([[pack]]). `tablePath` anchors
     * partition-segment extraction (it may differ from `inputPaths` in
     * the streaming case, where fresh files are planned individually). */
   private[v2] def planSplits(inputPaths: Seq[Path], options: Map[String, String],
@@ -777,42 +782,82 @@ object KdcBatch {
       else Some(defaultCompressedSplitBytes(compressedSplittable.map(_.len).max,
         spark.sparkContext.defaultParallelism))
 
-    kept.flatMap { case (st, values) =>
+    val perFile: Seq[Seq[KdcRange]] = kept.map { case (st, values) =>
       val path = st.path
       val len = st.len
-      def hosts(offset: Long): Array[String] = {
+      def hosts(offset: Long): Seq[String] = {
         val blocks = st.blocks
-        if (blocks == null || blocks.isEmpty) Array.empty[String]
+        if (blocks == null || blocks.isEmpty) Seq.empty
         else {
           val i = blocks.indexWhere(b =>
             offset >= b.getOffset && offset < b.getOffset + b.getLength)
           // an offset no block covers gets NO locality hint — block 0's
           // hosts would be a wrong hint, strictly worse than none
-          if (i < 0) Array.empty[String]
-          else Option(blocks(i).getHosts).getOrElse(Array.empty[String])
+          if (i < 0) Seq.empty
+          else Option(blocks(i).getHosts).map(_.toSeq).getOrElse(Seq.empty)
         }
       }
       if (len == 0 || !splittable(path))
-        Seq(KdcInputPartition(path.toString, 0, len, hosts(0), values))
+        Seq(KdcRange(path.toString, 0, len, hosts(0), values))
       else {
         val maxSize = explicitMax.orElse(
           if (isSplittableCompressed(path)) derivedCompressedMax else None)
           .getOrElse(Long.MaxValue)
         val splitSize = math.max(minSize, math.min(maxSize, st.blockSize))
-        val out = scala.collection.mutable.ArrayBuffer[KdcInputPartition]()
+        val out = scala.collection.mutable.ArrayBuffer[KdcRange]()
         var remaining = len
         while (remaining.toDouble / splitSize > SplitSlop) {
           val start = len - remaining
-          out += KdcInputPartition(path.toString, start, splitSize, hosts(start), values)
+          out += KdcRange(path.toString, start, splitSize, hosts(start), values)
           remaining -= splitSize
         }
         if (remaining != 0) {
           val start = len - remaining
-          out += KdcInputPartition(path.toString, start, remaining, hosts(start), values)
+          out += KdcRange(path.toString, start, remaining, hosts(start), values)
         }
         out.toSeq
       }
-    }.toArray
+    }
+
+    val sql = org.apache.spark.sql.internal.SQLConf.get
+    pack(perFile, sql.filesMaxPartitionBytes, sql.filesOpenCostInBytes,
+      sql.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism))
+  }
+
+  /** Pack each file's planned ranges into input partitions by Spark's
+    * file-source rule (`FilePartition.getFilePartitions`): a range
+    * costs its length plus `openCost`, partitions hold at most
+    * `min(maxPartitionBytes, max(openCost, Σ(length + openCost) / minPartitions))`,
+    * and ranges fill them next-fit by decreasing length. The one
+    * departure: every range of a file the planner cut into several
+    * stays alone in its partition, because the split bound already
+    * sized it to one task — for bzip2 in compressed bytes that decode
+    * ~16× larger, so packing would undo block-parallel decode. A fleet
+    * of small files therefore runs about `minPartitions` tasks, not one
+    * per file, and packing changes no range: each is planned exactly
+    * once. */
+  private[v2] def pack(perFile: Seq[Seq[KdcRange]], maxPartitionBytes: Long,
+                       openCost: Long, minPartitions: Int): Array[InputPartition] = {
+    val total = perFile.iterator.flatten.map(_.length + openCost).sum
+    val target = math.min(maxPartitionBytes,
+      math.max(openCost, total / minPartitions))
+    val (whole, cut) = perFile.partition(_.size == 1)
+    val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
+    cut.flatten.foreach(r => out += KdcInputPartition(Seq(r)))
+    val current = scala.collection.mutable.ArrayBuffer[KdcRange]()
+    var size = 0L
+    def close(): Unit = if (current.nonEmpty) {
+      out += KdcInputPartition(current.toSeq)
+      current.clear()
+      size = 0L
+    }
+    whole.flatten.sortBy(-_.length).foreach { r =>
+      if (size + r.length > target) close()
+      current += r
+      size += r.length + openCost
+    }
+    close()
+    out.toArray
   }
 }
 
@@ -840,13 +885,23 @@ class KdcBatch(path: String, options: Map[String, String], partKeys: Seq[String]
       limit, topN)
 }
 
-/** One byte range of one log file (serializable — shipped to
-  * executors), carrying the file's partition-column values. */
-case class KdcInputPartition(path: String, start: Long, length: Long,
-                             locations: Array[String],
-                             partValues: Map[String, String])
-    extends InputPartition {
-  override def preferredLocations(): Array[String] = locations
+/** One byte range of one log file, carrying the hosts of the block it
+  * starts in and the file's partition-column values. */
+case class KdcRange(path: String, start: Long, length: Long,
+                    hosts: Seq[String],
+                    partValues: Map[String, String])
+
+/** The ranges one task reads, in order (serializable — shipped to
+  * executors): one range of a split file, or a pack of whole small
+  * files ([[KdcBatch.pack]]). */
+case class KdcInputPartition(ranges: Seq[KdcRange]) extends InputPartition {
+  /** The hosts holding the most of this partition's bytes, at most 3 —
+    * Spark's `FilePartition` rule. */
+  override def preferredLocations(): Array[String] =
+    ranges.flatMap(r => r.hosts.filter(_ != "localhost").map(_ -> r.length))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+      .toSeq.sortBy { case (host, bytes) => (-bytes, host) }
+      .take(3).map(_._1).toArray
 }
 
 case class KdcReaderFactory(
@@ -860,12 +915,15 @@ case class KdcReaderFactory(
       confBc.value.value, fieldNames, filters, limit, topN)
 }
 
-/** Executor-side reader: folds the owned lines of the split-aligned
-  * session reader over its byte range with the shared [[Sessionizer]],
-  * applies the pushed predicates on the TYPED record, and materializes
-  * only the pruned columns. The Configuration is the broadcast session
-  * conf + reader options ([[KdcLogTable.readerConf]]) — shared
-  * read-only across this executor's tasks. */
+/** Executor-side reader: one record iterator over the partition's
+  * ranges. Ranges open lazily, in order; each range's owned lines
+  * (the split-aligned session reader) fold alone with the shared
+  * [[Sessionizer]], so no session state crosses a range. The pushed
+  * predicates evaluate on the TYPED record with that range's partition
+  * values, and only the pruned columns materialize. The Configuration
+  * is the broadcast session conf + reader options
+  * ([[KdcLogTable.readerConf]]) — shared read-only across this
+  * executor's tasks. */
 class KdcPartitionReader(part: KdcInputPartition,
                          conf: Configuration,
                          fieldNames: Array[String],
@@ -874,28 +932,35 @@ class KdcPartitionReader(part: KdcInputPartition,
                          topN: Option[KdcTopN] = None)
     extends PartitionReader[InternalRow] {
 
-  Option(KdcPartitionReader.openTap.get).foreach(_.add(part.path))
   private var emitted: Long = 0L
+  /** The session reader of the range being read; opening the next
+    * range closes it. */
+  private var reader: graft.kdc.KdcSessionReader = _
 
-  private val reader = {
-    val split = new FileSplit(new Path(part.path), part.start, part.length, null)
-    val r = new graft.kdc.KdcSessionReader
-    r.initialize(split, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+  private def open(r: KdcRange): Iterator[String] = {
+    if (reader != null) reader.close()
+    Option(KdcPartitionReader.openTap.get).foreach(_.add(r.path))
+    val split = new FileSplit(new Path(r.path), r.start, r.length, null)
+    reader = new graft.kdc.KdcSessionReader
+    reader.initialize(split, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
-    r
+    reader.lines
   }
+
+  /** Base-field extractors; null marks a partition column, read from
+    * the row's range. */
   private val extractors: Array[KdcLogRecord => Any] =
-    fieldNames.map { f =>
-      if (KdcLogTable.baseFieldNames(f)) KdcFilterEval.extractor(f)
-      else { val v = part.partValues.getOrElse(f, null); (_: KdcLogRecord) => v }
-    }
+    fieldNames.map(f =>
+      if (KdcLogTable.baseFieldNames(f)) KdcFilterEval.extractor(f) else null)
   private var current: InternalRow = _
 
-  private def buildRow(rec: KdcLogRecord): InternalRow = {
+  private def buildRow(rec: KdcLogRecord, range: KdcRange): InternalRow = {
     val vals = new Array[Any](extractors.length)
     var i = 0
     while (i < extractors.length) {
-      vals(i) = extractors(i)(rec) match {
+      val x = extractors(i)
+      val v = if (x != null) x(rec) else range.partValues.getOrElse(fieldNames(i), null)
+      vals(i) = v match {
         case s: String => UTF8String.fromString(s)
         case other => other
       }
@@ -904,22 +969,28 @@ class KdcPartitionReader(part: KdcInputPartition,
     new GenericInternalRow(vals)
   }
 
-  private val matching: Iterator[KdcLogRecord] = Sessionizer.sessionize(reader.lines)
-    .filter(KdcFilterEval.matches(filters, _, part.partValues))
+  private val matching: Iterator[(KdcLogRecord, KdcRange)] =
+    part.ranges.iterator.flatMap { r =>
+      Sessionizer.sessionize(open(r))
+        .filter(KdcFilterEval.matches(filters, _, r.partValues))
+        .map(_ -> r)
+    }
 
-  /** Partial top-N pushdown parses the whole split once into a bounded
-    * n-record heap ordered by ts (see [[KdcScanBuilder.pushTopN]] for
-    * why parse-all-keep-n rather than early-stop). Partial LIMIT
-    * pushdown stops after its quota WITHOUT reading further bytes
-    * (Spark re-applies the global limit, so over-per-split is the only
-    * contract needed). */
-  private val records: Iterator[KdcLogRecord] = topN match {
+  /** One LIMIT quota and one top-N heap per partition. Partial top-N
+    * pushdown parses every range once into a bounded n-record heap
+    * ordered by ts (see [[KdcScanBuilder.pushTopN]] for why
+    * parse-all-keep-n rather than early-stop). Partial LIMIT pushdown
+    * stops after its quota WITHOUT opening further ranges or reading
+    * further bytes (Spark re-applies the global limit, so
+    * over-per-partition is the only contract needed). */
+  private val records: Iterator[(KdcLogRecord, KdcRange)] = topN match {
     case None => matching.take(limit.getOrElse(Int.MaxValue))
     case Some(t) => KdcPartitionReader.top(matching, t)
   }
 
   override def next(): Boolean = records.hasNext && {
-    current = buildRow(records.next())
+    val (rec, range) = records.next()
+    current = buildRow(rec, range)
     emitted += 1
     true
   }
@@ -927,7 +998,7 @@ class KdcPartitionReader(part: KdcInputPartition,
   override def get(): InternalRow = current
   override def close(): Unit = {
     Option(KdcPartitionReader.emitTap.get).foreach(_.addAndGet(emitted))
-    reader.close()
+    if (reader != null) reader.close()
   }
 }
 
@@ -937,21 +1008,22 @@ class KdcPartitionReader(part: KdcInputPartition,
   * uninstall; nothing accumulates when no tap is set, so a long-lived
   * session carries no growth. */
 object KdcPartitionReader {
-  /** When set, every reader open records its file path. */
+  /** When set, every range a reader opens records its file path. */
   val openTap = new java.util.concurrent.atomic.AtomicReference[
     java.util.concurrent.ConcurrentLinkedQueue[String]](null)
   /** When set, every reader close adds its emitted-session count. */
   val emitTap = new java.util.concurrent.atomic.AtomicReference[
     java.util.concurrent.atomic.AtomicLong](null)
 
-  /** The `t.n` best records of `recs` by ts per the pushed SortOrder, in
-    * no particular order: partial pushdown keeps Spark's global
-    * sort-and-limit on top. */
-  private def top(recs: Iterator[KdcLogRecord], t: KdcTopN): Iterator[KdcLogRecord] = {
+  /** The `t.n` best records of `recs` (each with its range) by ts per
+    * the pushed SortOrder, in no particular order: partial pushdown
+    * keeps Spark's global sort-and-limit on top. */
+  private def top(recs: Iterator[(KdcLogRecord, KdcRange)],
+                  t: KdcTopN): Iterator[(KdcLogRecord, KdcRange)] = {
     // "better-first" total order on ts
-    val better = new java.util.Comparator[KdcLogRecord] {
-      override def compare(a: KdcLogRecord, b: KdcLogRecord): Int = {
-        val (ta, tb) = (a.ts, b.ts)
+    val better = new java.util.Comparator[(KdcLogRecord, KdcRange)] {
+      override def compare(a: (KdcLogRecord, KdcRange), b: (KdcLogRecord, KdcRange)): Int = {
+        val (ta, tb) = (a._1.ts, b._1.ts)
         if (ta == null && tb == null) 0
         else if (ta == null) { if (t.nullsFirst) -1 else 1 }
         else if (tb == null) { if (t.nullsFirst) 1 else -1 }
@@ -959,7 +1031,8 @@ object KdcPartitionReader {
       }
     }
     // root = WORST retained row: evict it when a better one arrives
-    val heap = new java.util.PriorityQueue[KdcLogRecord](math.max(t.n, 1), better.reversed())
+    val heap = new java.util.PriorityQueue[(KdcLogRecord, KdcRange)](
+      math.max(t.n, 1), better.reversed())
     recs.foreach { rec =>
       if (heap.size < t.n) heap.offer(rec)
       else if (better.compare(rec, heap.peek) < 0) { heap.poll(); heap.offer(rec) }

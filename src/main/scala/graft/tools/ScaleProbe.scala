@@ -576,8 +576,8 @@ object ScaleProbe {
         r.close(); n
       }
       def readerLoop(fields: Array[String]): Long = {
-        val part = graft.kdc.v2.KdcInputPartition(
-          f.getPath, 0, f.length(), Array.empty, Map.empty)
+        val part = graft.kdc.v2.KdcInputPartition(Seq(graft.kdc.v2.KdcRange(
+          f.getPath, 0, f.length(), Seq.empty, Map.empty)))
         val rd = new graft.kdc.v2.KdcPartitionReader(part, conf, fields, Array.empty)
         var n = 0L
         while (rd.next()) { rd.get(); n += 1 }

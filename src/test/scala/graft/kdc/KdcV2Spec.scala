@@ -205,7 +205,7 @@ class KdcV2Spec extends AnyFunSuite {
     assert(scan.pushedFilters.mkString.contains("EqualTo(day,2015-11-22)"),
       s"scope predicate not pushed: ${scan.pushedFilters.mkString(", ")}")
     val planned = scan.toBatch.planInputPartitions()
-      .map(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].path).distinct
+      .flatMap(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].ranges.map(_.path)).distinct
     assert(planned.length == 1 && planned.head.contains("day=2015-11-22"),
       s"scoped CLI planned files: ${planned.mkString(", ")}")
     // TSV equals the report run over the scoped day's file alone —
@@ -234,7 +234,7 @@ class KdcV2Spec extends AnyFunSuite {
       s"day predicate not pushed: ${scan.pushedFilters.mkString(", ")}")
     // the whole point: split planning PRUNES the other day's FILE
     val planned = scan.toBatch.planInputPartitions()
-      .map(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].path).distinct
+      .flatMap(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].ranges.map(_.path)).distinct
     assert(planned.length == 1 && planned.head.contains("day=2015-11-22"),
       s"pruning failed, planned files: ${planned.mkString(", ")}")
     // correctness: rows equal host1's sessions, with the partition
@@ -279,7 +279,7 @@ class KdcV2Spec extends AnyFunSuite {
     val df = spark.read.format("kdclog").option("recursive", "true").load(root)
     def plannedFiles(q: DataFrame): Seq[String] =
       kdcScan(q).toBatch.planInputPartitions()
-        .map(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].path).distinct.toSeq
+        .flatMap(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].ranges.map(_.path)).distinct.toSeq
     // a predicate mixing partition and record columns cannot prune
     // files (its references are not partition-only) but must still
     // evaluate correctly per row with the path values in scope
@@ -745,7 +745,7 @@ class KdcV2Spec extends AnyFunSuite {
       .option("recursive", "true").option("scope", "day=2015-11-22").load(root)
       .select(col("client"), col("ts"))
     val planned = kdcScan(q).toBatch.planInputPartitions()
-      .map(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].path).distinct
+      .flatMap(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].ranges.map(_.path)).distinct
     assert(planned.length == 1 && planned.head.contains("day=2015-11-22"),
       s"scope option did not prune files: ${planned.mkString(", ")}")
     val viaOption = q.collect().map(_.toString).sorted.toSeq
