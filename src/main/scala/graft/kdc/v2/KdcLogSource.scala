@@ -936,14 +936,17 @@ class KdcPartitionReader(part: KdcInputPartition,
   /** The session reader of the range being read; opening the next
     * range closes it. */
   private var reader: graft.kdc.KdcSessionReader = _
+  /** One task context for every range: building one copies the whole
+    * Configuration into a fresh `JobConf`. */
+  private lazy val context = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+    conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
 
   private def open(r: KdcRange): Iterator[String] = {
     if (reader != null) reader.close()
     Option(KdcPartitionReader.openTap.get).foreach(_.add(r.path))
     val split = new FileSplit(new Path(r.path), r.start, r.length, null)
     reader = new graft.kdc.KdcSessionReader
-    reader.initialize(split, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+    reader.initialize(split, context)
     reader.lines
   }
 

@@ -60,10 +60,12 @@ class HarnessSpec extends AnyFunSuite {
     assert(new java.io.File(out).listFiles().exists(_.getName.startsWith("part-")))
   }
 
-  /** File name of every match of `re` under `root`, once per match. */
+  /** File name of every match of `re` under `root` (a directory or one
+    * file), once per match. */
   private def sitesOf(re: String, root: String = "src/main"): Seq[String] = {
     def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+      if (d.isFile) Seq(d)
+      else Option(d.listFiles()).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala"))
       }
     files(new java.io.File(root)).flatMap { f =>
@@ -100,5 +102,16 @@ class HarnessSpec extends AnyFunSuite {
     // the SQL-lambda form
     assert(sitesOf("""slice\([^,\n]+,\s*[^,\n]*\+\s*(lit\()?2\b""") ==
       Seq("PairGen.scala"))
+  }
+
+  test("every KDC report's global sort goes through KdcQueries.sortReport") {
+    // a DataFrame orderBy/sort not followed by .limit(…) (those plan
+    // TakeOrderedAndProject), on a line without a Window spec: only
+    // the helper's own call may remain, or a new report brings back
+    // the range exchange's sampling job
+    val globalSort = """(?m)^(?![^\n]*\bWindow\b)[^\n]*?\.(?:orderBy|sort)\(""" +
+      """(?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)(?!\s*\.limit\()"""
+    assert(sitesOf(globalSort, "src/main/scala/graft/kdc/KdcQueries.scala") ==
+      Seq("KdcQueries.scala"))
   }
 }

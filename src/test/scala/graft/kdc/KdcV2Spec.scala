@@ -599,6 +599,13 @@ class KdcV2Spec extends AnyFunSuite {
     // a NEW load() is a new snapshot — exactly one more walk
     spark.read.format("kdclog").option("recursive", "true").load(root).count()
     assert(walks.get() - before == 2)
+    // a KdcMain report: its sort placement reads the scan statistics,
+    // which reuse the same load-time snapshot
+    val report = KdcMain.buildReport(spark, root, None, "user", useV2 = true,
+      aligned = false, recursive = true)
+    KdcQueries.tsvLines(report).write.mode("overwrite").text("target/scratch/kdc_v2_onewalk_report")
+    assert(walks.get() - before == 3,
+      s"a report walked ${walks.get() - before - 2} times for one load()")
   }
 
   test("one listing walk per AvailableNow streaming run; triggers share the snapshot") {

@@ -28,42 +28,9 @@ class KdcPackingSpec extends AnyFunSuite {
   private val MaxSize = "mapreduce.input.fileinputformat.split.maxsize"
   private val SplitBytes = 16L * 1024
 
-  /** The fixture's two logs as one file, every principal tagged with
-    * a two-digit file number: each small file has the same length and
-    * its own users. */
-  private def smallLog(f: Int): String =
-    (KdcParseQueries.host1Log + KdcParseQueries.host2Log).replace("@", f"$f%02d@")
-
-  /** 28 same-length small files (4 hosts × 7 days), an empty file, a
-    * gzip file, a multi-block bzip2 file and a plain file of several
-    * 16 KiB splits, all under one `host=…/day=…` layout. Returns each
-    * file's path under the root with its uncompressed text. */
   private lazy val fleet: (String, Seq[(String, String)]) = {
     val root = "target/scratch/kdc_packing_fleet"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    val small = for (h <- 0 until 4; d <- 0 until 7)
-      yield s"host=h$h/day=d$d/kdc.log" -> smallLog(h * 7 + d)
-    // ~2.6 MB of text: three bzip2 blocks
-    val big = (0 until 700).map(k =>
-      (KdcParseQueries.host1Log + KdcParseQueries.host2Log).replace("@", f"$k%04d@")).mkString
-    val files = small ++ Seq(
-      "host=x/day=empty/kdc.log" -> "",
-      "host=x/day=gz/kdc.log.gz" -> smallLog(90),
-      "host=x/day=bz2/kdc.log.bz2" -> big,
-      "host=x/day=plain/kdc.log" -> (91 until 99).map(smallLog).mkString)
-    val codec = new org.apache.hadoop.io.compress.BZip2Codec
-    codec.setConf(spark.sparkContext.hadoopConfiguration)
-    files.foreach { case (rel, text) =>
-      val f = new java.io.File(root, rel)
-      f.getParentFile.mkdirs()
-      val raw = new java.io.FileOutputStream(f)
-      val out =
-        if (rel.endsWith(".gz")) new java.util.zip.GZIPOutputStream(raw)
-        else if (rel.endsWith(".bz2")) codec.createOutputStream(raw)
-        else raw
-      try out.write(text.getBytes("UTF-8")) finally out.close()
-    }
-    (root, files)
+    (root, KdcPackingSpec.writeFleet(spark, root))
   }
 
   private def planned(df: DataFrame): Seq[KdcInputPartition] = {
@@ -76,12 +43,8 @@ class KdcPackingSpec extends AnyFunSuite {
   private def read(root: String): DataFrame =
     spark.read.format("kdclog").option("recursive", "true").load(root)
 
-  /** Runs `body` with the session conf `k` set to `v`, then restores it. */
-  private def withConf[A](k: String, v: String)(body: => A): A = {
-    val saved = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
+  private def withConf[A](k: String, v: String)(body: => A): A =
+    KdcPackingSpec.withConf(spark, k, v)(body)
 
   /** The rows, every KdcMain report TSV and the ranges of one plan. */
   private case class Outcome(rows: Seq[String], tsvs: Map[String, String],
@@ -92,9 +55,7 @@ class KdcPackingSpec extends AnyFunSuite {
     val tsvs = Seq("user", "service", "errors", "user-enctypes", "service-enctypes").map { r =>
       val out = s"target/scratch/kdc_packing_out/$tag-$r"
       KdcMain.main(Array(root, out, "--recursive", s"--report=$r"))
-      val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
-        .sortBy(_.getName)
-      r -> parts.map(p => new String(java.nio.file.Files.readAllBytes(p.toPath), "UTF-8")).mkString
+      r -> KdcPackingSpec.partsText(out)
     }.toMap
     Outcome(rows, tsvs, planned(read(root)))
   }
@@ -232,5 +193,58 @@ class KdcPackingSpec extends AnyFunSuite {
 
     val local = planned(read(KdcParseQueries.fleetFixtureDir()))
     assert(local.nonEmpty && local.forall(_.preferredLocations().isEmpty))
+  }
+}
+
+object KdcPackingSpec {
+
+  /** Runs `body` with the session conf `k` set to `v`, then restores it. */
+  def withConf[A](spark: SparkSession, k: String, v: String)(body: => A): A = {
+    val saved = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** The part files of a text output directory, concatenated in name order. */
+  def partsText(out: String): String =
+    new java.io.File(out).listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .map(p => new String(java.nio.file.Files.readAllBytes(p.toPath), "UTF-8")).mkString
+
+  /** The fixture's two logs as one file, every principal tagged with
+    * a two-digit file number: each small file has the same length and
+    * its own users. */
+  private def smallLog(f: Int): String =
+    (KdcParseQueries.host1Log + KdcParseQueries.host2Log).replace("@", f"$f%02d@")
+
+  /** Writes, under a fresh `root`, 28 same-length small files (4 hosts
+    * × 7 days), an empty file, a gzip file, a multi-block bzip2 file
+    * and a plain file of several 16 KiB splits, all under one
+    * `host=…/day=…` layout. Returns each file's path under the root
+    * with its uncompressed text. */
+  def writeFleet(spark: SparkSession, root: String): Seq[(String, String)] = {
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    val small = for (h <- 0 until 4; d <- 0 until 7)
+      yield s"host=h$h/day=d$d/kdc.log" -> smallLog(h * 7 + d)
+    // ~2.6 MB of text: three bzip2 blocks
+    val big = (0 until 700).map(k =>
+      (KdcParseQueries.host1Log + KdcParseQueries.host2Log).replace("@", f"$k%04d@")).mkString
+    val files = small ++ Seq(
+      "host=x/day=empty/kdc.log" -> "",
+      "host=x/day=gz/kdc.log.gz" -> smallLog(90),
+      "host=x/day=bz2/kdc.log.bz2" -> big,
+      "host=x/day=plain/kdc.log" -> (91 until 99).map(smallLog).mkString)
+    val codec = new org.apache.hadoop.io.compress.BZip2Codec
+    codec.setConf(spark.sparkContext.hadoopConfiguration)
+    files.foreach { case (rel, text) =>
+      val f = new java.io.File(root, rel)
+      f.getParentFile.mkdirs()
+      val raw = new java.io.FileOutputStream(f)
+      val out =
+        if (rel.endsWith(".gz")) new java.util.zip.GZIPOutputStream(raw)
+        else if (rel.endsWith(".bz2")) codec.createOutputStream(raw)
+        else raw
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    files
   }
 }
