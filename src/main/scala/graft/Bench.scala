@@ -71,9 +71,9 @@ object Bench {
 
     // untimed inter-query housekeeping — see the scaladoc above
     // sweep only THIS run's scratch (every per-invocation layout embeds
-    // the applicationId): cross-run cached artifacts (ScaleProbe's
-    // sf{N}x corpora, bucketed_* tables) and any concurrent process's
-    // scratch on the same box must survive
+    // the applicationId): cross-run artifacts (the fixed-name
+    // bucketed_* tables) and any concurrent process's scratch on the
+    // same box must survive
     val scratchRoot = new java.io.File("target/scratch")
     val appId = spark.sparkContext.applicationId
     def reclaim(): Unit = {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one session contract of the entry points (Bench, Verify,
-  * KdcMain, StreamMain, PlanSnap, ScaleProbe), and the only place that
+  * KdcMain, StreamMain, PlanSnap), and the only place that
   * reads its environment:
   *
   *  - `SPARK_GRAFT_CPUS` (default: the JVM's available processors) sets

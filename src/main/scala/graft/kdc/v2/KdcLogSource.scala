@@ -222,9 +222,8 @@ private[graft] object KdcFileLayout {
     * pays 10k round trips serially but ~10k/16 wall-clock in parallel.
     * Small layouts stay on the serial path (no pool setup cost). */
   private val ParallelListThreshold = 4
-  /** Overridable for probes/diagnostics; <=1 forces the serial walk. */
-  private def listPoolSize: Int =
-    sys.props.get("graft.kdc.list.threads").map(_.toInt).getOrElse(16)
+  /** Most concurrent `listStatus` calls of one parallel level. */
+  private val ListPoolSize = 16
 
   /** Lightweight file metadata the planner needs — built from ONLY the
     * eager FileStatus getters. (Copying a RawLocalFileSystem status
@@ -242,7 +241,7 @@ private[graft] object KdcFileLayout {
   final case class Listing(files: Seq[KdcFileMeta], nestedSkipped: Boolean)
 
   /** Diagnostic: top-level listing walks performed by this JVM — the
-    * probe/spec hook that pins "one walk per planning cycle" (each
+    * spec hook that pins "one walk per planning cycle" (each
     * walk is O(dirs) namenode RPCs; the count, not the local wall, is
     * what transfers to a real namenode). */
   val listingWalks = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -250,7 +249,7 @@ private[graft] object KdcFileLayout {
   /** Diagnostic: directories actually listed (one namenode listStatus
     * RPC each) across all walks — the number `dirFilter`-pruned tails
     * keep proportional to the live window rather than the fleet's full
-    * history (the spec/probe hook for scope/horizon directory
+    * history (the spec hook for scope/horizon directory
     * pruning). */
   val dirsListed = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -353,11 +352,11 @@ private[graft] object KdcFileLayout {
         frontier.clear()
       } else {
         val level: Seq[Seq[FileStatus]] =
-          if (frontier.length < ParallelListThreshold || listPoolSize <= 1)
+          if (frontier.length < ParallelListThreshold)
             frontier.toSeq.map(listDir)
           else {
             val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(listPoolSize, frontier.length))
+              math.min(ListPoolSize, frontier.length))
             try {
               import scala.jdk.CollectionConverters._
               val tasks = frontier.toSeq.map { d =>

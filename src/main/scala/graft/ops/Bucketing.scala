@@ -16,6 +16,16 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
+  /** The external table location `target/scratch/<name>`, qualified
+    * against the default filesystem's working directory. `saveAsTable`
+    * resolves a relative `path` option against the warehouse instead,
+    * so the write, the pre-delete or drop, and the scratch sweeps must
+    * all use this one absolute value. */
+  private[ops] def scratchLocation(s: SparkSession, name: String): String = {
+    val p = new org.apache.hadoop.fs.Path(s"target/scratch/$name")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(p).toString
+  }
+
   /** Write `df` as a bucketed managed table (sorted within buckets so
     * sort-merge joins skip the sort too). Idempotent: drops the table
     * and any orphaned location first (an in-memory catalog forgets
@@ -83,7 +93,7 @@ object Bucketing {
     import org.apache.spark.sql.functions._
     def write(name: String, key: String): String = {
       val table = s"${name}_bq"
-      val loc = s"target/scratch/bucketed_${table}"
+      val loc = scratchLocation(s, s"bucketed_${table}")
       s.sql(s"DROP TABLE IF EXISTS $table")
       val p = new org.apache.hadoop.fs.Path(loc)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)

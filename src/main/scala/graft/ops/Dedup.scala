@@ -1530,10 +1530,12 @@ object Dedup {
   /** Driver row: a FOUR-epoch batched-append loop where the encoded
     * auto-compaction policy fires mid-sequence — appends land in the
     * delta area (compact = false) and [[maybeCompactPostingIndex]]
-    * decides after each one. Measured byte ratios (ScaleProbe
-    * --auto-compact at sf0.001/sf0.01/sf0.1, re-taken for the
-    * round-13 scale-adaptive bucket layout whose compact base file
-    * lowered every ratio): one ~25-doc append over the 400-doc base
+    * decides after each one. Measured byte ratios (at
+    * sf0.001/sf0.01/sf0.1, re-taken for the round-13 scale-adaptive
+    * bucket layout whose compact base file lowered every ratio; the
+    * numbers are in PLAN_NOTES.md, and the scale-probe tool whose
+    * `--auto-compact` mode took them can be recovered from commit
+    * 6ed6a13): one ~25-doc append over the 400-doc base
     * reads ~0.066-0.075, two accumulate to ~0.13-0.15, three to
     * ~0.20-0.21 — so at ratio 0.1 the first append stays delta, the
     * second triggers the fold, the third starts a fresh delta that

@@ -573,9 +573,10 @@ object EventQueries {
     * this corpus user_id is near-uniform (max key ≈ mean), so the
     * row demonstrates the DON'T-salt branch — the plan must not pay
     * the salt constant (no __salt column, no 8× dim replication;
-    * SkewUtilsSpec pins both branches on planted inputs, and the
-    * planted-skew ScaleProbe shows the other branch engaging at
-    * volume). Oracle = the plain-join SQL, shared with the static
+    * SkewUtilsSpec pins both branches on planted inputs; the
+    * planted-skew probe run that shows the other branch engaging at
+    * volume is in PLAN_NOTES.md, and its tool can be recovered from
+    * commit 6ed6a13). Oracle = the plain-join SQL, shared with the static
     * row — the decision must be output-invisible by construction. */
   def userEnrichAdaptive(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)

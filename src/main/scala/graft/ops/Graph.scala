@@ -409,7 +409,7 @@ object Graph {
           e.table
         case None =>
           val (t, loc) = writeLayout(s, edges, nBuckets)
-          liveLayoutDirsRef.updateAndGet(_ + new java.io.File(loc).getName)
+          liveLayoutDirsRef.updateAndGet(_ + new org.apache.hadoop.fs.Path(loc).getName)
           bucket.add(LayoutEntry(new java.lang.ref.WeakReference(newPlan),
             newWitness, t, loc))
           t
@@ -436,7 +436,7 @@ object Graph {
     if (m != null) m.values().asScalaValues.foreach { lst =>
       lst.synchronized(lst.asScalaValues).foreach { e =>
         dropLayoutTable(s, e.table, e.loc)
-        liveLayoutDirsRef.updateAndGet(_ - new java.io.File(e.loc).getName)
+        liveLayoutDirsRef.updateAndGet(_ - new org.apache.hadoop.fs.Path(e.loc).getName)
       }
     }
   }
@@ -471,7 +471,7 @@ object Graph {
                           nBuckets: Int): (String, String) = {
     import org.apache.spark.sql.SaveMode
     val table = s"pr_edges_bq_${s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")}_${prLayoutSeq.incrementAndGet()}"
-    val loc = s"target/scratch/bucketed_$table"
+    val loc = Bucketing.scratchLocation(s, s"bucketed_$table")
     edges.select(col("src"), col("dst"))
       // bucket-aligned write (Bucketing.writeBucketed's rationale):
       // repartition(nBuckets, src) IS the bucket hash, so each task

@@ -104,6 +104,13 @@ class HarnessSpec extends AnyFunSuite {
       Seq("PairGen.scala"))
   }
 
+  test("src/main reads no graft.* system property") {
+    // engine settings are reader options, conf keys or constants; a
+    // JVM-wide property is a knob no caller's session can see or scope
+    val sites = sitesOf("""(?:sys\.props(?:\.get)?|System\.getProperty)\(\s*"graft\.""")
+    assert(sites.isEmpty, s"graft.* system property read in ${sites.mkString(", ")}")
+  }
+
   test("every KDC report's global sort goes through KdcQueries.sortReport") {
     // a DataFrame orderBy/sort not followed by .limit(…) (those plan
     // TakeOrderedAndProject), on a line without a Window spec: only

@@ -608,6 +608,51 @@ class KdcV2Spec extends AnyFunSuite {
       s"a report walked ${walks.get() - before - 2} times for one load()")
   }
 
+  test("parallel listing walk: visible files equal a Files.walk reference; each visible dir listed once") {
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get("target/scratch/kdc_v2_parallel_walk").toAbsolutePath
+    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    // two k=v levels of 5 and 5×4 directories (both over the parallel
+    // threshold), with '_'/'.'-prefixed files and directories beside
+    // the visible ones at every level
+    def hiddenBeside(d: Path): Unit = {
+      Seq("_SUCCESS", ".kdc.log.crc").foreach(n => Files.write(d.resolve(n), Array[Byte](1)))
+      Seq("_temporary", ".staging").foreach { n =>
+        Files.createDirectories(d.resolve(n).resolve("day=9"))
+        Files.write(d.resolve(n).resolve("day=9").resolve("kdc.log"), Array[Byte](1))
+      }
+    }
+    Files.createDirectories(root)
+    hiddenBeside(root)
+    for (h <- 1 to 5) {
+      val host = root.resolve(s"host=kdc$h")
+      Files.createDirectories(host)
+      Files.write(host.resolve("kdc.log"), Array[Byte](1))
+      hiddenBeside(host)
+      for (d <- 1 to 4) {
+        val day = host.resolve(s"day=2015-11-2$d")
+        Files.createDirectories(day)
+        Files.write(day.resolve("kdc.log"), Array[Byte](1))
+        hiddenBeside(day)
+      }
+    }
+    def visible(p: Path): Boolean = root.relativize(p).iterator().asScala
+      .forall { c => val n = c.toString; !n.startsWith("_") && !n.startsWith(".") }
+    val walked = Files.walk(root).iterator().asScala.filter(visible).toSeq
+    val wantFiles = walked.filter(Files.isRegularFile(_)).map(_.toUri.getPath).toSet
+    val wantDirs = walked.count(Files.isDirectory(_)) // the root included
+    assert(wantFiles.size == 25 && wantDirs == 26)
+
+    val dirs = graft.kdc.v2.KdcFileLayout.dirsListed
+    val before = dirs.get()
+    val got = graft.kdc.v2.KdcFileLayout.listFiles(root.toString, recursive = true,
+      new org.apache.hadoop.conf.Configuration(), strict = true)
+    assert(got.map(_.path.toUri.getPath).toSet == wantFiles)
+    assert(got.size == wantFiles.size, "a file was listed twice")
+    assert(dirs.get() - before == wantDirs,
+      s"listed ${dirs.get() - before} dirs, want the $wantDirs visible ones")
+  }
+
   test("one listing walk per AvailableNow streaming run; triggers share the snapshot") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val dir = "target/scratch/kdc_v2_onewalk"

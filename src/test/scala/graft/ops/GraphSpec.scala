@@ -448,4 +448,43 @@ class GraphSpec extends AnyFunSuite {
       .count()
     assert(crossings == 0L, "a label propagated across a component boundary")
   }
+
+  /** `bucketed_pr_edges_bq_<appId>_*` dirs under the cwd scratch root
+    * and under the warehouse's `target/scratch` (where a relative
+    * `saveAsTable` path lands). */
+  private def layoutDirs(): Set[java.io.File] = {
+    val prefix = "bucketed_pr_edges_bq_" +
+      spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_") + "_"
+    val warehouse = new java.io.File(
+      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    Seq(new java.io.File("target/scratch"), new java.io.File(warehouse, "target/scratch"))
+      .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+      .filter(_.getName.startsWith(prefix))
+      .map(_.getAbsoluteFile).toSet
+  }
+
+  test("supplier_pagerank_layout removes the layout dir it landed") {
+    val before = layoutDirs()
+    assert(Graph.supplierPageRankLayout(spark, "/root/testdata/sf0.001").count() == 1)
+    val left = layoutDirs() -- before
+    assert(left.isEmpty, s"layout dirs left behind: ${left.mkString(", ")}")
+  }
+
+  test("dropCachedLayouts removes the dirs of the session's cached layouts") {
+    import spark.implicits._
+    val before = layoutDirs()
+    // a path graph no other test lands, so this call writes a new layout
+    val path = (0L until 5L).map(i => (i, i + 1))
+    Graph.pageRankBucketed(spark, (path ++ path.map(_.swap)).toDF("src", "dst"),
+      iterations = 2).collect()
+    val landed = layoutDirs() -- before
+    assert(landed.size == 1, s"expected one new layout dir, got $landed")
+    // it lands in the cwd scratch root, where the sweeps skip it by name
+    assert(landed.head.getParentFile == new java.io.File("target/scratch").getAbsoluteFile)
+    assert(Graph.liveLayoutDirNames.contains(landed.head.getName))
+    Graph.dropCachedLayouts(spark)
+    val left = layoutDirs() -- before
+    assert(left.isEmpty, s"layout dirs left after the drop: ${left.mkString(", ")}")
+    assert(Graph.layoutCacheSize(spark) == 0)
+  }
 }

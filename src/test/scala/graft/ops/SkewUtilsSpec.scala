@@ -181,7 +181,7 @@ class SkewUtilsSpec extends AnyFunSuite {
   }
 
   test("approx cardinality holds 5% on the 10x-replicated probe data") {
-    // the ScaleProbe replication recipe inline: 10 shifted copies of
+    // the 10× replication recipe of the scale probes: 10 shifted copies of
     // sf0.1's events → 10× DISTINCT users per type (~50k, squarely in
     // the dense-HLL regime the rsd=0.02 headroom argument targets)
     val ev = EventQueries.events(spark, "/root/testdata/sf0.1")
