@@ -49,8 +49,7 @@ import org.apache.spark.sql.SparkSession
   * directory segment (no URL-decoding or unescaping on either side — a
   * percent-encoded layout is scoped with the encoded form), and a
   * value containing a comma, the pair separator, cannot be expressed —
-  * use a path glob for such layouts
-  * ([[graft.kdc.v2.KdcFileLayout.parseScope]]).
+  * use a path glob for such layouts ([[KdcMain.parseScope]]).
   *
   * `--report=R` with R ∈ user (default) | service | errors |
   * user-enctypes | service-enctypes.
@@ -113,6 +112,18 @@ object KdcMain {
   private val Reports =
     Seq("user", "service", "errors", "user-enctypes", "service-enctypes")
 
+  /** Parse a `--scope=k=v[,k=v…]` value into partition-path equality
+    * pairs. Values are RAW path-segment strings (see the object
+    * scaladoc), so a value containing a comma, the pair separator,
+    * cannot be expressed. */
+  private def parseScope(s: String): Map[String, String] =
+    s.split(',').toSeq.map { pair =>
+      val eq = pair.indexOf('=')
+      require(eq > 0 && eq < pair.length - 1,
+        s"scope expects k=v[,k=v…], got segment '$pair'")
+      pair.substring(0, eq) -> pair.substring(eq + 1)
+    }.toMap
+
   private val Usage =
     "usage: KdcMain <input> <outdir> [realm] [--recursive] " +
       s"[--scope=k=v[,k=v…]] [--report=${Reports.mkString("|")}]\n" +
@@ -133,8 +144,8 @@ object KdcMain {
     val recursive = flags.contains("--recursive")
     val report = valueOf("--report=").getOrElse("user")
     check(Reports.contains(report), s"unknown --report=$report")
-    val scope: Map[String, String] = valueOf("--scope=")
-      .map(graft.kdc.v2.KdcFileLayout.parseScope).getOrElse(Map.empty)
+    val scope: Map[String, String] =
+      valueOf("--scope=").map(parseScope).getOrElse(Map.empty)
     val Array(in, out) = positional.take(2)
     val realm = positional.lift(2)
     // only stop the session on exit if this invocation created it —

@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportStatistics, SupportsRuntimeFiltering}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
@@ -65,15 +65,9 @@ import graft.kdc.{KdcLogRecord, Sessionizer}
   *    (no URL-unescaping, no type inference — lexical comparison,
   *    like `ts`). Predicate-driven pruning applies to BATCH scans:
   *    Spark builds streaming scans without running filter pushdown
-  *    (as of 4.1), so scope a tailing query's I/O with the
-  *    `scope=k=v[,k=v…]` reader option — scoped-out directories are
-  *    never even listed per trigger — or with a path glob
-  *    (`host=STAR/day=2015-11-22/STAR`); with `maxFileAge` set,
-  *    `maxFileAgeDirKey=day` additionally skips directories wholly
-  *    behind the retention horizon BEFORE listing them, keeping the
-  *    per-trigger walk proportional to the live window (see
-  *    [[KdcMicroBatchStream]]). Partition columns still materialize
-  *    on every path.
+  *    (as of 4.1), so scope a tailing query's I/O with a path glob
+  *    (`host=STAR/day=2015-11-22/STAR`). Partition columns still
+  *    materialize on every path.
   *  - **derived split bounds for splittable-compressed inputs**: a
   *    multi-GB .bz2 log sits UNDER the default 128 MiB split bound in
   *    its compressed size while expanding ~10-30× on decode, so the
@@ -173,25 +167,18 @@ object KdcLogTable {
         k, org.apache.spark.sql.types.StringType, nullable = true)))
   }
 
-  /** Hadoop conf keys forwarded from reader options into the
-    * Configuration of split planning and the executor-side readers
-    * (the split-size bound tests use). */
-  private[v2] val ForwardedKeys = Seq("mapreduce.input.fileinputformat.split.maxsize")
-
-  /** The session's Hadoop configuration with the reader options'
-    * forwarded keys overlaid (options win): what split planning, scan
-    * statistics and the executor-side readers all read. */
+  /** The session's Hadoop configuration with the reader options
+    * overlaid (options win): what split planning, scan statistics and
+    * the executor-side readers all read. */
   private[v2] def hadoopConf(options: Map[String, String]): Configuration = {
     val conf = new Configuration(SparkSession.active.sparkContext.hadoopConfiguration)
-    val pairs = ForwardedKeys.flatMap(k => options.get(k).map(k -> _)) ++
-      // reader option alias: maxSplitBytes -> the Hadoop split bound
-      options.get("maxSplitBytes")
-        .map("mapreduce.input.fileinputformat.split.maxsize" -> _) ++
-      // recursive=true descends nested log layouts (host=…/day=… trees)
-      // in the batch path; the streaming lister honors it natively
-      options.get("recursive")
-        .map("mapreduce.input.fileinputformat.input.dir.recursive" -> _)
-    pairs.foreach { case (k, v) => conf.set(k, v) }
+    // maxSplitBytes is the Hadoop split bound
+    options.get("maxSplitBytes")
+      .foreach(conf.set("mapreduce.input.fileinputformat.split.maxsize", _))
+    // recursive=true descends nested log layouts (host=…/day=… trees)
+    // in the batch path; the streaming lister honors it natively
+    options.get("recursive")
+      .foreach(conf.set("mapreduce.input.fileinputformat.input.dir.recursive", _))
     conf
   }
 
@@ -247,29 +234,9 @@ private[graft] object KdcFileLayout {
   val listingWalks = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Diagnostic: directories actually listed (one namenode listStatus
-    * RPC each) across all walks — the number `dirFilter`-pruned tails
-    * keep proportional to the live window rather than the fleet's full
-    * history (the spec hook for scope/horizon directory
-    * pruning). */
+    * RPC each) across all walks — the spec hook that pins "each
+    * visible directory listed once". */
   val dirsListed = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Parse a `k=v[,k=v…]` scope string (the CLI's `--scope` and the
-    * reader/stream `scope` option) into partition-path equality pairs.
-    * Values are RAW path-segment strings, compared byte-for-byte
-    * against the `k=v` directory segments the layout walker discovers
-    * — NO URL-decoding or unescaping happens on either side (the
-    * walker takes segments verbatim, so a layout writer that
-    * percent-encodes values must scope with the encoded form).
-    * Consequently a partition value containing a comma — the pair
-    * separator — cannot be expressed here at all; scope such layouts
-    * with a path glob instead. */
-  private[graft] def parseScope(s: String): Map[String, String] =
-    s.split(',').toSeq.map { pair =>
-      val eq = pair.indexOf('=')
-      require(eq > 0 && eq < pair.length - 1,
-        s"scope expects k=v[,k=v…], got segment '$pair'")
-      pair.substring(0, eq) -> pair.substring(eq + 1)
-    }.toMap
 
   /** Snapshot the files under `path` (a file, a directory, or a glob);
     * `recursive` additionally descends nested layouts. Driver-side,
@@ -286,19 +253,13 @@ private[graft] object KdcFileLayout {
     * and reports no preferred locations. `strict` throws when the
     * path/glob matches nothing at all (the batch-read contract); the
     * streaming lister passes false — a tailed directory may not exist
-    * yet. `dirFilter` is consulted BEFORE a directory is listed (glob
-    * roots included): a false verdict prunes the whole subtree without
-    * a single RPC into it — the scope/retention-horizon hook the
-    * streaming tail uses to keep the per-trigger walk proportional to
-    * the live window. */
+    * yet. */
   def listFiles(path: String, recursive: Boolean, conf: Configuration,
-                strict: Boolean,
-                dirFilter: Path => Boolean = _ => true): Seq[KdcFileMeta] =
-    listFilesDetailed(path, recursive, conf, strict, dirFilter).files
+                strict: Boolean): Seq[KdcFileMeta] =
+    listFilesDetailed(path, recursive, conf, strict).files
 
   def listFilesDetailed(path: String, recursive: Boolean, conf: Configuration,
-                        strict: Boolean,
-                        dirFilter: Path => Boolean = _ => true): Listing = {
+                        strict: Boolean): Listing = {
     import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus}
     listingWalks.incrementAndGet()
     var nestedSkipped = false
@@ -338,7 +299,7 @@ private[graft] object KdcFileLayout {
     var frontier = scala.collection.mutable.ArrayBuffer[Path]()
     roots.foreach { st =>
       if (st.isFile) { if (visible(st.getPath)) out += meta(st) }
-      else if (dirFilter(st.getPath)) frontier += st.getPath
+      else frontier += st.getPath
     }
     var depth = 0
     while (frontier.nonEmpty) {
@@ -371,7 +332,7 @@ private[graft] object KdcFileLayout {
         level.iterator.flatten.foreach { c =>
           if (visible(c.getPath)) {
             if (c.isFile) out += meta(c)
-            else if (dirFilter(c.getPath)) next += c.getPath
+            else next += c.getPath
           }
         }
         frontier = next
@@ -562,34 +523,11 @@ class KdcScan(val path: String, options: Map[String, String],
 
   private val recursive = options.get("recursive").exists(_.toBoolean)
 
-  /** The `scope` reader option (`k=v[,k=v…]`) as partition-only
-    * equality filters — the option-typed twin of a pushed partition
-    * predicate, and the ONLY whole-file pruning channel for STREAMING
-    * reads (Spark builds streaming scans without running filter
-    * pushdown). Unknown keys fail HERE, at planning, not silently at
-    * admission; `maxFileAgeDirKey` (consumed by the stream) is
-    * validated alongside for the same loud-at-planning posture. */
-  private[v2] val scopeFilters: Array[Filter] = {
-    def known(k: String, what: String): Unit =
-      require(partKeys.contains(k),
-        s"kdclog: $what key '$k' is not a layout partition column " +
-          s"(this layout exposes: ${if (partKeys.isEmpty) "none" else partKeys.mkString(", ")})")
-    options.get("maxFileAgeDirKey").foreach { k =>
-      require(options.contains("maxFileAge"),
-        "kdclog: maxFileAgeDirKey requires maxFileAge (it prunes directories behind the retention horizon)")
-      known(k, "maxFileAgeDirKey")
-    }
-    val m = options.get("scope").map(KdcFileLayout.parseScope).getOrElse(Map.empty)
-    m.keys.foreach(known(_, "scope"))
-    m.map { case (k, v) => sources.EqualTo(k, v): Filter }.toArray
-  }
-
   /** Runtime (DPP) filters, delivered mid-execution via
     * [[SupportsRuntimeFiltering.filter]] — see [[filterAttributes]]. */
   @volatile private var runtimeFilters: Array[Filter] = Array.empty
 
-  private def effectiveFilters: Array[Filter] =
-    pushedFilters ++ scopeFilters ++ runtimeFilters
+  private def effectiveFilters: Array[Filter] = pushedFilters ++ runtimeFilters
 
   /** Dynamic partition pruning for parsed logs
     * (`SupportsRuntimeFiltering`): only the layout's partition-path
@@ -645,7 +583,7 @@ class KdcScan(val path: String, options: Map[String, String],
     * to one file could not be broadcast against a dimension table
     * until AQE replans post-shuffle. The estimate prices exactly what
     * the planner will read: files surviving partition-path pruning
-    * (pushed predicates + the `scope` option), their bytes expanded by
+    * by the pushed predicates, their bytes expanded by
     * the compressed-log factor where a codec applies, rows from the
     * parse-cost probe's bytes-per-session constant, and bytes scaled
     * to the PRUNED column set (a 2-of-15-column projection is priced
@@ -1189,72 +1127,48 @@ object KdcBatchOffset {
   * checkpoint location: file `<dir>/<batchId>` holds the JSON map
   * `path -> modification time` of exactly the files that batch
   * admitted — a delta, not a cumulative snapshot, so replay of batch
-  * N reads one file. The directory carries a `_format` marker file
-  * (`{"version":2}`, [[KdcFileManifest.FormatVersion]]) declaring the
-  * value semantics: version 2 = modification times (what `maxFileAge`
-  * retention ages on). A checkpoint written before the marker existed
-  * carried either file LENGTHS (the oldest format) or mod times (the
-  * immediately-pre-marker format) — indistinguishable on disk, and
-  * membership semantics are identical for every vintage, so such a
-  * legacy checkpoint resumes correctly as long as `maxFileAge` is not
-  * set; WITH it set the horizon could misread lengths as mod times
-  * (bogus horizon, mass purge at the first compaction, after which
-  * purged files could re-admit), so the unverifiable combination
-  * FAILS LOUDLY at manifest load instead of relying on a doc
-  * sentence. The marker is written only when the stream starts on an
-  * empty manifest — a resumed legacy checkpoint is never
-  * retroactively stamped (its old entries might be lengths, and
-  * stamping would forge exactly the misread the marker exists to
-  * block).
-  * Every `compactInterval` batches the stream also writes
-  * `<batchId>.compact` — the FULL seen-file set at that id — and
-  * retires deltas already covered by the PREVIOUS snapshot (kept, so
-  * the replayable delta window always spans at least one full
-  * interval; the engine only ever replays its most recent uncommitted
-  * batch). Restart load cost is therefore one snapshot plus the
-  * recent deltas, and the manifest file count stays bounded at
-  * ~2×interval + 2 instead of growing with every batch the tail has
-  * ever run. Writes are atomic (temp + rename) and idempotent per id:
-  * after a crash between manifest write and the engine's offset-log
-  * write, the orphan id is overwritten by the next admission. */
+  * N reads one file. Membership reads the keys alone, so a checkpoint
+  * of any vintage resumes the same way (older writers stored file
+  * lengths as the values, and stamped a `_format` file that `load()`
+  * and `clean()` leave alone).
+  * Every 10 batches (the stream's `CompactInterval`) the stream
+  * also writes `<batchId>.compact` — the FULL seen-file set at that
+  * id — and retires deltas already covered by the PREVIOUS snapshot
+  * (kept, so the replayable delta window always spans at least one
+  * full interval; the engine only ever replays its most recent
+  * uncommitted batch). Restart load cost is therefore one snapshot
+  * plus the recent deltas, and the manifest file count stays bounded
+  * at ~2×interval + 2 instead of growing with every batch the tail
+  * has ever run. Writes are atomic (temp + rename) and idempotent per
+  * id: after a crash between manifest write and the engine's
+  * offset-log write, the orphan id is overwritten by the next
+  * admission. */
 private[v2] object KdcFileManifest {
-  /** Declared manifest format: 2 = delta/snapshot values are file
-    * MODIFICATION TIMES. 1 (implicit — no `_format` marker on disk)
-    * was file lengths. See the class scaladoc for the resume rules. */
-  private[v2] val FormatVersion = 2
-
-  /** Loaded manifest state: delta entries and compact snapshots
-    * (batchId-ascending) plus the declared format version (None = no
-    * marker on disk — an empty dir or a pre-marker legacy
-    * checkpoint). */
+  /** Loaded manifest state: delta entries and compact snapshots,
+    * batchId-ascending. */
   final case class State(
       deltas: scala.collection.immutable.SortedMap[Long, Map[String, Long]],
-      snaps: scala.collection.immutable.SortedMap[Long, Map[String, Long]],
-      version: Option[Int])
+      snaps: scala.collection.immutable.SortedMap[Long, Map[String, Long]])
 }
 
 private[v2] class KdcFileManifest(dir: Path, conf: Configuration) {
   private implicit val fmt: org.json4s.Formats = org.json4s.DefaultFormats
   private val fs = dir.getFileSystem(conf)
-  private val formatPath = new Path(dir, "_format")
 
-  private def readBytes(p: Path): String = {
+  private def readMap(p: Path): Map[String, Long] = {
     val in = fs.open(p)
     val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
     finally in.close()
-    new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+    org.json4s.jackson.Serialization.read[Map[String, Long]](
+      new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
   }
-
-  private def readMap(p: Path): Map[String, Long] =
-    org.json4s.jackson.Serialization.read[Map[String, Long]](readBytes(p))
 
   /** All manifest state on disk — see [[KdcFileManifest.State]]. */
   def load(): KdcFileManifest.State = {
     val empty = scala.collection.immutable.SortedMap.empty[Long, Map[String, Long]]
-    if (!fs.exists(dir)) return KdcFileManifest.State(empty, empty, None)
+    if (!fs.exists(dir)) return KdcFileManifest.State(empty, empty)
     val deltas = scala.collection.immutable.SortedMap.newBuilder[Long, Map[String, Long]]
     val snaps = scala.collection.immutable.SortedMap.newBuilder[Long, Map[String, Long]]
-    var version: Option[Int] = None
     fs.listStatus(dir).foreach { st =>
       val name = st.getPath.getName
       if (st.isFile && name.forall(_.isDigit))
@@ -1262,11 +1176,8 @@ private[v2] class KdcFileManifest(dir: Path, conf: Configuration) {
       else if (st.isFile && name.endsWith(".compact") &&
                name.stripSuffix(".compact").forall(_.isDigit))
         snaps += name.stripSuffix(".compact").toLong -> readMap(st.getPath)
-      else if (st.isFile && name == "_format")
-        version = org.json4s.jackson.Serialization
-          .read[Map[String, Int]](readBytes(st.getPath)).get("version")
     }
-    KdcFileManifest.State(deltas.result(), snaps.result(), version)
+    KdcFileManifest.State(deltas.result(), snaps.result())
   }
 
   private def writeAtomic(target: Path, json: String): Unit = {
@@ -1289,11 +1200,6 @@ private[v2] class KdcFileManifest(dir: Path, conf: Configuration) {
   def writeSnapshot(batchId: Long, files: Map[String, Long]): Unit =
     writeAtomic(new Path(dir, s"$batchId.compact"),
       org.json4s.jackson.Serialization.write(files))
-
-  /** Stamp the `_format` marker (callers guard: only on a manifest
-    * that was EMPTY at load — see the class scaladoc). */
-  def writeFormat(): Unit =
-    writeAtomic(formatPath, s"""{"version":${KdcFileManifest.FormatVersion}}""")
 
   /** Retire deltas at or below `coveredId` (they are covered by the
     * snapshot at that id) and snapshots strictly below it. */
@@ -1330,148 +1236,39 @@ private[v2] class KdcFileManifest(dir: Path, conf: Configuration) {
   * `reportLatestOffset` and `planInputPartitions` reuse that trigger's
   * snapshot (fresh files carry their listed metadata straight into
   * split planning, so no per-file re-listing either) — O(dirs)
-  * namenode RPC per trigger, the FileStreamSource posture. The
-  * in-memory seen-file set and the `.compact` snapshots are bounded by
-  * the `maxFileAge` RETENTION WINDOW when set (e.g. `"7d"` — Spark
-  * duration syntax): entries whose file modification time falls behind
-  * (latest mod time seen − maxFileAge) are dropped at compaction, and
-  * a visible-but-unseen file older than that horizon is NOT admitted —
-  * on a real log fleet (rotation = new files forever) state is
-  * O(files per retention window), not O(files ever). The contract
-  * edges, both inherent to mod-time retention (FileStreamSource has
-  * the same): a file delivered LATE with an ancient mod time is
-  * silently skipped once the horizon has passed it, and a purged file
-  * re-delivered with a FRESH mod time is admitted again (at-least-once
-  * across the horizon). Retention also assumes lexical admission order
-  * roughly tracks modification order — true for rotation-named logs
-  * (`day=`/timestamp-named files), but a backlog whose lexical order
-  * diverges from mod-time order can have old files skipped once a much
-  * newer one is admitted (set no `maxFileAge` for such layouts).
-  * Without `maxFileAge` the seen set is O(files
-  * ever admitted) — exactly-once with unbounded state, the right
-  * default for bounded fixtures.
-  *
-  * Scoped tails: Spark builds streaming scans WITHOUT running filter
-  * pushdown (as of 4.1), so partition-path predicates cannot prune a
-  * tail the way they prune a batch scan. Two reader options carry the
-  * same whole-file pruning to the streaming path:
-  *
-  *  - `scope=k=v[,k=v…]`: partition-path equality scope (the CLI
-  *    `--scope` syntax). Scoped-out DIRECTORIES are skipped before
-  *    being listed (a `host=kdc7` subtree costs zero RPCs to a
-  *    `host=kdc1`-scoped tail) and scoped-out files are never
-  *    admitted; a key the layout does not expose fails loudly at
-  *    planning ([[KdcScan]]) — which means a SCOPED tail requires the
-  *    `k=v` layout to be discoverable when the stream starts (create
-  *    the first scoped directory before starting, or start unscoped):
-  *    the fail-loud key check is deliberate, because deferring it
-  *    would let a typo'd key tail forever admitting nothing. Values
-  *    compare RAW against path segments
-  *    ([[KdcFileLayout.parseScope]]).
-  *  - `maxFileAgeDirKey=k` (requires `maxFileAge`): declares that
-  *    partition key `k`'s values are ISO-8601 UTC date(-time)
-  *    PREFIXES (`day=2015-11-22`, `hour=2015-11-22T13`). Directories
-  *    whose value is lexically behind the retention horizon —
-  *    truncated to the value's own granularity, so the horizon's
-  *    partial period is always kept — are skipped BEFORE being
-  *    listed: the per-trigger walk is proportional to the LIVE
-  *    WINDOW, not the fleet's full rotation history. The directory's
-  *    declared date is authoritative for this pruning: a file written
-  *    late into an out-of-window directory is never seen (with plain
-  *    `maxFileAge` the admission gate skips it by mod time anyway;
-  *    the option's contract is the same data, minus the listing
-  *    cost).
-  *
-  * Observability: files the age gate skips (visible, unseen, mod time
-  * behind the horizon) are COUNTED per trigger — a WARN fires on
-  * first occurrence per stream instance, and the counts surface in
-  * every progress event's source metrics (`skippedTooOldFiles`,
-  * `skippedTooOldFilesTotal`) — so a misconfigured window or a
-  * backlog whose lexical order diverged from mod-time order reads as
-  * a visible signal, not as an inexplicably quiet source. */
+  * namenode RPC per trigger, the FileStreamSource posture; an
+  * AvailableNow run walks once, at prepare. The in-memory seen-file
+  * set is O(files ever admitted): exactly-once admission with
+  * unbounded state. Compaction bounds the manifest's file count, not
+  * the seen set. */
 class KdcMicroBatchStream(path: String, options: Map[String, String],
                           partKeys: Seq[String],
                           requiredSchema: StructType, filters: Array[Filter],
                           checkpointLocation: String)
     extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics
-    with org.apache.spark.internal.Logging {
+    with SupportsTriggerAvailableNow {
 
   private val maxFilesPerTrigger: Option[Int] =
     options.get("maxFilesPerTrigger").map(_.toInt)
 
   private val recursive = options.get("recursive").exists(_.toBoolean)
 
-  /** Partition-path equality scope — see the class scaladoc. Key
-    * validation happened in [[KdcScan]] (planning-time, loud). */
-  private val scope: Map[String, String] =
-    options.get("scope").map(KdcFileLayout.parseScope).getOrElse(Map.empty)
-
-  /** Partition key whose ISO date(-time) values gate directory
-    * listing against the retention horizon — see the class scaladoc. */
-  private val horizonDirKey: Option[String] = options.get("maxFileAgeDirKey")
-
   /** Write a full-seen-set snapshot (and retire covered deltas) every
-    * this many batches; <= 0 disables compaction. */
-  private val compactInterval: Int =
-    options.get("manifestCompactInterval").map(_.toInt).getOrElse(10)
-
-  /** Retention window (Spark duration syntax, e.g. "7d") bounding the
-    * seen-file set: see the class scaladoc for the exact semantics.
-    * Unset = keep everything (exact once, unbounded state). */
-  private val maxFileAgeMs: Option[Long] =
-    options.get("maxFileAge").map(
-      org.apache.spark.network.util.JavaUtils.timeStringAsMs)
-
-  /** Age horizon given the current seen set: mod times at or above it
-    * are inside the retention window. Computed from the SEEN set's max
-    * mod time (not the wall clock — retention must be deterministic
-    * under replay and immune to clock skew between driver and
-    * filesystem). */
-  private def horizon(seen: Map[String, Long]): Option[Long] =
-    maxFileAgeMs.flatMap { age =>
-      if (seen.isEmpty) None
-      else Some(seen.valuesIterator.max - age)
-    }
+    * this many batches. */
+  private val CompactInterval = 10
 
   private val manifest = new KdcFileManifest(
     new Path(checkpointLocation, "kdc-file-manifest"),
     SparkSession.active.sparkContext.hadoopConfiguration)
 
-  /** Manifest state (delta entries + compact snapshots + declared
-    * format), lazily restored from the checkpoint once per stream
-    * instance. `legacyManifest` = entries exist but no `_format`
-    * marker: a pre-marker checkpoint whose values are file LENGTHS —
-    * fine to resume (membership semantics identical) but NEVER
-    * stamped with the marker and NEVER combined with `maxFileAge`
-    * (the horizon would misread lengths as mod times). */
+  /** Manifest state (delta entries + compact snapshots), lazily
+    * restored from the checkpoint once per stream instance. */
   private var deltas: scala.collection.immutable.SortedMap[Long, Map[String, Long]] = _
   private var snaps: scala.collection.immutable.SortedMap[Long, Map[String, Long]] = _
-  private var manifestVersion: Option[Int] = None
-  private var legacyManifest = false
   private def ensureLoaded(): Unit = synchronized {
     if (deltas == null) {
       val st = manifest.load()
-      deltas = st.deltas; snaps = st.snaps; manifestVersion = st.version
-      legacyManifest =
-        st.version.isEmpty && (st.deltas.nonEmpty || st.snaps.nonEmpty)
-      st.version.filter(_ > KdcFileManifest.FormatVersion).foreach { v =>
-        throw new IllegalStateException(
-          s"kdclog: checkpoint manifest declares format v$v, newer than this " +
-            s"reader's v${KdcFileManifest.FormatVersion} — resume with the " +
-            "writer's version or start a fresh checkpoint")
-      }
-      if (legacyManifest && maxFileAgeMs.isDefined)
-        throw new IllegalStateException(
-          "kdclog: maxFileAge is set over a checkpoint whose file manifest " +
-            "predates the _format marker, so its value semantics cannot be " +
-            "verified — depending on the writer's vintage they are file " +
-            "LENGTHS (oldest format) or modification times. If they are " +
-            "lengths, the retention horizon would misread them: a bogus " +
-            "horizon purges every entry at the first compaction, after which " +
-            "already-processed files can re-admit. Resume WITHOUT maxFileAge " +
-            "(membership semantics are identical for every vintage), or start " +
-            "a fresh checkpoint.")
+      deltas = st.deltas; snaps = st.snaps
     }
   }
 
@@ -1488,83 +1285,25 @@ class KdcMicroBatchStream(path: String, options: Map[String, String],
     * query start; AvailableNow batches never admit past it. */
   @volatile private var prepared: Option[Map[String, KdcFileLayout.KdcFileMeta]] = None
 
-  /** The horizon the `prepared` walk was DIRECTORY-PRUNED with (None =
-    * no horizon pruning applied). prepareForTriggerAvailableNow runs
-    * before the engine reveals the start offset, so its seen set may
-    * still include orphan deltas of a crashed run — whose fresh mod
-    * times would compute a TOO-NEW horizon, and a listing dir-pruned
-    * with it would hide in-window directories from every subsequent
-    * trigger (silent loss, not the skip counter's visible kind).
-    * [[latestOffset]] therefore re-walks instead of reusing `prepared`
-    * whenever this horizon is NEWER than the trigger's own (computed
-    * AFTER orphan truncation); on the no-crash path the two horizons
-    * are equal and the one-walk bound holds. */
-  @volatile private var preparedHorizon: Option[Long] = None
-
   /** The most recent trigger's listing — `latestOffset` refreshes it,
     * `reportLatestOffset`/`planInputPartitions` reuse it (one walk per
     * trigger; see the class scaladoc). */
   @volatile private var lastListing: Option[Map[String, KdcFileLayout.KdcFileMeta]] = None
 
-  /** The horizon rendered into the `maxFileAgeDirKey` value domain:
-    * ISO-8601 UTC seconds (`2015-11-22T13:00:00`) — partition values
-    * are compared as lexical PREFIXES of this (a `day=` value
-    * compares against the first 10 chars), so any ISO granularity
-    * from year to second prunes correctly. */
-  private def isoHorizon(h: Long): String =
-    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.ofEpochMilli(math.max(0L, h)))
-
   /** Walk the visible log files ([[KdcFileLayout.listFiles]]:
     * file/dir/glob + recursive, hidden names skipped at every level)
     * and record the snapshot for this trigger's other callers.
-    * Lenient — a tailed directory may not exist yet. Directories the
-    * `scope` excludes, or whose `maxFileAgeDirKey` date value is
-    * wholly behind `tooOld`, are pruned BEFORE being listed; scoped
-    * files are then filtered exactly (a file can sit outside every
-    * `k=v` directory and must still not admit into a scoped tail). */
-  private def refreshListing(tooOld: Option[Long])
-      : Map[String, KdcFileLayout.KdcFileMeta] = {
+    * Lenient — a tailed directory may not exist yet. */
+  private def refreshListing(): Map[String, KdcFileLayout.KdcFileMeta] = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val horizonIso: Option[String] =
-      if (horizonDirKey.isDefined) tooOld.map(isoHorizon) else None
-    val dirFilter: Path => Boolean =
-      if (scope.isEmpty && horizonIso.isEmpty) _ => true
-      else { d =>
-        val n = d.getName
-        val eq = n.indexOf('=')
-        if (eq <= 0) true
-        else {
-          val k = n.substring(0, eq)
-          val v = n.substring(eq + 1)
-          scope.get(k).forall(_ == v) &&
-            !(horizonDirKey.contains(k) &&
-              horizonIso.exists(h => v < h.take(v.length)))
-        }
-      }
-    val listed = KdcFileLayout.listFiles(path, recursive, conf,
-      strict = false, dirFilter)
-    val files =
-      if (scope.isEmpty) listed
-      else {
-        val values = KdcFileLayout.partValuesAll(
-          path, listed.map(_.path), partKeys, conf)
-        listed.filter(st =>
-          scope.forall { case (k, v) => values(st.path).get(k).contains(v) })
-      }
-    val m = files.map(st => st.path.toString -> st).toMap
+    val m = KdcFileLayout.listFiles(path, recursive, conf, strict = false)
+      .map(st => st.path.toString -> st).toMap
     lastListing = Some(m)
     m
   }
 
   override def prepareForTriggerAvailableNow(): Unit = synchronized {
-    ensureLoaded()
-    val high = (deltas.lastOption.map(_._1) ++ snaps.lastOption.map(_._1))
-      .foldLeft(-1L)(math.max)
-    val tooOld = horizon(seenUpTo(high))
-    preparedHorizon = if (horizonDirKey.isDefined) tooOld else None
-    prepared = Some(refreshListing(tooOld))
+    prepared = Some(refreshListing())
   }
 
   override def initialOffset(): Offset = KdcBatchOffset(-1L)
@@ -1576,20 +1315,6 @@ class KdcMicroBatchStream(path: String, options: Map[String, String],
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead (SupportsAdmissionControl)")
 
-  /** Age-gate observability (see the class scaladoc): files skipped
-    * as too-old in the latest trigger, and the cumulative count of
-    * DISTINCT files skipped over this stream instance's lifetime — a
-    * permanently-behind file that stays visible must not re-count
-    * every trigger (a 1 s tail would read one late file as ~86k
-    * "skipped files" after a day). `skippedPaths` is bounded by the
-    * visible-but-behind-horizon file set: entries leave when the file
-    * does. The WARN fires once per stream instance, on the first
-    * trigger that skips a NEW file. */
-  private val skippedTooOldTotal = new java.util.concurrent.atomic.AtomicLong(0L)
-  @volatile private var skippedTooOldLast = 0L
-  @volatile private var warnedTooOld = false
-  private var skippedPaths: Set[String] = Set.empty
-
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
     val startId = start.asInstanceOf[KdcBatchOffset].batchId
     ensureLoaded()
@@ -1599,51 +1324,9 @@ class KdcMicroBatchStream(path: String, options: Map[String, String],
     deltas = deltas.rangeTo(startId)
     snaps = snaps.rangeTo(startId)
     val seen = seenUpTo(startId)
-    val tooOld = horizon(seen)
-    // reuse the prepared AvailableNow listing only if it was NOT
-    // dir-pruned with a newer horizon than this trigger's (orphan
-    // deltas at prepare time can inflate it — see preparedHorizon);
-    // a listing pruned with an older-or-equal horizon lists a
-    // superset, which the admission gate below filters exactly. On
-    // the stale path the corrected walk REPLACES the prepared bound
-    // (kept coherent for planInputPartitions/reportLatestOffset);
-    // later triggers' horizons only advance, so the replacement stays
-    // safe and the run is back to one walk per trigger.
-    val preparedSafe = preparedHorizon.forall(ph => tooOld.exists(ph <= _))
-    val visible = prepared.filter(_ => preparedSafe).getOrElse {
-      val m = refreshListing(tooOld)
-      if (prepared.isDefined) {
-        prepared = Some(m)
-        preparedHorizon = if (horizonDirKey.isDefined) tooOld else None
-      }
-      m
-    }
-    val unseen = visible.iterator
-      .filter { case (p, _) => !seen.contains(p) }.toSeq
-    val (inWindow, skipped) = tooOld match {
-      case Some(h) => unseen.partition(_._2.modTime >= h)
-      case None => (unseen, Seq.empty)
-    }
-    skippedTooOldLast = skipped.size.toLong
-    if (skipped.nonEmpty) {
-      val newSkips = skipped.filterNot(f => skippedPaths.contains(f._1))
-      if (newSkips.nonEmpty) {
-        skippedTooOldTotal.addAndGet(newSkips.size.toLong)
-        val msg = s"kdclog: maxFileAge admission gate skipped ${newSkips.size} " +
-          s"visible-but-unseen file(s) with modification times behind the " +
-          s"retention horizon (e.g. ${newSkips.head._1}) — late-delivered or " +
-          "backlogged data behind the window is NOT read; widen maxFileAge or " +
-          "start a fresh checkpoint if these files must be admitted"
-        if (!warnedTooOld) { warnedTooOld = true; logWarning(msg) }
-        else logInfo(msg)
-      }
-      // membership tracks the files still visible-and-skipped, so the
-      // set cannot grow past the live listing
-      skippedPaths = skipped.iterator.map(_._1).toSet
-    } else skippedPaths = Set.empty
-    val fresh = inWindow
-      .map { case (p, st) => p -> st.modTime }
-      .sortBy(_._1)
+    val fresh = prepared.getOrElse(refreshListing()).iterator
+      .collect { case (p, st) if !seen.contains(p) => p -> st.modTime }
+      .toSeq.sortBy(_._1)
     val admitted = limit match {
       case m: ReadMaxFiles => fresh.take(m.maxFiles())
       case _ => fresh
@@ -1651,27 +1334,13 @@ class KdcMicroBatchStream(path: String, options: Map[String, String],
     if (admitted.isEmpty) KdcBatchOffset(startId)
     else {
       val id = startId + 1
-      // stamp the format marker exactly once, and only on a manifest
-      // that started EMPTY (a resumed legacy checkpoint keeps its
-      // marker-less state so the maxFileAge guard stays armed forever)
-      if (manifestVersion.isEmpty && !legacyManifest) {
-        manifest.writeFormat()
-        manifestVersion = Some(KdcFileManifest.FormatVersion)
-      }
       manifest.write(id, admitted.toMap)
       deltas = deltas + (id -> admitted.toMap)
-      if (compactInterval > 0 && id > 0 && id % compactInterval == 0) {
+      if (id > 0 && id % CompactInterval == 0) {
         val full = seen ++ admitted
-        // retention: drop seen entries behind the horizon — they can
-        // never be admitted again (the admission gate above holds the
-        // same line), so carrying them only grows the snapshot
-        val snapshot = horizon(full) match {
-          case Some(h) => full.filter(_._2 >= h)
-          case None => full
-        }
-        manifest.writeSnapshot(id, snapshot)
+        manifest.writeSnapshot(id, full)
         val prev = snaps.rangeTo(id - 1).lastOption.map(_._1)
-        snaps = snaps + (id -> snapshot)
+        snaps = snaps + (id -> full)
         // retire what the PREVIOUS snapshot already covers, keeping
         // that snapshot itself so the replayable delta window always
         // spans at least one full interval
@@ -1695,14 +1364,10 @@ class KdcMicroBatchStream(path: String, options: Map[String, String],
     val high = (deltas.lastOption.map(_._1) ++ snaps.lastOption.map(_._1))
       .foldLeft(-1L)(math.max)
     val seen = seenUpTo(high)
-    val tooOld = horizon(seen)
     // reuse this trigger's listing (latestOffset just refreshed it);
     // only a metrics call arriving before any trigger walks itself
-    val visible = prepared.orElse(lastListing).getOrElse(refreshListing(tooOld))
-    val freshCount = visible
-      .count { case (p, st) =>
-        !seen.contains(p) && tooOld.forall(st.modTime >= _)
-      }.toLong
+    val visible = prepared.orElse(lastListing).getOrElse(refreshListing())
+    val freshCount = visible.keysIterator.count(p => !seen.contains(p)).toLong
     val pendingBatches =
       if (freshCount == 0L) 0L
       else maxFilesPerTrigger.map(m => (freshCount + m - 1L) / m).getOrElse(1L)
@@ -1748,15 +1413,6 @@ class KdcMicroBatchStream(path: String, options: Map[String, String],
     KdcReaderFactory(KdcLogTable.readerConf(options), requiredSchema.fieldNames,
       filters.filterNot(f =>
         f.references.nonEmpty && f.references.forall(partKeys.contains)))
-
-  /** Progress-event source metrics: the age-gate skip counts (see the
-    * class scaladoc) — zero in both slots on a healthy tail. */
-  override def metrics(latestConsumedOffset: java.util.Optional[Offset])
-      : util.Map[String, String] =
-    Map(
-      "skippedTooOldFiles" -> skippedTooOldLast.toString,
-      "skippedTooOldFilesTotal" -> skippedTooOldTotal.get().toString
-    ).asJava
 
   override def deserializeOffset(json: String): Offset = KdcBatchOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()

@@ -60,9 +60,10 @@ class HarnessSpec extends AnyFunSuite {
     assert(new java.io.File(out).listFiles().exists(_.getName.startsWith("part-")))
   }
 
-  /** File name of every match of `re` under `root` (a directory or one
-    * file), once per match. */
-  private def sitesOf(re: String, root: String = "src/main"): Seq[String] = {
+  /** (file name, match) of every match of `re` under `root` (a
+    * directory or one file); the match is `re`'s first group when it
+    * has one. */
+  private def matchesOf(re: String, root: String): Seq[(String, String)] = {
     def files(d: java.io.File): Seq[java.io.File] =
       if (d.isFile) Seq(d)
       else Option(d.listFiles()).toSeq.flatten.flatMap { f =>
@@ -70,9 +71,15 @@ class HarnessSpec extends AnyFunSuite {
       }
     files(new java.io.File(root)).flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      Seq.fill(re.r.findAllIn(src).size)(f.getName)
-    }.sorted
+      re.r.findAllMatchIn(src).map(m =>
+        f.getName -> (if (m.groupCount > 0) m.group(1) else m.matched)).toSeq
+    }
   }
+
+  /** File name of every match of `re` under `root` (a directory or one
+    * file), once per match. */
+  private def sitesOf(re: String, root: String = "src/main"): Seq[String] =
+    matchesOf(re, root).map(_._1).sorted
 
   test("src/main builds sessions only in Harness and EntrySmoke") {
     assert(sitesOf("SparkSession\\.builder\\b") == Seq("EntrySmoke.scala", "Harness.scala"))
@@ -120,5 +127,13 @@ class HarnessSpec extends AnyFunSuite {
       """(?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)(?!\s*\.limit\()"""
     assert(sitesOf(globalSort, "src/main/scala/graft/kdc/KdcQueries.scala") ==
       Seq("KdcQueries.scala"))
+  }
+
+  test("the kdclog table reads exactly the reader options its callers set") {
+    val keys = matchesOf(
+      """\b(?:options|opts|properties)\.(?:get|contains)\(\s*"([^"]+)"""",
+      "src/main/scala/graft/kdc/v2").map(_._2).toSet
+    assert(keys == Set("path", "recursive", "maxSplitBytes", "maxFilesPerTrigger"),
+      s"kdc/v2 reads options ${keys.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -221,4 +221,60 @@ class KdcParseQueriesSpec extends AnyFunSuite {
       "plain\t2015-11-23T08:00:00\t2015-11-23T08:00:00\t1",
       "visitor\t2015-11-23T09:00:00\t2015-11-23T09:00:00\t1"))
   }
+
+  test("README #7 and the per-group/error-line reports match rows derived from the fixture") {
+    // The fixture's 18 sessions (eve's trailing partial is dropped),
+    // every one valid. host1 (AS, service krbtgt/<client realm>): cg2v
+    // ok x2; alice ok, BAD_PASSWORD, ok next day; mallory BAD_NAME;
+    // expired UNUSABLE_NAME; nopre MISSING_PREAUTH (no error line);
+    // plain ok; visitor ok in FEDERATED.ORG. host2 (TGS): cg2v
+    // host/www x2 ok; alice imap ok; bob host/www answered with a
+    // referral; bob ldap, carol host/www and dave nfs each end in an
+    // error line; frank's second header overwrites host/www with cifs.
+    val recs = KdcSource.recordsAligned(spark, KdcParseQueries.fixtureDir())
+    val realm = "SQUILL.DEMENTIA.ORG"
+    val tgt = s"krbtgt/$realm"
+
+    // README #7: confirmed TGS uses (valid, success, no referral) are
+    // cg2v->host/www, alice->imap and frank->cifs, one distinct
+    // service per user, so k=1 keeps all three and k=0 none
+    val few = KdcQueries.usersWithFewServices(recs, 1).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(few == Seq("alice" -> 1L, "cg2v" -> 1L, "frank" -> 1L))
+    assert(KdcQueries.usersWithFewServices(recs, 0).count() == 0L)
+
+    // each user's two most requested services over all valid sessions,
+    // ties broken by service name: cg2v has 2 host/www and 2 krbtgt
+    // ('h' < 'k'), alice 3 krbtgt and 1 imap, bob host/www (the
+    // referral) and ldap once each; everyone else has one service
+    val perUser = KdcQueries.topNPerGroup(recs, "client", "service", 2).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getInt(3))).toSeq
+    assert(perUser == Seq(
+      ("alice", tgt, 3L, 1), ("alice", "imap/mail.example.org", 1L, 2),
+      ("bob", "host/www.example.org", 1L, 1), ("bob", "ldap/dir.example.org", 1L, 2),
+      ("carol", "host/www.example.org", 1L, 1),
+      ("cg2v", "host/www.example.org", 2L, 1), ("cg2v", tgt, 2L, 2),
+      ("dave", "nfs/files.example.org", 1L, 1),
+      ("expired", tgt, 1L, 1),
+      ("frank", "cifs/share.example.org", 1L, 1),
+      ("mallory", tgt, 1L, 1),
+      ("nopre", tgt, 1L, 1),
+      ("plain", tgt, 1L, 1),
+      ("visitor", "krbtgt/FEDERATED.ORG", 1L, 1)))
+
+    // the six explicit error lines, verbatim and once each, so the
+    // (n desc, line) order is line order, which is ts order here;
+    // n = 3 cuts after the third
+    val errorLines = Seq(
+      s"2015-11-22T17:30:00 Failed to decrypt PA-DATA -- alice@$realm",
+      s"2015-11-22T18:00:00 Client not found in database: mallory@$realm",
+      s"2015-11-22T18:10:00 Client expired -- expired@$realm",
+      s"2015-11-22T19:20:00 Too large time skew -- bob@$realm",
+      s"2015-11-22T19:25:00 Failed building TGS-REP to carol@$realm",
+      "2015-11-22T19:30:00 Request to forward non-forwardable ticket")
+    def lines(n: Int) = KdcQueries.commonErrorLines(recs, n).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(lines(20) == errorLines.map(_ -> 1L))
+    assert(lines(3) == errorLines.take(3).map(_ -> 1L))
+  }
 }

@@ -47,6 +47,30 @@ class KdcV2Spec extends AnyFunSuite {
     }
   }
 
+  /** A one-session log whose user (`uNN`) and IP derive from `i`. */
+  private def singleSessionLog(i: Int): String = Seq(
+    f"2015-11-22T10:00:$i%02d AS-REQ u$i%02d@X.ORG from IPv4:10.0.0.$i for krbtgt/X.ORG@X.ORG",
+    f"2015-11-22T10:00:$i%02d ENC-TS Pre-authentication succeeded -- u$i%02d@X.ORG",
+    f"2015-11-22T10:00:$i%02d sending 752 bytes to IPv4:10.0.0.$i").mkString("\n") + "\n"
+
+  /** One AvailableNow run of a one-file-per-batch tail over `dir` with
+    * checkpoint `cp`; returns the valid sessions admitted so far
+    * (complete mode, so earlier runs' files count too, and a
+    * re-admitted file counts twice). */
+  private def countingTail(dir: String, cp: String, qname: String): Long = {
+    val q = spark.readStream.format("kdclog")
+      .option("maxFilesPerTrigger", "1")
+      .load(dir)
+      .filter(col("valid")).groupBy(col("client")).agg(count(lit(1)).as("n"))
+      .writeStream.format("memory").queryName(qname)
+      .outputMode("complete").option("checkpointLocation", cp)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val n = spark.table(qname).agg(sum(col("n"))).head.getLong(0)
+    spark.catalog.dropTempView(qname)
+    n
+  }
+
   test("v2 batch read equals the shuffle-by-file parse path") {
     // the by-file reference: each fixture file's lines folded alone
     val viaV2 = v2().collect().map(_.toString).sorted.toSeq
@@ -92,13 +116,14 @@ class KdcV2Spec extends AnyFunSuite {
   test("reader factory ships the SESSION hadoop conf, with reader options overlaid") {
     // session-level settings (fs credentials, the split bound) must
     // reach the EXECUTOR-side reader, not only driver-side split
-    // planning; per-read options win over session values
+    // planning; per-read options win over session values (the
+    // maxSplitBytes option is the split bound's one reader spelling)
     val maxSize = "mapreduce.input.fileinputformat.split.maxsize"
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("graft.test.session.key", "from-session")
     hc.set(maxSize, "2097152")
     try {
-      val q = v2(maxSize -> "4194304")
+      val q = v2("maxSplitBytes" -> "4194304")
       val factory = kdcScan(q).toBatch.createReaderFactory()
         .asInstanceOf[graft.kdc.v2.KdcReaderFactory]
       val conf = factory.confBc.value.value
@@ -452,45 +477,54 @@ class KdcV2Spec extends AnyFunSuite {
     val dir = "target/scratch/kdc_v2_compact"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     new java.io.File(dir).mkdirs()
-    def logFor(i: Int): String = Seq(
-      f"2015-11-22T10:00:$i%02d AS-REQ u$i%02d@X.ORG from IPv4:10.0.0.$i for krbtgt/X.ORG@X.ORG",
-      f"2015-11-22T10:00:$i%02d ENC-TS Pre-authentication succeeded -- u$i%02d@X.ORG",
-      f"2015-11-22T10:00:$i%02d sending 752 bytes to IPv4:10.0.0.$i").mkString("\n") + "\n"
-    (0 until 25).foreach(i =>
-      Files.write(Paths.get(dir, f"f$i%02d.log"), logFor(i).getBytes("UTF-8")))
+    (0 until 35).foreach(i =>
+      Files.write(Paths.get(dir, f"f$i%02d.log"), singleSessionLog(i).getBytes("UTF-8")))
     val cp = s"$dir/_checkpoint"
-    def run(qname: String): Long = {
-      val q = spark.readStream.format("kdclog")
-        .option("maxFilesPerTrigger", "1")
-        .option("manifestCompactInterval", "5")
-        .load(dir)
-        .filter(col("valid")).groupBy(col("client")).agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val n = spark.table(qname).count()
-      spark.catalog.dropTempView(qname)
-      n
-    }
-    assert(run("kdc_v2_compact_a") == 25)
-    // 25 single-file batches at interval 5: snapshots land at 5/10/15/20
-    // and each retires the window its PREDECESSOR covered — the dir
-    // holds the last two snapshots plus the post-snapshot deltas, not
-    // one file per batch ever run
+    assert(countingTail(dir, cp, "kdc_v2_compact_a") == 35)
+    // 35 single-file batches (ids 0..34) at the interval of 10:
+    // snapshots land at 10/20/30 and each retires the window its
+    // PREDECESSOR covered — the dir holds the last two snapshots plus
+    // the deltas after the older one, not one file per batch ever run
     val names = new java.io.File(s"$cp/sources/0/kdc-file-manifest").listFiles()
-      .map(_.getName).filterNot(_.startsWith(".")).sorted.toSeq
-    assert(names.count(_.endsWith(".compact")) == 2,
-      s"expected exactly the last two snapshots, got: $names")
-    assert(names.contains("15.compact") && names.contains("20.compact"), names.toString)
-    val deltaIds = names.filter(_.forall(_.isDigit)).map(_.toLong)
-    assert(deltaIds.nonEmpty && deltaIds.forall(_ > 15),
-      s"deltas covered by the previous snapshot must be retired: $names")
-    assert(names.length <= 12, s"manifest not bounded: ${names.length} files")
+      .map(_.getName).filterNot(_.startsWith(".")).toSet
+    assert(names == Set("20.compact", "30.compact") ++ (21 to 34).map(_.toString),
+      s"manifest after 35 batches: ${names.toSeq.sorted}")
+    assert(names.size <= 2 * 10 + 2, s"manifest not bounded: ${names.size} files")
     // restart after one more file arrives: the seen-set restores from
     // snapshot + recent deltas, so exactly ONE new file is admitted
-    Files.write(Paths.get(dir, "f25.log"), logFor(25).getBytes("UTF-8"))
-    assert(run("kdc_v2_compact_b") == 26, "restart lost or re-admitted files")
+    Files.write(Paths.get(dir, "f35.log"), singleSessionLog(35).getBytes("UTF-8"))
+    assert(countingTail(dir, cp, "kdc_v2_compact_b") == 36,
+      "restart lost or re-admitted files")
+  }
+
+  test("a checkpoint with the older _format marker resumes: only unseen files admit, compaction keeps it readable") {
+    import java.nio.file.{Files, Paths}
+    val dir = "target/scratch/kdc_v2_marker_resume"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    new java.io.File(dir).mkdirs()
+    def put(i: Int): Unit =
+      Files.write(Paths.get(dir, f"f$i%02d.log"), singleSessionLog(i).getBytes("UTF-8"))
+    val cp = s"$dir/_checkpoint"
+    val manifestDir = new java.io.File(s"$cp/sources/0/kdc-file-manifest")
+    // ids 0..11: the engine's offset/commit logs, deltas 0..11 and the
+    // id-10 snapshot — then the marker older writers stamped at the
+    // first admission, which is the whole on-disk shape they left
+    (0 until 12).foreach(put)
+    assert(countingTail(dir, cp, "kdc_v2_marker_a") == 12)
+    Files.writeString(new java.io.File(manifestDir, "_format").toPath, """{"version":2}""")
+    assert(manifestDir.list().filterNot(_.startsWith(".")).toSet ==
+      Set("_format", "10.compact") ++ (0 to 11).map(_.toString))
+    // restart with 9 unseen files: ids 12..20 admit exactly those, and
+    // id 20's compaction runs clean() over the marked directory
+    (12 until 21).foreach(put)
+    assert(countingTail(dir, cp, "kdc_v2_marker_b") == 21,
+      "restart over a marked checkpoint lost or re-admitted files")
+    val names = manifestDir.list().filterNot(_.startsWith(".")).toSet
+    assert(names == Set("_format", "10.compact", "20.compact") ++ (11 to 20).map(_.toString),
+      s"manifest after the compacting restart: ${names.toSeq.sorted}")
+    // and the cleaned directory still loads: one more file, one admission
+    put(21)
+    assert(countingTail(dir, cp, "kdc_v2_marker_c") == 22)
   }
 
   test("orphan manifest entries from a crashed run are overwritten, never replayed") {
@@ -682,66 +716,6 @@ class KdcV2Spec extends AnyFunSuite {
       s"AvailableNow run performed ${walks.get() - before} walks, want 2")
   }
 
-  test("maxFileAge retention: snapshots bounded, purged-but-present files never re-admitted") {
-    import java.nio.file.Files
-    val dir = "target/scratch/kdc_v2_retention"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    new java.io.File(dir).mkdirs()
-    def session(u: String): String =
-      s"2015-11-22T10:00:00 AS-REQ $u@X.ORG from IPv4:10.0.0.1 for krbtgt/X.ORG@X.ORG\n" +
-        s"2015-11-22T10:00:00 ENC-TS Pre-authentication succeeded -- $u@X.ORG\n" +
-        "2015-11-22T10:00:00 sending 752 bytes to IPv4:10.0.0.1\n"
-    val base = System.currentTimeMillis() - 60L * 60 * 1000
-    def writeLog(name: String, user: String, modOffsetMin: Long): Unit = {
-      val f = new java.io.File(dir, name)
-      Files.write(f.toPath, session(user).getBytes("UTF-8"))
-      assert(f.setLastModified(base + modOffsetMin * 60000L))
-    }
-    (0 until 12).foreach(i => writeLog(f"log-$i%03d.log", f"u$i%03d", i))
-    val cp = s"$dir/_checkpoint"
-    def runOnce(qname: String): Long = {
-      val q = spark.readStream.format("kdclog")
-        .option("maxFilesPerTrigger", "1")
-        .option("manifestCompactInterval", "5")
-        .option("maxFileAge", "3m")
-        .load(dir)
-        .groupBy().count()
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val n = spark.table(qname).collect().head.getLong(0)
-      spark.catalog.dropTempView(qname)
-      n
-    }
-    // ids 0..11 admit log-000..011 (1 file per batch, lexical order =
-    // mod-time order); compaction at ids 5 and 10 purges entries
-    // behind (latest mod - 3m). Every file still admitted EXACTLY
-    // once: purged files are held out by the admission age gate, not
-    // by membership
-    assert(runOnce("kdc_v2_ret_a") == 12L,
-      "every file should be admitted exactly once on the first run")
-    // the id-10 snapshot saw files 0..10 (latest = base+10min, horizon
-    // = base+7min) -> exactly {7,8,9,10} survive: bounded by the
-    // retention window, not by files-ever-seen
-    val manifestDir = new java.io.File(s"$cp/sources/0/kdc-file-manifest")
-    val compacts = manifestDir.listFiles().map(_.getName)
-      .filter(_.endsWith(".compact")).sortBy(_.stripSuffix(".compact").toInt)
-    assert(compacts.nonEmpty, "no compact snapshot written")
-    val snap = Files.readString(
-      new java.io.File(manifestDir, compacts.last).toPath)
-    val snapKeys = "log-\\d+".r.findAllIn(snap).toSet
-    assert(snapKeys == Set("log-007", "log-008", "log-009", "log-010"),
-      s"snapshot not bounded by the retention window: $snapKeys")
-    // restart: one fresh-mod file (admitted) and one ancient-mod file
-    // (behind the horizon — silently skipped, the documented edge);
-    // the purged-but-still-present log-000..006 must NOT re-admit
-    writeLog("log-012.log", "u012", 12L)
-    writeLog("ancient.log", "uOLD", 0L)
-    assert(runOnce("kdc_v2_ret_b") == 13L,
-      "restart should admit exactly the one in-window new file")
-  }
-
   test("scan statistics: post-pruning sizes feed the planner; a scoped parse broadcasts pre-AQE") {
     val root = KdcParseQueries.fleetFixtureDir()
     def relStats(q: DataFrame): org.apache.spark.sql.catalyst.plans.logical.Statistics = {
@@ -791,217 +765,6 @@ class KdcV2Spec extends AnyFunSuite {
     } finally spark.conf.set(key, saved)
   }
 
-  test("scope option: batch file pruning equals the pushed-filter path; unknown keys fail loudly") {
-    val root = KdcParseQueries.fleetFixtureDir()
-    val q = spark.read.format("kdclog")
-      .option("recursive", "true").option("scope", "day=2015-11-22").load(root)
-      .select(col("client"), col("ts"))
-    val planned = kdcScan(q).toBatch.planInputPartitions()
-      .flatMap(_.asInstanceOf[graft.kdc.v2.KdcInputPartition].ranges.map(_.path)).distinct
-    assert(planned.length == 1 && planned.head.contains("day=2015-11-22"),
-      s"scope option did not prune files: ${planned.mkString(", ")}")
-    val viaOption = q.collect().map(_.toString).sorted.toSeq
-    val viaFilter = spark.read.format("kdclog").option("recursive", "true").load(root)
-      .filter(col("day") === "2015-11-22").select(col("client"), col("ts"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(viaOption == viaFilter, "scope option diverged from the pushed filter")
-    val bad = intercept[Throwable] {
-      spark.read.format("kdclog")
-        .option("recursive", "true").option("scope", "bogus=1").load(root).count()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(bad).exists(_.contains("scope key 'bogus'")),
-      s"unknown scope key did not fail loudly: $bad")
-  }
-
-  test("scoped tail: out-of-scope directories are never LISTED, out-of-scope files never admitted") {
-    import java.nio.file.{Files, Paths}
-    val root = "target/scratch/kdc_v2_scoped_tail"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    Seq("2015-11-20", "2015-11-21", "2015-11-22").zipWithIndex.foreach { case (day, i) =>
-      Files.createDirectories(Paths.get(s"$root/day=$day"))
-      Files.write(Paths.get(s"$root/day=$day/kdc.log"),
-        (if (i == 0) KdcParseQueries.host1Log else KdcParseQueries.host2Log).getBytes("UTF-8"))
-    }
-    // inference walks unscoped (layout discovery needs the keys); the
-    // stream's own walk is the one that must prune
-    val rs = spark.readStream.format("kdclog")
-      .option("recursive", "true").option("scope", "day=2015-11-21").load(root)
-      .groupBy(col("client")).agg(count(lit(1)).as("n"))
-    val dirs = graft.kdc.v2.KdcFileLayout.dirsListed
-    val before = dirs.get()
-    val q = rs.writeStream.format("memory").queryName("kdc_v2_scoped_tail")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val listed = dirs.get() - before
-    val got = spark.table("kdc_v2_scoped_tail").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    spark.catalog.dropTempView("kdc_v2_scoped_tail")
-    // AvailableNow = ONE prepare walk: the root + exactly the scoped
-    // day directory — day=2015-11-20 and day=2015-11-22 cost zero RPCs
-    assert(listed == 2, s"scoped tail listed $listed dirs, want 2 (root + scoped day)")
-    val want = spark.read.format("kdclog").load(s"$root/day=2015-11-21/kdc.log")
-      .groupBy(col("client")).agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == want, s"scoped tail admitted out-of-scope data: $got vs $want")
-  }
-
-  test("maxFileAgeDirKey: directories wholly behind the horizon are skipped BEFORE listing") {
-    import java.nio.file.{Files, Paths}
-    val root = "target/scratch/kdc_v2_horizon_tail"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    val fmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
-    // day=D directories whose file mod times sit at D 12:00 UTC
-    def dayMillis(day: String): Long =
-      java.time.LocalDate.parse(day, fmt).atTime(12, 0)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    def plant(day: String, name: String, content: String, modDay: String): Unit = {
-      Files.createDirectories(Paths.get(s"$root/day=$day"))
-      val f = new java.io.File(s"$root/day=$day/$name")
-      Files.write(f.toPath, content.getBytes("UTF-8"))
-      assert(f.setLastModified(dayMillis(modDay)))
-    }
-    plant("2015-11-20", "kdc.log", KdcParseQueries.host1Log, "2015-11-20")
-    plant("2015-11-21", "kdc.log", KdcParseQueries.host2Log, "2015-11-21")
-    plant("2015-11-22", "kdc.log", KdcParseQueries.host1Log, "2015-11-22")
-    val cp = s"$root/_checkpoint"
-    def run(qname: String): Long = {
-      val q = spark.readStream.format("kdclog")
-        .option("recursive", "true")
-        .option("maxFileAge", "36h").option("maxFileAgeDirKey", "day")
-        .load(root)
-        .groupBy().count()
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val n = spark.table(qname).collect().head.getLong(0)
-      spark.catalog.dropTempView(qname)
-      n
-    }
-    // first run: empty seen set -> no horizon -> everything admits
-    val all = run("kdc_v2_horizon_a")
-    assert(all > 0)
-    // new day arrives; a LATE file also lands in the oldest directory
-    plant("2015-11-23", "kdc.log", KdcParseQueries.host2Log, "2015-11-23")
-    plant("2015-11-20", "late.log", KdcParseQueries.host1Log, "2015-11-23")
-    // restart: horizon = (max seen mod = 22nd 12:00) - 36h = 21st
-    // 00:00 -> day=2015-11-20 is wholly behind it and must not even be
-    // LISTED (the directory's declared date is authoritative — the
-    // late file's fresh mod time does not resurrect the subtree)
-    val dirs = graft.kdc.v2.KdcFileLayout.dirsListed
-    val rs = spark.readStream.format("kdclog")
-      .option("recursive", "true")
-      .option("maxFileAge", "36h").option("maxFileAgeDirKey", "day")
-      .load(root)
-      .groupBy().count()
-    val before = dirs.get()
-    val q2 = rs.writeStream.format("memory").queryName("kdc_v2_horizon_b")
-      .outputMode("complete").option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q2.awaitTermination()
-    val listed = dirs.get() - before
-    val total = spark.table("kdc_v2_horizon_b").collect().head.getLong(0)
-    spark.catalog.dropTempView("kdc_v2_horizon_b")
-    assert(listed == 4,
-      s"horizon tail listed $listed dirs, want 4 (root + days 21..23; day=20 pruned unlisted)")
-    val newDay = Sessionizer.sessionize(KdcParseQueries.host2Log.linesIterator).size
-    assert(total == all + newDay,
-      s"restart should admit exactly the new day's file: got $total, want ${all + newDay}")
-  }
-
-  test("age-gate skips are observable: WARN counter surfaces in progress source metrics") {
-    import java.nio.file.Files
-    val dir = "target/scratch/kdc_v2_skipmetrics"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    new java.io.File(dir).mkdirs()
-    def session(u: String): String =
-      s"2015-11-22T10:00:00 AS-REQ $u@X.ORG from IPv4:10.0.0.1 for krbtgt/X.ORG@X.ORG\n" +
-        s"2015-11-22T10:00:00 ENC-TS Pre-authentication succeeded -- $u@X.ORG\n" +
-        "2015-11-22T10:00:00 sending 752 bytes to IPv4:10.0.0.1\n"
-    val base = System.currentTimeMillis() - 60L * 60 * 1000
-    def writeLog(name: String, user: String, modOffsetMin: Long): Unit = {
-      val f = new java.io.File(dir, name)
-      Files.write(f.toPath, session(user).getBytes("UTF-8"))
-      assert(f.setLastModified(base + modOffsetMin * 60000L))
-    }
-    (0 until 6).foreach(i => writeLog(f"log-$i%03d.log", f"u$i%03d", i * 2))
-    val cp = s"$dir/_checkpoint"
-    def run(qname: String): Seq[Map[String, String]] = {
-      val q = spark.readStream.format("kdclog")
-        .option("maxFileAge", "3m").load(dir)
-        .groupBy().count()
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.catalog.dropTempView(qname)
-      q.recentProgress.toSeq.flatMap(_.sources.toSeq)
-        .map(_.metrics.asScala.toMap)
-    }
-    // one batch admits 0..5 (empty seen set -> no horizon yet)
-    val m1 = run("kdc_v2_skip_a")
-    assert(m1.forall(_.get("skippedTooOldFiles").forall(_ == "0")),
-      s"first run should skip nothing: $m1")
-    // a fresh file moves the horizon past an ancient latecomer: the
-    // restart must admit the fresh file, skip the ancient one, and SAY
-    // SO in the source metrics instead of reading as an empty source
-    writeLog("log-fresh.log", "uNEW", 12L)
-    writeLog("ancient.log", "uOLD", 0L)
-    val m2 = run("kdc_v2_skip_b")
-    assert(m2.exists(_.get("skippedTooOldFiles").contains("1")),
-      s"age-gate skip not surfaced in source metrics: $m2")
-    assert(m2.exists(m => m.get("skippedTooOldFilesTotal").exists(_.toLong >= 1L)),
-      s"cumulative skip count missing: $m2")
-  }
-
-  test("manifest format marker: fresh checkpoints are stamped; legacy + maxFileAge fails loudly") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.kdc.v2.{KdcBatchOffset, KdcMicroBatchStream}
-    val dir = "target/scratch/kdc_v2_format"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    new java.io.File(dir).mkdirs()
-    Files.write(Paths.get(dir, "host1.log"), KdcParseQueries.host1Log.getBytes("UTF-8"))
-    def stream(cp: String, opts: Map[String, String]): KdcMicroBatchStream =
-      new KdcMicroBatchStream(dir, opts, Seq.empty,
-        graft.kdc.v2.KdcLogTable.schema, Array.empty, cp)
-    // fresh checkpoint: the first admission stamps the _format marker
-    val cpFresh = s"$dir/_cp_fresh"
-    stream(cpFresh, Map.empty).latestOffset(KdcBatchOffset(-1L), ReadLimit.allAvailable())
-    val marker = Paths.get(s"$cpFresh/kdc-file-manifest/_format")
-    assert(Files.exists(marker), "fresh manifest not stamped with _format")
-    assert(Files.readString(marker).contains("\"version\":2"))
-    // legacy checkpoint (pre-marker, values were file LENGTHS):
-    // resumes fine without maxFileAge — and is NOT retroactively
-    // stamped (stamping would forge the very misread the marker blocks)
-    val cpLegacy = s"$dir/_cp_legacy"
-    new java.io.File(s"$cpLegacy/kdc-file-manifest").mkdirs()
-    Files.writeString(Paths.get(s"$cpLegacy/kdc-file-manifest/0"),
-      s"""{"$dir/host1.log":752}""")
-    stream(cpLegacy, Map.empty).latestOffset(KdcBatchOffset(0L), ReadLimit.allAvailable())
-    assert(!Files.exists(Paths.get(s"$cpLegacy/kdc-file-manifest/_format")),
-      "legacy manifest must never be retroactively stamped")
-    // legacy + maxFileAge: the horizon would misread lengths as mod
-    // times — fail loudly instead of purging/skipping wrongly
-    val ex = intercept[IllegalStateException] {
-      stream(cpLegacy, Map("maxFileAge" -> "1h"))
-        .latestOffset(KdcBatchOffset(0L), ReadLimit.allAvailable())
-    }
-    assert(ex.getMessage.contains("predates the _format marker"), ex.getMessage)
-    // a manifest from a NEWER writer fails loudly too
-    val cpFuture = s"$dir/_cp_future"
-    new java.io.File(s"$cpFuture/kdc-file-manifest").mkdirs()
-    Files.writeString(Paths.get(s"$cpFuture/kdc-file-manifest/_format"),
-      """{"version":99}""")
-    val ex2 = intercept[IllegalStateException] {
-      stream(cpFuture, Map.empty).latestOffset(KdcBatchOffset(-1L), ReadLimit.allAvailable())
-    }
-    assert(ex2.getMessage.contains("newer than this reader"), ex2.getMessage)
-  }
-
   test("provider snapshot is consumed once: a reused provider re-lists instead of planning stale") {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     val root = KdcParseQueries.fleetFixtureDir()
@@ -1044,159 +807,6 @@ class KdcV2Spec extends AnyFunSuite {
       s"rows=$rows, want ${(compressedLen * 16L) / 296L} from len=$compressedLen")
     assert(rel.stats.sizeInBytes > BigInt(compressedLen),
       s"stats priced at compressed size: ${rel.stats.sizeInBytes} <= $compressedLen")
-  }
-
-  test("scope and maxFileAgeDirKey compose: one dirFilter prunes on both axes") {
-    import java.nio.file.{Files, Paths}
-    val root = "target/scratch/kdc_v2_scope_horizon"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    val fmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
-    def dayMillis(day: String): Long =
-      java.time.LocalDate.parse(day, fmt).atTime(12, 0)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    // two hosts x three days; the tail scopes to hostA AND ages on day
-    for (host <- Seq("hostA", "hostB"); day <- Seq("2015-11-20", "2015-11-21", "2015-11-22")) {
-      val d = Paths.get(s"$root/host=$host/day=$day")
-      Files.createDirectories(d)
-      val f = d.resolve("kdc.log").toFile
-      Files.write(f.toPath, KdcParseQueries.host1Log.getBytes("UTF-8"))
-      assert(f.setLastModified(dayMillis(day)))
-    }
-    val cp = s"$root/_checkpoint"
-    // schema inference walks UNPRUNED (layout discovery needs every
-    // key) — build each leg's frame BEFORE the counter snapshot so
-    // only the STREAM's own prepare walk is measured
-    def frame() = spark.readStream.format("kdclog")
-      .option("recursive", "true")
-      .option("scope", "host=hostA")
-      .option("maxFileAge", "36h").option("maxFileAgeDirKey", "day")
-      .load(root)
-      .groupBy().count()
-    def run(df: org.apache.spark.sql.DataFrame, qname: String): Long = {
-      val q = df.writeStream.format("memory").queryName(qname)
-        .outputMode("complete").option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val n = spark.table(qname).collect().head.getLong(0)
-      spark.catalog.dropTempView(qname)
-      n
-    }
-    val perFile = Sessionizer.sessionize(KdcParseQueries.host1Log.linesIterator).size
-    // first run: hostA's three days only (scope), no horizon yet
-    assert(run(frame(), "kdc_v2_sh_a") == 3L * perFile,
-      "scope must admit exactly hostA's files")
-    // a new day lands on BOTH hosts; restart with the horizon in force
-    for (host <- Seq("hostA", "hostB")) {
-      val d = Paths.get(s"$root/host=$host/day=2015-11-23")
-      Files.createDirectories(d)
-      val f = d.resolve("kdc.log").toFile
-      Files.write(f.toPath, KdcParseQueries.host1Log.getBytes("UTF-8"))
-      assert(f.setLastModified(dayMillis("2015-11-23")))
-    }
-    val df2 = frame() // inference walk happens HERE, outside the count
-    val dirs = graft.kdc.v2.KdcFileLayout.dirsListed
-    val before = dirs.get()
-    assert(run(df2, "kdc_v2_sh_b") == 4L * perFile,
-      "restart must admit exactly hostA's new day")
-    val listed = dirs.get() - before
-    // one prepare walk: root + host=hostA + its days 21..23 (horizon
-    // = 22nd 12:00 - 36h -> 21st 00:00 prunes day=20; scope prunes
-    // the whole hostB subtree before listing)
-    assert(listed == 5,
-      s"composed scope+horizon tail listed $listed dirs, want 5")
-  }
-
-  test("orphan deltas cannot inflate the dir-pruning horizon: restart re-walks, loses nothing") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    import graft.kdc.v2.{KdcBatchOffset, KdcMicroBatchStream}
-    val root = "target/scratch/kdc_v2_orphan_horizon"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    val fmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
-    def dayMillis(day: String): Long =
-      java.time.LocalDate.parse(day, fmt).atTime(12, 0)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    def plant(day: String): String = {
-      val d = Paths.get(s"$root/day=$day")
-      Files.createDirectories(d)
-      val f = d.resolve("kdc.log").toFile
-      Files.write(f.toPath, KdcParseQueries.host1Log.getBytes("UTF-8"))
-      assert(f.setLastModified(dayMillis(day)))
-      f.getAbsolutePath
-    }
-    val f20 = plant("2015-11-20")
-    plant("2015-11-21")
-    plant("2015-11-22")
-    // checkpoint: batch 0 (committed by the engine) admitted day=20;
-    // batch 1 is an ORPHAN of a crashed run carrying a FRESH mod time
-    // (day 23) — its horizon (23rd-36h = 22nd 00:00) would dir-prune
-    // day=21 away, and day=21's file is UNSEEN: reusing that listing
-    // loses it silently
-    val cp = s"$root/_cp"
-    val mdir = s"$cp/kdc-file-manifest"
-    new java.io.File(mdir).mkdirs()
-    Files.writeString(Paths.get(s"$mdir/_format"), """{"version":2}""")
-    Files.writeString(Paths.get(s"$mdir/0"),
-      s"""{"file:$f20":${dayMillis("2015-11-20")}}""")
-    Files.writeString(Paths.get(s"$mdir/1"),
-      s"""{"$root/ghost.log":${dayMillis("2015-11-23")}}""")
-    val stream = new KdcMicroBatchStream(root,
-      Map("recursive" -> "true", "maxFileAge" -> "36h",
-        "maxFileAgeDirKey" -> "day"),
-      Seq("day"), graft.kdc.v2.KdcLogTable.schema, Array.empty, cp)
-    stream.prepareForTriggerAvailableNow() // horizon inflated by the orphan here
-    val next = stream.latestOffset(KdcBatchOffset(0L), ReadLimit.allAvailable())
-    assert(next == KdcBatchOffset(1L), s"no admission: $next")
-    val admitted = Files.readString(Paths.get(s"$mdir/1"))
-    assert(admitted.contains("day=2015-11-21") && admitted.contains("day=2015-11-22"),
-      s"orphan-inflated horizon lost in-window files; batch 1 admitted: $admitted")
-    assert(!admitted.contains("ghost"), "orphan entry must be overwritten, not replayed")
-  }
-
-  test("manifest _format marker survives compaction and retention restarts") {
-    import java.nio.file.Files
-    val dir = "target/scratch/kdc_v2_marker_compact"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    new java.io.File(dir).mkdirs()
-    def session(u: String): String =
-      s"2015-11-22T10:00:00 AS-REQ $u@X.ORG from IPv4:10.0.0.1 for krbtgt/X.ORG@X.ORG\n" +
-        s"2015-11-22T10:00:00 ENC-TS Pre-authentication succeeded -- $u@X.ORG\n" +
-        "2015-11-22T10:00:00 sending 752 bytes to IPv4:10.0.0.1\n"
-    val base = System.currentTimeMillis() - 60L * 60 * 1000
-    (0 until 12).foreach { i =>
-      val f = new java.io.File(dir, f"log-$i%03d.log")
-      Files.write(f.toPath, session(f"u$i%03d").getBytes("UTF-8"))
-      assert(f.setLastModified(base + i * 120000L))
-    }
-    val cp = s"$dir/_checkpoint"
-    def run(qname: String): Unit = {
-      val q = spark.readStream.format("kdclog")
-        .option("maxFilesPerTrigger", "1")
-        .option("manifestCompactInterval", "5")
-        .option("maxFileAge", "6m")
-        .load(dir)
-        .groupBy().count()
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.catalog.dropTempView(qname)
-    }
-    run("kdc_v2_marker_a")
-    val manifestDir = new java.io.File(s"$cp/sources/0/kdc-file-manifest")
-    // compaction cycles ran (snapshots + clean); the marker must not be
-    // swept with the retired deltas/snapshots
-    assert(manifestDir.listFiles().exists(_.getName.endsWith(".compact")))
-    assert(new java.io.File(manifestDir, "_format").exists(),
-      "_format marker lost across compaction clean()")
-    // and a RESTART over the same checkpoint (marker present, maxFileAge
-    // set) loads fine — the fail-loud path is only for marker-LESS
-    // manifests with entries
-    Files.write(new java.io.File(dir, "log-012.log").toPath,
-      session("u012").getBytes("UTF-8"))
-    new java.io.File(dir, "log-012.log").setLastModified(base + 12 * 120000L)
-    run("kdc_v2_marker_b")
-    assert(new java.io.File(manifestDir, "_format").exists())
   }
 
   test("streaming: file-arrival micro-batches converge to the batch answer") {
