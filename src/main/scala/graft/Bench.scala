@@ -36,9 +36,10 @@ package graft
   *    page cache and were the round-6 signature of a ~2× uniform
   *    inflation on the late-alphabet tail of a contended box.
   *    `System.gc()` drives the ContextCleaner's shuffle/broadcast
-  *    removal; the scratch sweep drops directories whose results are
-  *    already fully materialized through the noop sink (every driver
-  *    row is hermetic — nothing reads another query's scratch).
+  *    removal; the scratch sweep, which `Harness.release` runs after
+  *    every iteration, drops directories whose results are already
+  *    fully materialized through the noop sink (every driver row is
+  *    hermetic — nothing reads another query's scratch).
   *  - Warmup skips the streaming-lifecycle rows (the explicit
   *    [[SparkEntry.streamRows]] allowlist): their cost is micro-batch
   *    engine lifecycle, not JIT, so a warmup pass buys nothing and
@@ -70,21 +71,7 @@ object Bench {
     val selected = SparkEntry.queries.filter { case (k, _) => wanted(k) }
 
     // untimed inter-query housekeeping — see the scaladoc above
-    // sweep only THIS run's scratch (every per-invocation layout embeds
-    // the applicationId): cross-run artifacts (the fixed-name
-    // bucketed_* tables) and any concurrent process's scratch on the
-    // same box must survive
-    val scratchRoot = new java.io.File("target/scratch")
-    val appId = spark.sparkContext.applicationId
-    def reclaim(): Unit = {
-      System.gc()
-      Option(scratchRoot.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.contains(appId))
-        // session-cached layouts (bucketed PageRank) are ALIVE between
-        // queries by design — dropped once at the end of the run
-        .filterNot(f => ops.Graph.liveLayoutDirNames.contains(f.getName))
-        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    }
+    def reclaim(): Unit = System.gc()
 
     val warmDir = "/root/testdata/sf0.001"
     // both lifecycle tiers skip warmup: streaming rows because their
@@ -188,7 +175,6 @@ object Bench {
     val w = new java.io.PrintWriter(outFile)
     try { w.println(full); w.println(summary) } finally w.close()
     ops.Graph.dropCachedLayouts(spark)
-    reclaim()
     spark.stop()
   }
 }

@@ -60,12 +60,16 @@ object Harness {
   }
 
   /** Between-queries release, run once a query's results are fully
-    * materialized: operators persist() derived frames internally, and
-    * the fixpoint loops leave their final round's checkpoint blocks,
-    * which clearCache never touches. */
+    * materialized: operators persist() derived frames internally, the
+    * fixpoint loops leave their final round's checkpoint blocks, which
+    * clearCache never touches, and per-invocation layouts leave their
+    * scratch dirs. The scratch sweep ([[Scratch.sweep]]) runs here, so
+    * Bench, Verify and PlanSnap all get it; it keeps the dirs of live
+    * cached Graph layouts, which `Graph.dropCachedLayouts` drops. */
   def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     org.apache.spark.sql.graftbridge.CheckpointBridge.sweepLocalCheckpoints(spark)
+    Scratch.sweep(spark, ops.Graph.liveLayoutDirNames)
   }
 
   /** Builds one query's frame (phase `construct`) and runs its sink

@@ -318,9 +318,7 @@ object KdcParseQueries {
       asHeader(s"${day}T00:00:00", sentinelUser, "10.0.0.99"),
       preauthOk(s"${day}T00:00:00", sentinelUser),
       sending(s"${day}T00:00:00", "10.0.0.99")).mkString("\n") + "\n"
-    val path = new java.io.File(
-      s"target/scratch/kdc_wm_${spark.sparkContext.applicationId}_" +
-        java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    val path = graft.Scratch.dir(spark, "kdc_wm")
     new java.io.File(path).mkdirs()
     def put(name: String, content: String): Unit =
       java.nio.file.Files.write(
@@ -339,10 +337,13 @@ object KdcParseQueries {
       .agg(count(lit(1)).as("n_auth"))
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("client"), col("n_auth"))
-    graft.streaming.StreamingPipeline.runOneShot(
+    // the drained memory sink is materialized, so the tail dir can go
+    // as soon as runOneShot returns
+    try graft.streaming.StreamingPipeline.runOneShot(
       agg, "kdc_v2_wm_user_auth", "append", Seq("day", "client"))
       .filter(col("client") =!= sentinelUser)
       .orderBy("day", "client")
+    finally graft.Scratch.delete(path)
   }
 
   /** The CLI's TSV formatting (SURVEY C4/S7) through the gate: the

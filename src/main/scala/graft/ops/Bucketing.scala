@@ -16,28 +16,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
-  /** The external table location `target/scratch/<name>`, qualified
-    * against the default filesystem's working directory. `saveAsTable`
-    * resolves a relative `path` option against the warehouse instead,
-    * so the write, the pre-delete or drop, and the scratch sweeps must
-    * all use this one absolute value. */
-  private[ops] def scratchLocation(s: SparkSession, name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"target/scratch/$name")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(p).toString
-  }
-
-  /** Write `df` as a bucketed managed table (sorted within buckets so
-    * sort-merge joins skip the sort too). Idempotent: drops the table
-    * and any orphaned location first (an in-memory catalog forgets
-    * tables across sessions but their directories survive). */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int): Unit = {
-    val s = df.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.sessionState.conf.warehousePath, table.toLowerCase)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+  /** Write `df` bucket-aligned by `key` as the EXTERNAL parquet table
+    * `table` at the scratch location `loc` (sorted within buckets so
+    * sort-merge joins skip the sort too), first dropping any previous
+    * table and location of that name: an in-memory catalog forgets
+    * tables across sessions, but their directories survive. Returns
+    * `table`. */
+  private[ops] def writeLayout(df: DataFrame, key: String, buckets: Int,
+                               table: String, loc: String): String = {
+    dropLayout(df.sparkSession, table, loc)
     df
       // ALIGN the write's partitioning with the bucket spec:
       // repartition(buckets, key) IS the bucket hash (both are
@@ -52,25 +39,16 @@ object Bucketing {
       .mode(SaveMode.Overwrite)
       .bucketBy(buckets, key)
       .sortBy(key)
+      .option("path", loc)
       .format("parquet")
       .saveAsTable(table)
+    table
   }
 
-  /** Bucket the two standard fact tables by order key. */
-  def bucketFacts(s: SparkSession, dir: String, buckets: Int = 8): Unit = {
-    writeBucketed(graft.Tables(s, dir, "lineitem"), "lineitem_b", "l_orderkey", buckets)
-    writeBucketed(graft.Tables(s, dir, "orders"), "orders_b", "o_orderkey", buckets)
-  }
-
-  /** The Q3-shape revenue join over the bucketed tables — plans with
-    * zero exchanges when both sides share the bucket spec. */
-  def bucketedOrderRevenue(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
-    s.table("lineitem_b")
-      .join(s.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderkey"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-      .orderBy(col("o_orderkey"))
+  /** Drop a [[writeLayout]] table and delete its location. */
+  private[ops] def dropLayout(s: SparkSession, table: String, loc: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $table")
+    graft.Scratch.delete(loc)
   }
 
   /** Driver row: bucket both fact tables (EXTERNAL, under the repo
@@ -93,22 +71,8 @@ object Bucketing {
     import org.apache.spark.sql.functions._
     def write(name: String, key: String): String = {
       val table = s"${name}_bq"
-      val loc = scratchLocation(s, s"bucketed_${table}")
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      graft.Tables(s, dir, name)
-        // bucket-aligned write — see writeBucketed
-        .repartition(8, col(key))
-        .write
-        .mode(SaveMode.Overwrite)
-        .bucketBy(8, key)
-        .sortBy(key)
-        .option("path", loc)
-        .format("parquet")
-        .saveAsTable(table)
-      table
+      writeLayout(graft.Tables(s, dir, name), key, 8, table,
+        graft.Scratch.location(s"bucketed_$table"))
     }
     val li = s.table(write("lineitem", "l_orderkey"))
     val o = s.table(write("orders", "o_orderkey"))

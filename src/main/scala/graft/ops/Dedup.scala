@@ -1367,19 +1367,13 @@ object Dedup {
     } finally posting.unpersist()
   }
 
-  /** Monotonic per-invocation suffix for scratch paths (same
-    * concurrent-run collision rationale as [[Ivf.ivfIndexedQuery]]). */
-  private val ingestScratchSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Driver row: build the posting index from the existing split,
     * answer the incoming split through it — must equal
     * [[ingestDedup]]'s verdicts row for row (same oracle SQL). */
   def ingestDedupIndexedQuery(s: SparkSession, dir: String,
                               splitId: Long = 400L): DataFrame = {
     val all = docs(s, dir)
-    val path = new java.io.File(
-      s"target/scratch/ingest_index_${s.sparkContext.applicationId}_${ingestScratchSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "ingest_index")
     writePostingIndex(s, all.filter(col("doc_id") < splitId), path)
     ingestDedupIndexed(s, path, all.filter(col("doc_id") >= splitId))
   }
@@ -1397,9 +1391,7 @@ object Dedup {
     * their lazy plan — bounded (one row per batch doc; a production
     * loop persists verdicts to a table between epochs anyway). */
   def ingestEpochsQuery(s: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(
-      s"target/scratch/ingest_epochs_${s.sparkContext.applicationId}_${ingestScratchSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "ingest_epochs")
     ingestEpochsOn(s, docs(s, dir), path, split1 = 400L, split2 = 450L)
   }
 
@@ -1410,9 +1402,7 @@ object Dedup {
     * oracle verbatim: batching appends must be invisible in the
     * output. */
   def ingestEpochsBatchedQuery(s: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(
-      s"target/scratch/ingest_epochs_b_${s.sparkContext.applicationId}_${ingestScratchSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "ingest_epochs_b")
     ingestEpochsOn(s, docs(s, dir), path, split1 = 400L, split2 = 450L,
       compactPerAppend = false)
   }
@@ -1546,9 +1536,7 @@ object Dedup {
     * generated multi-epoch oracle with no notion of compaction at
     * all: WHEN the fold runs must be invisible in the verdicts. */
   def ingestEpochsAutoQuery(s: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(
-      s"target/scratch/ingest_epochs_auto_${s.sparkContext.applicationId}_${ingestScratchSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "ingest_epochs_auto")
     ingestEpochsLoopOn(s, docs(s, dir), path, Seq(400L, 425L, 450L, 475L),
       compactPerAppend = false, autoCompactRatio = Some(0.1))
   }
@@ -1586,9 +1574,7 @@ object Dedup {
                            split1: Long = 400L, split2: Long = 450L,
                            threshold: Double = 0.5,
                            maxBucket: Int = 1000): DataFrame = {
-    val scratch = new java.io.File(
-      s"target/scratch/ingest_stream_${s.sparkContext.applicationId}_${ingestScratchSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val scratch = graft.Scratch.dir(s, "ingest_stream")
     ingestDedupStreamingOn(s, docs(s, dir), scratch, split1, split2,
       threshold, maxBucket)
   }
@@ -1606,8 +1592,12 @@ object Dedup {
     val srcDir = s"$scratch/drops"
     try {
       writePostingIndex(s, all.filter(col("doc_id") < split1), idx)
-      writeDropSource(s, all, srcDir,
-        Seq((split1, split2), (split2, Long.MaxValue)))
+      // one file per epoch slice, mtimes strictly ascending: the
+      // mtime-ordered file source replays the drops in epoch order
+      for (((lo, hi), i) <- Seq((split1, split2), (split2, Long.MaxValue)).zipWithIndex)
+        graft.Scratch.writeOneFile(
+          all.filter(col("doc_id") >= lo && col("doc_id") < hi).select(col("doc_id"), col("text")),
+          s"$srcDir/drop$i.parquet", 1700000000000L + i * 60000L)
       val stream = s.readStream
         .schema(StructType(Seq(StructField("doc_id", LongType),
           StructField("text", StringType))))
@@ -1661,36 +1651,7 @@ object Dedup {
       // the bounded result is already driver-local; index, drops, and
       // checkpoint are scratch — reclaim them (long-lived sessions
       // must not grow disk per invocation)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(scratch))
-  }
-
-  /** Write one parquet file per epoch slice of `all` under `path`,
-    * mtimes pinned strictly ascending so the mtime-ordered file
-    * source replays the drops in epoch order (same load-bearing-mtime
-    * contract as the streaming outer-join source; a failed
-    * setLastModified falls back to the throwing NIO call). */
-  private def writeDropSource(s: SparkSession, all: DataFrame, path: String,
-                              splits: Seq[(Long, Long)]): Unit = {
-    new java.io.File(path).mkdirs()
-    for (((lo, hi), i) <- splits.zipWithIndex) {
-      val tmp = s"$path/_drop_tmp$i"
-      all.filter(col("doc_id") >= lo && col("doc_id") < hi)
-        .select(col("doc_id"), col("text"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no drop part file under $tmp"))
-      val drop = new java.io.File(s"$path/drop$i.parquet")
-      java.nio.file.Files.move(part.toPath, drop.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      val target = 1700000000000L + i * 60000L
-      if (!drop.setLastModified(target))
-        java.nio.file.Files.setLastModifiedTime(drop.toPath,
-          java.nio.file.attribute.FileTime.fromMillis(target))
-      if (drop.lastModified() != target)
-        sys.error(s"cannot pin drop mtime: $drop")
-    }
+      graft.Scratch.delete(scratch)
   }
 
   // ----------------------------------------------------------- span dedup

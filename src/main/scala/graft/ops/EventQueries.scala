@@ -207,7 +207,7 @@ object EventQueries {
     try sp.runOneShot(
       sp.sessionTimeoutStats(sp.readEventsThrottled(s, src)).toDF(),
       "session_timeout_stream", "append", Seq("user_id", "first_ms"))
-    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+    finally graft.Scratch.delete(src)
   }
 
   /** Stream-stream interval join through the real micro-batch engine:
@@ -247,7 +247,7 @@ object EventQueries {
       // scaladoc) — here it's a plain batch filter
       .filter(col("purchase_id") >= 0)
       .orderBy(col("purchase_id"), col("click_id"))
-    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+    finally graft.Scratch.delete(src)
   }
 
   /** Streaming at-least-once dedup through the real micro-batch
@@ -266,7 +266,7 @@ object EventQueries {
         graft.streaming.StreamingPipeline.readEventsAll(s, src))
         .select(col("event_id"), col("user_id"), col("event_type")),
       "stream_dedup_delivery", "append", Seq("event_id"))
-    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+    finally graft.Scratch.delete(src)
   }
 
   /** Gap-based sessionization: a new session starts after a >6h idle
@@ -623,8 +623,6 @@ object EventQueries {
             coalesce(col("s2"), lit(0).cast("decimal(20,9)"))).as("sv"))
   }
 
-  private val stateScratchSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Incremental aggregate maintenance — the production rollup shape
     * at 100 TB: historical state is PERSISTED once (parquet keyed by
     * user) and each arriving batch folds in with a state-sized outer
@@ -637,8 +635,7 @@ object EventQueries {
     * hash mismatch. */
   def userStatsIncremental(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)
-    val path = s"target/scratch/user_stats_state_" +
-      s"${s.sparkContext.applicationId}_${stateScratchSeq.incrementAndGet()}"
+    val path = graft.Scratch.dir(s, "user_stats_state")
     userStatsAgg(ev.filter(col("event_id") % 4 =!= 0))
       .write.mode("overwrite").parquet(path)
     val merged = mergeUserStats(s.read.parquet(path),

@@ -350,9 +350,10 @@ object Graph {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Directory names of live cached layouts — Bench's scratch sweep
-    * skips these (they embed the appId like all scratch, but unlike
-    * per-invocation scratch they are ALIVE between queries by design). */
+  /** Directory names of live cached layouts — the scratch sweeps
+    * (`Harness.release`'s and the benchmark's) skip these: their names
+    * hold the appId like all scratch, but unlike per-invocation scratch
+    * they are ALIVE between queries by design. */
   private val liveLayoutDirsRef =
     new java.util.concurrent.atomic.AtomicReference[Set[String]](Set.empty)
   def liveLayoutDirNames: Set[String] = liveLayoutDirsRef.get()
@@ -409,7 +410,7 @@ object Graph {
           e.table
         case None =>
           val (t, loc) = writeLayout(s, edges, nBuckets)
-          liveLayoutDirsRef.updateAndGet(_ + new org.apache.hadoop.fs.Path(loc).getName)
+          liveLayoutDirsRef.updateAndGet(_ + new java.io.File(loc).getName)
           bucket.add(LayoutEntry(new java.lang.ref.WeakReference(newPlan),
             newWitness, t, loc))
           t
@@ -435,8 +436,8 @@ object Graph {
     val m = layoutCache.synchronized(layoutCache.remove(s))
     if (m != null) m.values().asScalaValues.foreach { lst =>
       lst.synchronized(lst.asScalaValues).foreach { e =>
-        dropLayoutTable(s, e.table, e.loc)
-        liveLayoutDirsRef.updateAndGet(_ - new org.apache.hadoop.fs.Path(e.loc).getName)
+        Bucketing.dropLayout(s, e.table, e.loc)
+        liveLayoutDirsRef.updateAndGet(_ - new java.io.File(e.loc).getName)
       }
     }
   }
@@ -450,39 +451,16 @@ object Graph {
     }
   }
 
-  private def dropLayoutTable(s: SparkSession, table: String, loc: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val p0 = new org.apache.hadoop.fs.Path(loc)
-    val fs = p0.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p0)) { fs.delete(p0, true); () }
-  }
-
-  /** Invocation counter suffixing each bucketed-layout scratch table:
-    * the table/location must be unique per invocation (appId + seq) so
-    * concurrent callers sharing a session can never clobber each
-    * other's layout — the appendSeq pattern Similarity's index rows
-    * use. */
-  private val prLayoutSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Write `edges` bucketed+sorted by src into a unique scratch table
-    * (appId + sequence — concurrent callers can never clobber each
-    * other). Returns (table name, location). */
+  /** Write `edges` bucketed+sorted by src into a per-invocation
+    * scratch dir ([[graft.Scratch.dir]]: concurrent callers can never
+    * clobber each other), as a table named after the dir. Returns
+    * (table name, location). */
   private def writeLayout(s: SparkSession, edges: DataFrame,
                           nBuckets: Int): (String, String) = {
-    import org.apache.spark.sql.SaveMode
-    val table = s"pr_edges_bq_${s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")}_${prLayoutSeq.incrementAndGet()}"
-    val loc = Bucketing.scratchLocation(s, s"bucketed_$table")
-    edges.select(col("src"), col("dst"))
-      // bucket-aligned write (Bucketing.writeBucketed's rationale):
-      // repartition(nBuckets, src) IS the bucket hash, so each task
-      // writes exactly its one bucket file — the unaligned write
-      // produced (scan partitions × buckets) splinter files that
-      // every round's bucketed scan then re-listed
-      .repartition(nBuckets, col("src"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(nBuckets, "src").sortBy("src")
-      .option("path", loc).format("parquet").saveAsTable(table)
-    (table, loc)
+    val loc = graft.Scratch.dir(s, "pr_edges_bq")
+    val table = new java.io.File(loc).getName.replaceAll("[^a-zA-Z0-9]", "_")
+    (Bucketing.writeLayout(edges.select(col("src"), col("dst")), "src", nBuckets,
+      table, loc), loc)
   }
 
   /** Derive the persisted degree frame from the bucketed edge scan
@@ -507,7 +485,7 @@ object Graph {
       else s.sessionState.conf.numShufflePartitions
     val (table, loc) = writeLayout(s, edges, nBuckets)
     val e = s.table(table)
-    (e, prDegrees(e), () => dropLayoutTable(s, table, loc))
+    (e, prDegrees(e), () => Bucketing.dropLayout(s, table, loc))
   }
 
   /** One PageRank round over the co-partitioned operands — the frame

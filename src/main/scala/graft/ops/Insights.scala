@@ -81,7 +81,7 @@ object Insights {
       val sink = sp.runOneShot(sp.eventTransitions(stream).toDF(),
         "transitions", "append", Seq("from_type", "to_type"))
       transitionRollup(sink)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+    } finally graft.Scratch.delete(src)
   }
 
   /** Trailing-7-day distinct users per active day — the sliding

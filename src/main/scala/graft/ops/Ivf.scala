@@ -306,25 +306,19 @@ object Ivf {
     ivfTopK(e.filter(col("id") < 5), e.filter(col("id") >= 5), model)
   }
 
-  /** Monotonic per-invocation suffix for scratch paths — see
-    * [[ivfIndexedQuery]]. */
-  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Same protocol through the PERSISTED index: train, write the
     * cid-partitioned parquet index under the repo scratch dir, then
     * answer through [[ivfTopKIndexed]]'s partition-pruned scan — the
     * production layout gets a driver signal, not just a spec. The
-    * scratch path is unique per invocation (applicationId +
-    * invocation counter): a FIXED path let one run's `overwrite`
+    * scratch path is unique per invocation ([[graft.Scratch.dir]]): a
+    * FIXED path let one run's `overwrite`
     * clobber an index another concurrent run's lazy result was still
     * scanning (FileNotFound / corrupt reads). Production callers
     * manage their own index path via [[writeIndex]]/[[ivfTopKIndexed]]. */
   def ivfIndexedQuery(s: SparkSession, dir: String): DataFrame = {
     val e = embFrame(s, dir)
     val model = train(e, k = 16, iters = 3)
-    val path = new java.io.File(
-      s"target/scratch/ivf_index_${s.sparkContext.applicationId}_${scratchSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "ivf_index")
     writeIndex(s, e.filter(col("id") >= 5), model, path)
     val out = ivfTopKIndexed(s, path, e.filter(col("id") < 5))
     // everything below `out` reads the WRITTEN index (the query probes

@@ -119,8 +119,6 @@ object IvfPq {
       s.read.parquet(s"$path/vectors"), k, shortlist)
   }
 
-  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Driver row through the PERSISTED composed layout — train both
     * quantizers, write the index, answer from disk. Shares the inline
     * row's oracle verbatim (ints and doubles round-trip parquet
@@ -132,9 +130,7 @@ object IvfPq {
     val dims = e.agg(min(size(col("v")))).collect()(0).getInt(0)
     val coarse = Ivf.trainOn(sample, k = 16, iters = 3)
     val pq = Pq.trainOn(sample, dims, m = 4, ksub = 16, iters = 2)
-    val path = new java.io.File(
-      s"target/scratch/ivfpq_index_${s.sparkContext.applicationId}_${scratchSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "ivfpq_index")
     writeIndex(s, e.filter(col("id") >= 5), coarse, pq, path)
     val out = ivfPqTopKIndexed(s, path, e.filter(col("id") < 5))
     e.unpersist()

@@ -16,10 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** Monotonic per-invocation suffix for scratch paths (same
-    * concurrent-run collision rationale as [[Ivf.ivfIndexedQuery]]). */
-  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Interleave the low `bits` bits of x (odd positions) and y (even
     * positions) into a single Z-value column. Pure integer bit
     * arithmetic — codegen-friendly and engine-exact. */
@@ -265,12 +261,10 @@ object Layout {
       .withColumn("day", to_date(col("ts")))
     val target = e.agg(date_add(min(col("day")), 14).as("t"))
       .collect()(0).getDate(0)
-    // per-invocation path (applicationId + seq), like every other
-    // scratch layout in the repo: a FIXED path lets one session's
-    // overwrite delete the directory another session's returned lazy
-    // plan is still reading
-    val loc = s"target/scratch/events_by_day_" +
-      s"${s.sparkContext.applicationId}_${scratchSeq.incrementAndGet()}"
+    // per-invocation path, like every other scratch layout in the
+    // repo: a FIXED path lets one session's overwrite delete the
+    // directory another session's returned lazy plan is still reading
+    val loc = graft.Scratch.dir(s, "events_by_day")
     e.write.mode(SaveMode.Overwrite).partitionBy("day").parquet(loc)
     s.read.parquet(loc)
       .filter(col("day") === lit(target))

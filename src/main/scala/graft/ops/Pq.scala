@@ -208,8 +208,6 @@ object Pq {
     PqModel(cbs, cbs.head.head.length)
   }
 
-  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Driver row through the PERSISTED layout: train, write codebooks +
     * codes + vectors, then answer from disk — the code-only bulk scan
     * becomes a real parquet column-pruned read. Shares the in-memory
@@ -217,9 +215,7 @@ object Pq {
   def pqIndexedQuery(s: SparkSession, dir: String): DataFrame = {
     val e = Ivf.embFrame(s, dir)
     val model = train(e)
-    val path = new java.io.File(
-      s"target/scratch/pq_index_${s.sparkContext.applicationId}_${scratchSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "pq_index")
     writeIndex(s, e.filter(col("id") >= 5), model, path)
     val loaded = readModel(s, path)
     val out = pqTopKFrom(e.filter(col("id") < 5),

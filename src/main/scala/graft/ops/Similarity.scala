@@ -781,11 +781,6 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** Monotonic per-invocation suffix for the append-index scratch
-    * path (the concurrent-run collision rationale of
-    * [[Ivf.ivfIndexedQuery]]). */
-  private val appendSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Incremental index maintenance for the seeded-IVF layout — the
     * ANN sibling of the dedup posting-index ingest loop: build the
     * cell-partitioned index over the BASE corpus, APPEND a late batch
@@ -819,9 +814,7 @@ object Similarity {
     // without any cache to leak
     val seeds = frozenSeeds(s, base, kSeeds)
     def assign(c: DataFrame): DataFrame = assignToCells(c, seeds)
-    val path = new java.io.File(
-      s"target/scratch/seeded_ivf_append_${s.sparkContext.applicationId}_" +
-        s"${appendSeq.incrementAndGet()}").getAbsolutePath
+    val path = graft.Scratch.dir(s, "seeded_ivf_append")
     assign(base).write.mode(SaveMode.Overwrite)
       .partitionBy("cell").parquet(path)
     // the append: only the late batch's rows move; existing files of
@@ -880,9 +873,7 @@ object Similarity {
                                dropBound: Long = 450L): DataFrame = {
     import org.apache.spark.sql.SaveMode
     import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
-    val scratch = new java.io.File(
-      s"target/scratch/seeded_ivf_stream_${s.sparkContext.applicationId}_" +
-        s"${appendSeq.incrementAndGet()}").getAbsolutePath
+    val scratch = graft.Scratch.dir(s, "seeded_ivf_stream")
     try {
       val e = emb(s, dir).select(col("vec_id"), col("v"))
       val queries = e.filter(col("vec_id") < nQueries)
@@ -897,9 +888,12 @@ object Similarity {
       // (vec_id, embedding) — conversion to the double-array v happens
       // inside the batch function, the same seam emb() applies
       val srcDir = s"$scratch/drops"
-      writeVectorDropSource(s,
-        Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
-        srcDir, Seq((baseBound, dropBound), (dropBound, Long.MaxValue)))
+      // one file per [lo, hi) slice, mtimes strictly ascending: the
+      // mtime-ordered file source replays the drops in slice order
+      val raw = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      for (((lo, hi), i) <- Seq((baseBound, dropBound), (dropBound, Long.MaxValue)).zipWithIndex)
+        graft.Scratch.writeOneFile(raw.filter(col("vec_id") >= lo && col("vec_id") < hi),
+          s"$srcDir/drop$i.parquet", 1700000000000L + i * 60000L)
       val stream = s.readStream
         .schema(StructType(Seq(StructField("vec_id", LongType),
           StructField("embedding", ArrayType(FloatType)))))
@@ -947,7 +941,7 @@ object Similarity {
     } finally
       // bounded result is driver-local; index, drops, checkpoint are
       // scratch — reclaim (long-lived sessions must not grow disk)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(scratch))
+      graft.Scratch.delete(scratch)
   }
 
   /** The frozen seed geometry: hash-min `kSeeds` rows of `base`,
@@ -978,33 +972,6 @@ object Similarity {
       Window.partitionBy(col("vec_id")).orderBy(desc("csim"), col("cell"))))
     .filter(col("crnk") === 1)
     .select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("cell"))
-
-  /** The vector twin of Dedup's drop-source writer: one parquet file
-    * per [lo, hi) vec_id slice, mtimes pinned strictly ascending so
-    * the mtime-ordered file source replays drops in slice order. */
-  private def writeVectorDropSource(s: SparkSession, all: DataFrame,
-                                    path: String,
-                                    splits: Seq[(Long, Long)]): Unit = {
-    new java.io.File(path).mkdirs()
-    for (((lo, hi), i) <- splits.zipWithIndex) {
-      val tmp = s"$path/_drop_tmp$i"
-      all.filter(col("vec_id") >= lo && col("vec_id") < hi)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no drop part file under $tmp"))
-      val drop = new java.io.File(s"$path/drop$i.parquet")
-      java.nio.file.Files.move(part.toPath, drop.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      val target = 1700000000000L + i * 60000L
-      if (!drop.setLastModified(target))
-        java.nio.file.Files.setLastModifiedTime(drop.toPath,
-          java.nio.file.attribute.FileTime.fromMillis(target))
-      if (drop.lastModified() != target)
-        sys.error(s"cannot pin drop mtime: $drop")
-    }
-  }
 
   /** [[vectorNorms]] expressed ENTIRELY through the SQL entry path —
     * temp view + `spark.sql` text calling the registered native

@@ -360,13 +360,10 @@ object StreamingPipeline {
     * reads it as the FINAL micro-batch: processing it advances both
     * sides' watermarks past every real purchase's join window, which
     * is what lets the outer join flush its unmatched rows before the
-    * drain. Scratch path is per-invocation (same collision rationale
-    * as the state/index scratch paths). */
+    * drain. Scratch path is per-invocation ([[graft.Scratch.dir]]). */
   private[graft] def writeOuterSource(s: SparkSession, dir: String,
                                       hours: Seq[Int] = Seq(3, 6)): String = {
-    val path = new java.io.File(
-      s"target/scratch/outer_src_${s.sparkContext.applicationId}_${oneShotSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "outer_src")
     new java.io.File(path).mkdirs()
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
@@ -390,30 +387,17 @@ object StreamingPipeline {
         case LongType => (unix_micros(sentTsN) * 1000L).cast(LongType)
         case t        => sentTsN.cast(t)
       }
-      val tmp = s"$path/_sentinel_tmp$n"
-      Seq((ids._1, "purchase"), (ids._2, "click")).toDF("event_id", "event_type")
-        .select(col("event_id"), tsColN.as("ts"), lit(-1L).as("user_id"),
-          col("event_type"), lit(null).cast("double").as("value"),
-          lit(null).cast("string").as("props"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no sentinel part file under $tmp"))
-      val sentinel = new java.io.File(s"$path/zz_sentinel$n.parquet")
-      java.nio.file.Files.move(part.toPath, sentinel.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
       // the mtime ORDER is load-bearing (the file source batches in
       // mtime order; a sentinel batched with real data would drain the
       // outer join against a stale watermark and silently drop the
-      // last hour's unmatched rows) — so a failed setLastModified must
-      // fail LOUDLY, via the throwing NIO variant, not return false
-      val target = new java.io.File(s"$path/events.parquet").lastModified() + n * 60000L
-      if (!sentinel.setLastModified(target))
-        java.nio.file.Files.setLastModifiedTime(sentinel.toPath,
-          java.nio.file.attribute.FileTime.fromMillis(target))
-      if (sentinel.lastModified() != target)
-        sys.error(s"cannot pin sentinel mtime after events file: $sentinel")
+      // last hour's unmatched rows) — so the pin must fail LOUDLY
+      graft.Scratch.writeOneFile(
+        Seq((ids._1, "purchase"), (ids._2, "click")).toDF("event_id", "event_type")
+          .select(col("event_id"), tsColN.as("ts"), lit(-1L).as("user_id"),
+            col("event_type"), lit(null).cast("double").as("value"),
+            lit(null).cast("string").as("props")),
+        s"$path/zz_sentinel$n.parquet",
+        new java.io.File(s"$path/events.parquet").lastModified() + n * 60000L)
     }
     hours.zipWithIndex.foreach { case (h, i) =>
       writeSentinel(i + 1, (-(2L * i + 1), -(2L * i + 2)), h)
@@ -520,9 +504,7 @@ object StreamingPipeline {
     * produces, which [[dedupedEvents]] must collapse back to exactly
     * the original event set. */
   private[graft] def writeDoubledSource(s: SparkSession, dir: String): String = {
-    val path = new java.io.File(
-      s"target/scratch/doubled_src_${s.sparkContext.applicationId}_${oneShotSeq.incrementAndGet()}"
-    ).getAbsolutePath
+    val path = graft.Scratch.dir(s, "doubled_src")
     new java.io.File(path).mkdirs()
     for (name <- Seq("events.parquet", "events_redelivery.parquet"))
       java.nio.file.Files.copy(
@@ -542,10 +524,7 @@ object StreamingPipeline {
     * prep, not part of the measured operator. */
   private[graft] def writeTimeSplitSource(s: SparkSession, dir: String,
                                           parts: Int = 4): String = {
-    val path = new java.io.File(
-      s"target/scratch/timesplit_src_${s.sparkContext.applicationId}_${oneShotSeq.incrementAndGet()}"
-    ).getAbsolutePath
-    new java.io.File(path).mkdirs()
+    val path = graft.Scratch.dir(s, "timesplit_src")
     val raw = s.read.parquet(s"$dir/events.parquet")
     val n = raw.count()
     val w = org.apache.spark.sql.expressions.Window
@@ -555,20 +534,9 @@ object StreamingPipeline {
     (0 until parts).foreach { i =>
       val lo = i * n / parts
       val hi = (i + 1) * n / parts
-      val tmp = s"$path/_tmp$i"
-      ranked.filter(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file under $tmp"))
-      val dst = new java.io.File(f"$path/ev_$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      java.nio.file.Files.setLastModifiedTime(dst.toPath,
-        java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-      if (dst.lastModified() != base + i * 60000L)
-        sys.error(s"cannot pin mtime on $dst")
+      graft.Scratch.writeOneFile(
+        ranked.filter(col("__rn") > lo && col("__rn") <= hi).drop("__rn"),
+        f"$path/ev_$i%02d.parquet", base + i * 60000L)
     }
     path
   }

@@ -129,6 +129,29 @@ class HarnessSpec extends AnyFunSuite {
       Seq("KdcQueries.scala"))
   }
 
+  test("src/main names, pins and deletes scratch only in Scratch") {
+    // the scratch root literal, the mtime pin, the recursive delete,
+    // and a counter or UUID next to the applicationId in a dir name
+    for (re <- Seq("\"target/scratch", "setLastModified", "FileUtils\\.deleteDirectory",
+        """(?s)\.applicationId\b.{0,120}?(?:incrementAndGet|getAndIncrement|randomUUID)\(""")) {
+      val sites = sitesOf(re).distinct
+      assert(sites == Seq("Scratch.scala"), s"$re in ${sites.mkString(", ")}")
+    }
+  }
+
+  test("Harness.release removes the scratch dirs a finished query left") {
+    val root = new java.io.File("target/scratch")
+    def dirs(): Set[String] = Option(root.listFiles()).toSeq.flatten.map(_.getName).toSet
+    val before = dirs()
+    SparkEntry.queries("dedup_ingest_indexed")(spark, "/root/testdata/sf0.001")
+      .write.format("noop").mode("overwrite").save()
+    val made = dirs() -- before
+    assert(made.nonEmpty, "the query left no scratch dir, so release has nothing to show")
+    Harness.release(spark)
+    val left = dirs() intersect made
+    assert(left.isEmpty, s"scratch dirs left after release: ${left.mkString(", ")}")
+  }
+
   test("the kdclog table reads exactly the reader options its callers set") {
     val keys = matchesOf(
       """\b(?:options|opts|properties)\.(?:get|contains)\(\s*"([^"]+)"""",

@@ -449,12 +449,11 @@ class GraphSpec extends AnyFunSuite {
     assert(crossings == 0L, "a label propagated across a component boundary")
   }
 
-  /** `bucketed_pr_edges_bq_<appId>_*` dirs under the cwd scratch root
-    * and under the warehouse's `target/scratch` (where a relative
-    * `saveAsTable` path lands). */
+  /** `pr_edges_bq_<appId>_*` dirs (`graft.Scratch.dir`) under the cwd
+    * scratch root and under the warehouse's `target/scratch` (where a
+    * relative `saveAsTable` path would land). */
   private def layoutDirs(): Set[java.io.File] = {
-    val prefix = "bucketed_pr_edges_bq_" +
-      spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_") + "_"
+    val prefix = s"pr_edges_bq_${spark.sparkContext.applicationId}_"
     val warehouse = new java.io.File(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
     Seq(new java.io.File("target/scratch"), new java.io.File(warehouse, "target/scratch"))
@@ -479,9 +478,12 @@ class GraphSpec extends AnyFunSuite {
       iterations = 2).collect()
     val landed = layoutDirs() -- before
     assert(landed.size == 1, s"expected one new layout dir, got $landed")
-    // it lands in the cwd scratch root, where the sweeps skip it by name
+    // it lands in the cwd scratch root under a name holding the appId,
+    // so only the live-layout skip keeps the between-queries sweep off it
     assert(landed.head.getParentFile == new java.io.File("target/scratch").getAbsoluteFile)
     assert(Graph.liveLayoutDirNames.contains(landed.head.getName))
+    graft.Harness.release(spark)
+    assert(landed.head.isDirectory, "Harness.release swept a live cached layout")
     Graph.dropCachedLayouts(spark)
     val left = layoutDirs() -- before
     assert(left.isEmpty, s"layout dirs left after the drop: ${left.mkString(", ")}")
